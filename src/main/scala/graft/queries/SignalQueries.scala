@@ -1396,7 +1396,8 @@ object SignalQueries {
         (col("est_count") > col("true_count")).as("overestimated")
       )
       .orderBy("term")
-    graft.core.CacheOps.drainSmall(out, relExact)
+    // output grows with the vocabulary: the size-gated drain
+    graft.core.CacheOps.drain(out, relExact)
   }
   val q82Sql: String =
     s"""WITH t AS (SELECT unnest(regexp_extract_all(lower(text), '$TokenRe')) AS term FROM documents),

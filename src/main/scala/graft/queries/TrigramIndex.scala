@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.BucketedParquet
+
 /** Persisted trigram full-text index — the production shape q44's scaladoc
   * promises (the reference builds an FTS5 trigram index it never reads,
   * pkg/store/schema.sql:12-25; q44 gave it a read path, but rebuilt the
@@ -20,10 +22,9 @@ import org.apache.spark.sql.functions._
   * build amortizes over every search (an Iceberg `bucket(B, g)` transform
   * plays the same role on a real cluster).
   *
-  * Bucket metadata survives the JVM exactly like BucketedTableIO: the
-  * schema is fixed (g string, doc_id bigint), so re-registration needs only
-  * the bucket count, stored beside the parquet in
-  * `_trigram_index.properties`.
+  * The postings are a [[graft.core.BucketedParquet]] table, so bucket
+  * metadata survives the JVM; its spec file also records the corpus
+  * fingerprint and is the index's visibility marker.
   */
 object TrigramIndex {
 
@@ -32,22 +33,12 @@ object TrigramIndex {
     */
   val MaxPositions = 2000
 
-  private def digest(s: String): String =
-    java.security.MessageDigest
-      .getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
-      .map("%02x".format(_))
-      .mkString
-      .take(16)
-
-  private def tableName(path: String): String = s"graft_tri_${digest(path)}"
-
   /** Deterministic per-corpus index location (tmpdir, keyed by the corpus
     * dir digest AND the os user) — lets q48 build once and probe on every
     * later call/rep. The user scoping keeps multi-user hosts from fighting
     * over one dir (B cannot delete A's stale index, and must not silently
-    * serve it). Single WRITER per path is assumed (build() clears the dir
-    * before CTAS): concurrent builders of the same corpus need an external
+    * serve it). Single WRITER per path is assumed (build() overwrites the
+    * dir): concurrent builders of the same corpus need an external
     * mutex or an explicit per-job `path` — in production this seam is a
     * real catalog with transactional swap, as the Iceberg note in
     * round/TableIO.scala already records.
@@ -55,7 +46,7 @@ object TrigramIndex {
   def defaultPath(sfDir: String): String =
     new java.io.File(
       sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      s"graft_tri_${digest(sfDir + ":" + sys.props.getOrElse("user.name", ""))}"
+      s"graft_tri_${BucketedParquet.digest(sfDir + ":" + sys.props.getOrElse("user.name", ""))}"
     ).getAbsolutePath
 
   /** Distinct (doc_id, g) character-trigram postings of `docs`. */
@@ -72,19 +63,14 @@ object TrigramIndex {
         ).as("g")
       )
 
-  private def propsPath(path: String) = new org.apache.hadoop.fs.Path(s"$path/_trigram_index.properties")
-
-  private def fs(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
-    org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-
   /** Fingerprint of a parquet corpus dir (file count, total bytes, max
-    * mtime — one listStatus, no data read): stored in the index props so a
+    * mtime — one listStatus, no data read): stored in the index spec so a
     * corpus regenerated in place invalidates the index instead of serving
     * postings of the previous corpus.
     */
   def corpusFingerprint(spark: SparkSession, corpusPath: String): String = {
-    val f = fs(spark, corpusPath)
     val p = new org.apache.hadoop.fs.Path(corpusPath)
+    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!f.exists(p)) "absent"
     else {
       val files = f.listStatus(p).filter(_.isFile)
@@ -94,74 +80,25 @@ object TrigramIndex {
   }
 
   /** One-time index pass: write the postings of `docs` at `path`.
-    * `corpusStamp` (a [[corpusFingerprint]]) is recorded beside the bucket
-    * count; [[current]] validates it before serving the index.
+    * `corpusStamp` (a [[corpusFingerprint]]) is recorded in the spec file;
+    * [[current]] validates it before serving the index.
     */
-  def build(spark: SparkSession, docs: DataFrame, path: String, buckets: Int = 32, corpusStamp: String = ""): Unit = {
-    val tbl = tableName(path)
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    // a build that crashed between saveAsTable and the props marker leaves
-    // a non-empty markerless location, and Spark 4 CTAS refuses non-empty
-    // locations — clear the dir first (the props marker is the only
-    // visibility contract, so deleting an unmarked dir never loses a
-    // servable index)
-    val loc = new org.apache.hadoop.fs.Path(path)
-    val f0 = fs(spark, path)
-    if (f0.exists(loc)) f0.delete(loc, true)
-    postingsOf(docs)
-      .write
-      .mode("overwrite")
-      .option("path", path)
-      .bucketBy(buckets, "g")
-      .sortBy("g")
-      .format("parquet")
-      .saveAsTable(tbl)
-    val props = new java.util.Properties()
-    props.setProperty("buckets", buckets.toString)
-    props.setProperty("corpus", corpusStamp)
-    val out = fs(spark, path).create(propsPath(path), true)
-    try props.store(out, "graft trigram index") finally out.close()
-  }
+  def build(spark: SparkSession, docs: DataFrame, path: String, buckets: Int = 32, corpusStamp: String = ""): Unit =
+    BucketedParquet.write(spark, postingsOf(docs), path, "graft_tri", "g", "g", buckets, Map("corpus" -> corpusStamp))
 
-  /** True iff a built index exists at `path` (props marker present). */
-  def exists(spark: SparkSession, path: String): Boolean = fs(spark, path).exists(propsPath(path))
+  /** True iff a built index exists at `path` (spec file present). */
+  def exists(spark: SparkSession, path: String): Boolean = BucketedParquet.readSpec(spark, path).nonEmpty
 
   /** True iff a built index exists at `path` AND was built from a corpus
     * with this fingerprint — callers rebuild on mismatch instead of
     * serving a stale index for a corpus regenerated in place.
     */
-  def current(spark: SparkSession, path: String, corpusStamp: String): Boolean = {
-    if (!exists(spark, path)) return false
-    val props = new java.util.Properties()
-    val in = fs(spark, path).open(propsPath(path))
-    try props.load(in) finally in.close()
-    props.getProperty("corpus", "") == corpusStamp
-  }
+  def current(spark: SparkSession, path: String, corpusStamp: String): Boolean =
+    BucketedParquet.readSpec(spark, path).exists(_.getProperty("corpus", "") == corpusStamp)
 
-  /** The postings table, re-registered in a fresh catalog from the on-disk
-    * marker (bucket count validated; LOCATION quote-escaped — same
-    * discipline as BucketedTableIO.reRegister).
-    */
-  def postings(spark: SparkSession, path: String): DataFrame = {
-    val tbl = tableName(path)
-    if (!spark.catalog.tableExists(tbl)) {
-      val props = new java.util.Properties()
-      val in = fs(spark, path).open(propsPath(path))
-      try props.load(in) finally in.close()
-      val nBuckets = props.getProperty("buckets").toInt
-      require(nBuckets > 0 && nBuckets <= (1 << 20), s"implausible bucket count $nBuckets at $path")
-      val location = path.replace("'", "''")
-      spark.sql(
-        s"""CREATE TABLE $tbl (doc_id BIGINT, g STRING)
-           |USING parquet
-           |CLUSTERED BY (g)
-           |SORTED BY (g)
-           |INTO $nBuckets BUCKETS
-           |LOCATION '$location'""".stripMargin
-      )
-    }
-    spark.table(tbl)
-  }
+  /** The postings table, re-registered in a fresh catalog from the spec. */
+  def postings(spark: SparkSession, path: String): DataFrame =
+    BucketedParquet.read(spark, path, "graft_tri", "g", "g")
 
   /** Probe: rank docs by how many of the query's trigrams they contain
     * (q44's scoring, off the index instead of a corpus scan). Output

@@ -2,6 +2,8 @@ package graft.round
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.core.BucketedParquet
+
 /** Snapshot-table IO behind a thin trait (SURVEY.md §7.1).
   *
   * The sandbox has no Iceberg runtime jar, so the shipped implementation is
@@ -59,28 +61,14 @@ class ParquetTableIO(spark: SparkSession, val root: String) extends TableIO {
 /** Host-hash-bucketed state tables (SURVEY.md §4 items 1/3): the big state
   * tables are written CLUSTERED into `buckets` files by their join key —
   * frontier tables by url, edges by src, walks by their start node, nodes
-  * by url, visits by node — via Spark's bucketed-table support
-  * (`bucketBy().sortBy().saveAsTable` with an explicit external path). A
-  * cold read through the session catalog then reports HashPartitioning, so
-  * the seen-anti-join (enqueued ⋈ fetched on url), the link-resolution join
-  * (links ⋈ nodes on url), and walk-store aggregations by start run WITHOUT
-  * an exchange on the bucketed key (asserted by BucketedIOSpec).
-  *
-  * Bucket metadata SURVIVES the JVM: each write drops a
-  * `_bucket_spec.properties` beside the parquet (bucket/sort columns,
-  * bucket count, schema DDL), and `read` in a session whose catalog lacks
-  * the table re-registers it with `CREATE TABLE … CLUSTERED BY … LOCATION`
-  * over the existing bucketed files — so a resume in a fresh JVM keeps the
-  * shuffle-free plans instead of silently falling back to a plain parquet
-  * scan (BucketedIOSpec's dropped-catalog case). At production scale the
-  * same role is played by a metastore or Iceberg `bucket(B, key)` partition
-  * transforms with storage-partitioned joins. Delta-log tables and markers
-  * stay plain parquet (they are O(changes) and always broadcast-joined).
-  *
-  * Catalog names are keyed by an md5 digest of the state-root path —
-  * collision-resistant, unlike String.hashCode (two state dirs colliding
-  * there would silently cross-wire reads, and abs(Int.MinValue) is
-  * negative).
+  * by url, visits by node — through [[graft.core.BucketedParquet]]. A cold
+  * read then reports HashPartitioning, so the seen-anti-join (enqueued ⋈
+  * fetched on url), the link-resolution join (links ⋈ nodes on url), and
+  * walk-store aggregations by start run WITHOUT an exchange on the bucketed
+  * key, in a fresh JVM too, where the catalog entry is re-registered from
+  * the spec file beside the parquet (asserted by BucketedIOSpec). Delta-log
+  * tables and markers stay plain parquet (they are O(changes) and always
+  * broadcast-joined).
   */
 class BucketedTableIO(spark: SparkSession, root: String, buckets: Int = 32)
     extends ParquetTableIO(spark, root) {
@@ -102,92 +90,15 @@ class BucketedTableIO(spark: SparkSession, root: String, buckets: Int = 32)
     "extracted" -> (("url", "url"))
   )
 
-  private val rootDigest: String =
-    java.security.MessageDigest
-      .getInstance("MD5")
-      .digest(root.getBytes("UTF-8"))
-      .map("%02x".format(_))
-      .mkString
-      .take(16)
-
-  private def tableName(round: Long, name: String): String =
-    s"graft_${rootDigest}_r${round}_$name"
-
-  private def specPath(round: Long, name: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(s"${roundDir(round)}/$name/_bucket_spec.properties")
-
-  private def writeSpec(round: Long, name: String, bucketCol: String, sortCol: String, schemaDdl: String): Unit = {
-    val props = new java.util.Properties()
-    props.setProperty("bucketCol", bucketCol)
-    props.setProperty("sortCol", sortCol)
-    props.setProperty("buckets", buckets.toString)
-    props.setProperty("schemaDdl", schemaDdl)
-    val out = fs.create(specPath(round, name), true)
-    try props.store(out, "graft bucketed-table spec") finally out.close()
-  }
-
-  /** Re-create the catalog entry from the on-disk spec (fresh-JVM resume).
-    * The CREATE TABLE points at the existing bucketed files; Spark derives
-    * each file's bucket id from its `_NNNNN` name suffix, so the re-created
-    * table plans exactly like the original saveAsTable one.
-    *
-    * The on-disk properties are NOT trusted for SQL interpolation: bucket
-    * and sort columns must match this class's hardcoded spec, the bucket
-    * count must be a sane positive int, and the LOCATION literal is
-    * single-quote-escaped (a crafted `_bucket_spec.properties` or a state
-    * root containing `'` must not be able to break or redirect the
-    * statement).
-    */
-  private def reRegister(round: Long, name: String): Boolean = {
-    val p = specPath(round, name)
-    if (!fs.exists(p)) return false
-    val props = new java.util.Properties()
-    val in = fs.open(p)
-    try props.load(in) finally in.close()
-    val (bucketCol, sortCol) = spec(name)
-    require(
-      props.getProperty("bucketCol") == bucketCol && props.getProperty("sortCol") == sortCol,
-      s"bucket spec for '$name' at $p declares (${props.getProperty("bucketCol")}, ${props.getProperty("sortCol")}); " +
-        s"this engine buckets '$name' by ($bucketCol, $sortCol) — refusing to register a mismatched table"
-    )
-    val nBuckets = props.getProperty("buckets").toInt
-    require(nBuckets > 0 && nBuckets <= (1 << 20), s"implausible bucket count $nBuckets for '$name' at $p")
-    val location = s"${roundDir(round)}/$name".replace("'", "''")
-    // round-trip through StructType: rejects DDL that isn't a plain column
-    // list and re-emits it in canonical quoted form
-    val schemaDdl = org.apache.spark.sql.types.StructType.fromDDL(props.getProperty("schemaDdl")).toDDL
-    val tbl = tableName(round, name)
-    spark.sql(
-      s"""CREATE TABLE $tbl ($schemaDdl)
-         |USING parquet
-         |CLUSTERED BY ($bucketCol)
-         |SORTED BY ($sortCol)
-         |INTO $nBuckets BUCKETS
-         |LOCATION '$location'""".stripMargin
-    )
-    true
-  }
-
   override def write(round: Long, name: String, df: DataFrame): Unit = spec.get(name) match {
     case Some((bucketCol, sortCol)) =>
-      val tbl = tableName(round, name)
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      df.write
-        .mode("overwrite")
-        .option("path", s"${roundDir(round)}/$name")
-        .bucketBy(buckets, bucketCol)
-        .sortBy(sortCol)
-        .format("parquet")
-        .saveAsTable(tbl)
-      writeSpec(round, name, bucketCol, sortCol, df.schema.toDDL)
+      BucketedParquet.write(spark, df, s"${roundDir(round)}/$name", "graft", bucketCol, sortCol, buckets)
     case None => super.write(round, name, df)
   }
 
-  override def read(round: Long, name: String): DataFrame = {
-    if (!spec.contains(name)) return super.read(round, name)
-    val tbl = tableName(round, name)
-    if (spark.catalog.tableExists(tbl)) spark.table(tbl)
-    else if (reRegister(round, name)) spark.table(tbl)
-    else super.read(round, name)
+  override def read(round: Long, name: String): DataFrame = spec.get(name) match {
+    case Some((bucketCol, sortCol)) =>
+      BucketedParquet.read(spark, s"${roundDir(round)}/$name", "graft", bucketCol, sortCol)
+    case None => super.read(round, name)
   }
 }

@@ -49,11 +49,11 @@ import graft.queries.TextQueries
   * cost: O(|postings| / IO-parallelism) per batch, amortized by batching
   * (bigger micro-batches = fewer scans per doc — the T4 backpressure knob
   * is also the dedup cost knob). With a large batch the join shuffles, and
-  * writing the compacted postings bucketed-by-`b` (the TrigramIndex
-  * layout) spares the store side its shuffle; the per-epoch uncompacted
-  * tail stays O(compactEvery × batch) either way. Probing cheaper than a
-  * store scan needs a point-lookup index (a key-value store), which is
-  * outside a pure-Spark pipeline. Doc texts are fetched for verification
+  * compacting the postings as a BucketedParquet table bucketed by `b` (the
+  * TrigramIndex layout) spares the store side its shuffle; the per-epoch
+  * uncompacted tail stays O(compactEvery × batch) either way. Probing
+  * cheaper than a store scan needs a point-lookup index (a key-value
+  * store), which is outside a pure-Spark pipeline. Doc texts are fetched for verification
   * by an O(candidates) id join against the docs store (at production scale
   * a doc_id-bucketed store per TableIO N17 makes that read O(candidates)
   * IO as well).
@@ -106,12 +106,13 @@ object StreamDedup {
       graft.core.CacheOps.checkpointReleasable(TextQueries.bandBuckets(newDocs))
     // prune the store to the batch's band-bucket keys BEFORE anything reads
     // it: the keys are O(2 × batch) driver literals and reach the scan as
-    // InSet(b) — on a BucketedPostingsStore compaction that prunes file
-    // buckets and skips row groups, so a small batch reads a bounded
-    // fraction of an arbitrarily large store (StreamDedupSpec asserts
-    // records-read). Semantics unchanged: rows outside the key set cannot
-    // join on (band, b) anyway, so this is a pure restriction — and both
-    // prior consumers (the cross-probe and the append-cap fill) share it.
+    // InSet(b) — on the postings store's BucketedParquet compaction that
+    // prunes file buckets and skips row groups, so a small batch reads a
+    // bounded fraction of an arbitrarily large store (StreamDedupSpec
+    // asserts records-read). Semantics unchanged: rows outside the key set
+    // cannot join on (band, b) anyway, so this is a pure restriction — and
+    // both prior consumers (the cross-probe and the append-cap fill) share
+    // it.
     // Above the key cap (a huge batch) the filter is skipped: there the
     // batch side stops broadcasting and the shuffled join carries the cost
     // model the scaladoc describes.
@@ -206,12 +207,12 @@ object StreamDedup {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime("0 seconds"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val docsStore = new StreamIngest.ExtractedStore(spark, s"$stateRoot/docs")
-        // postings compact into the bucketed-by-`b` layout (r5 verdict #2):
-        // each batch's cross-probe then prunes the compacted bulk to its
-        // own band-bucket keys instead of scanning the store
-        val postingsStore = new BucketedPostingsStore(spark, s"$stateRoot/postings")
-        val pairsStore = new StreamIngest.ExtractedStore(spark, s"$stateRoot/pairs")
+        val docsStore = new EpochStore(spark, s"$stateRoot/docs")
+        // postings compact into BucketedParquet tables bucketed by `b` (r5
+        // verdict #2): each batch's cross-probe then prunes the compacted
+        // bulk to its own band-bucket keys instead of scanning the store
+        val postingsStore = new EpochStore(spark, s"$stateRoot/postings", bucketCol = Some("b"))
+        val pairsStore = new EpochStore(spark, s"$stateRoot/pairs")
         docsStore.writeIncrement(batchId, batch.select("doc_id", "text"))
         val newDocs = spark.read.schema(docSchema).parquet(s"$stateRoot/docs/batch=$batchId")
         val priorPostings = postingsStore.readAll(excludeBatch = Some(batchId)).map(_.drop("batch"))
@@ -231,5 +232,5 @@ object StreamDedup {
 
   /** All pairs emitted so far (across every epoch), q33-shaped. */
   def emittedPairs(spark: SparkSession, stateRoot: String): Option[DataFrame] =
-    new StreamIngest.ExtractedStore(spark, s"$stateRoot/pairs").readAll().map(_.drop("batch"))
+    new EpochStore(spark, s"$stateRoot/pairs").readAll().map(_.drop("batch"))
 }

@@ -110,107 +110,6 @@ object StreamIngest {
     }
   }
 
-  /** The accumulated extracted table on disk: per-epoch increments
-    * (`batch=<id>`, overwrite = idempotent retry) compacted every
-    * `compactEvery` epochs into one `compact_upto=<id>` dir so neither the
-    * file count nor the driver's cached footprint grows with the stream
-    * (VERDICT r2 "what's wrong #4" — the engine re-read AND re-persisted
-    * the full accumulated table every micro-batch; now nothing O(corpus)
-    * is ever cached, the round driver scans the compacted parquet).
-    *
-    * Crash-safety: a compaction is visible only once its `_compact_<id>`
-    * marker exists (readers use the max marker); batch dirs it covers are
-    * deleted after the marker lands, so a crash anywhere leaves either the
-    * old view (no marker) or the new one (marker + possibly undeleted
-    * covered dirs, which readers ignore). Compaction only ever covers
-    * epochs STRICTLY BEFORE the one being processed, so a retried epoch
-    * can still exclude its own partial output.
-    */
-  final class ExtractedStore(spark: SparkSession, root: String) {
-    private val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root),
-      spark.sparkContext.hadoopConfiguration
-    )
-    private def batchDir(id: Long) = s"$root/batch=$id"
-    private def compactDir(upto: Long) = s"$root/compact_upto=$upto"
-    private def marker(upto: Long) = new org.apache.hadoop.fs.Path(s"$root/_compact_$upto")
-
-    private def listNames(): Seq[String] = {
-      val base = new org.apache.hadoop.fs.Path(root)
-      if (!fs.exists(base)) Seq.empty
-      else fs.listStatus(base).map(_.getPath.getName).toSeq
-    }
-
-    /** Largest upto with a completed compaction marker, or -1. */
-    def lastCompaction(): Long =
-      listNames().collect { case s if s.startsWith("_compact_") => s.substring(9).toLong }
-        .foldLeft(-1L)(math.max)
-
-    def batchIds(): Seq[Long] =
-      listNames().collect { case s if s.startsWith("batch=") => s.substring(6).toLong }.sorted
-
-    /** Write one epoch's increment (idempotent overwrite per epoch). */
-    def writeIncrement(batchId: Long, df: DataFrame): Unit =
-      df.write.mode("overwrite").parquet(batchDir(batchId))
-
-    /** The full extracted table (with a `batch` column); `excludeBatch`
-      * drops a retried epoch's own partial rows.
-      */
-    def readAll(excludeBatch: Option[Long] = None): Option[DataFrame] = {
-      val upto = lastCompaction()
-      val ids = batchIds().filter(i => i > upto && !excludeBatch.contains(i))
-      val parts =
-        (if (upto >= 0) Seq(spark.read.parquet(compactDir(upto))) else Seq.empty) ++
-          ids.map(id => spark.read.parquet(batchDir(id)).withColumn("batch", lit(id)))
-      if (parts.isEmpty) None else Some(parts.reduce(_ unionByName _))
-    }
-
-    /** Garbage-collect compaction debris a crash can leave behind: a
-      * markerless `compact_upto` dir (crashed between writing the dir and
-      * its marker), a superseded compact dir below the current marker
-      * (crashed before the old-dir delete), and superseded markers. Readers
-      * never see any of these (they follow the max marker) — this only
-      * stops disk usage leaking across crashes.
-      */
-    private def gcOrphans(): Unit = {
-      val cur = lastCompaction()
-      listNames().foreach {
-        case s if s.startsWith("compact_upto=") =>
-          val id = s.substring(13).toLong
-          if (id != cur) fs.delete(new org.apache.hadoop.fs.Path(s"$root/$s"), true)
-        case s if s.startsWith("_compact_") =>
-          val id = s.substring(9).toLong
-          if (id < cur) fs.delete(new org.apache.hadoop.fs.Path(s"$root/$s"), false)
-        case s if s.startsWith("batch=") =>
-          // covered by the current compaction but not deleted before a crash
-          val id = s.substring(6).toLong
-          if (id <= cur) fs.delete(new org.apache.hadoop.fs.Path(s"$root/$s"), true)
-        case _ => ()
-      }
-    }
-
-    /** Compact epochs (lastCompaction, upto] into one dir once more than
-      * `minBatches` increments have piled up.
-      */
-    def maybeCompact(upto: Long, minBatches: Int): Unit = {
-      gcOrphans()
-      val prev = lastCompaction()
-      val ids = batchIds().filter(i => i > prev && i <= upto)
-      if (ids.size < minBatches) return
-      val parts =
-        (if (prev >= 0) Seq(spark.read.parquet(compactDir(prev))) else Seq.empty) ++
-          ids.map(id => spark.read.parquet(batchDir(id)).withColumn("batch", lit(id)))
-      parts.reduce(_ unionByName _).write.mode("overwrite").parquet(compactDir(upto))
-      fs.create(marker(upto), true).close()
-      // cleanup strictly after the new marker exists
-      ids.foreach(id => fs.delete(new org.apache.hadoop.fs.Path(batchDir(id)), true))
-      if (prev >= 0) {
-        fs.delete(marker(prev), false)
-        fs.delete(new org.apache.hadoop.fs.Path(compactDir(prev)), true)
-      }
-    }
-  }
-
   /** Crawl mode as a stream: every micro-batch of arriving pages lands in a
     * PER-EPOCH directory (`accumDir/batch=<id>`, mode overwrite — a
     * micro-batch retried after a crash between write and checkpoint commit
@@ -237,7 +136,7 @@ object StreamIngest {
         */
       compactEvery: Int = 8
   ): StreamingQuery = {
-    val store = new ExtractedStore(spark, extractedDir(accumDir))
+    val store = new EpochStore(spark, extractedDir(accumDir))
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime("0 seconds"))

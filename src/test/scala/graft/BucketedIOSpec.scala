@@ -110,6 +110,25 @@ class BucketedIOSpec extends AnyFunSuite {
     }
   }
 
+  test("a bucket spec declaring a different bucket column is refused at registration") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("bucketed-mismatch").toString
+    val io = new BucketedTableIO(spark, dir, buckets = 8)
+    io.write(0L, "fetched", (0 until 100).map(i => s"https://h${i % 7}.example/p$i").toDF("url"))
+    io.commitRound(0L)
+    val table = s"$dir/r=0/fetched"
+    val props = graft.core.BucketedParquet.readSpec(spark, table).get
+    assert(props.getProperty("bucketCol") === "url")
+    props.setProperty("bucketCol", "host")
+    val specFile = new org.apache.hadoop.fs.Path(s"$table/${graft.core.BucketedParquet.SpecFile}")
+    val out = specFile.getFileSystem(spark.sparkContext.hadoopConfiguration).create(specFile, true)
+    try props.store(out, null) finally out.close()
+    spark.catalog.listTables().collect().foreach(t => spark.sql(s"DROP TABLE ${t.name}"))
+
+    val err = intercept[IllegalArgumentException](new BucketedTableIO(spark, dir, buckets = 8).read(0L, "fetched"))
+    assert(err.getMessage.contains("refusing to register a mismatched table"), err.getMessage)
+  }
+
   test("fetch pruning: InSet(url) on the bucketed extracted store reads O(batch) buckets, not the corpus") {
     import spark.implicits._
     val dir = Files.createTempDirectory("bucketed-fetch").toString

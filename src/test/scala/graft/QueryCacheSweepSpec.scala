@@ -20,9 +20,6 @@ class QueryCacheSweepSpec extends AnyFunSuite {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       fn(spark, dir).count()
-      // the ContextCleaner may lag on caches whose owner DataFrame just
-      // went unreachable; an explicit GC pass separates "released
-      // deterministically" from "waiting for the cleaner"
       val leftover = spark.sparkContext.getPersistentRDDs
       assert(
         leftover.isEmpty,

@@ -8,7 +8,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.TextQueries
-import graft.streaming.StreamDedup
+import graft.streaming.{EpochStore, StreamDedup}
 
 /** Pins the incremental (on-ingest) LSH dedup:
   *
@@ -144,16 +144,14 @@ class StreamDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(emit() === emit())
   }
 
-  test("a small batch probes a bounded fraction of a large compacted postings store (r5 verdict #2)") {
-    // 4000 stored docs' postings (8000 rows) across 4 epochs, compacted
-    // into the bucketed-by-`b` layout; then a 3-doc batch probes. The
-    // batch's ≤ 6 band keys push into the scan as InSet(b), so with 64
-    // buckets the probe may touch at most ~6/64 of the store per
-    // evaluation — asserted via task-metrics records-read (the
-    // TrigramIndexSpec / BucketedIOSpec evidence shape).
+  /** 4000 stored docs whose postings (8000 rows) land across 4 epochs and
+    * fold into one compaction bucketed by `b` into `buckets` files; returns
+    * the stored docs and the store root.
+    */
+  private def compactedPostings(buckets: Int): (DataFrame, String) = {
     val storedDocs = docsDF((0L until 4000L).map(i => (i, filler(i + 50000))))
     val root = Files.createTempDirectory("sdedup-postings").toString + "/postings"
-    val store = new graft.streaming.BucketedPostingsStore(spark, root, buckets = 64)
+    val store = new EpochStore(spark, root, bucketCol = Some("b"), buckets = buckets)
     (0 until 4).foreach { k =>
       store.writeIncrement(
         k.toLong,
@@ -163,15 +161,30 @@ class StreamDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     store.maybeCompact(3L, minBatches = 1)
     assert(store.lastCompaction() === 3L, "all four epochs must fold into one bucketed compaction")
     assert(store.batchIds().isEmpty, "increments must be cleaned up after the marker")
-    val prior = store.readAll().map(_.drop("batch"))
+    (storedDocs, root)
+  }
+
+  /** One near-dup of stored doc 123 (its text + one appended token: 38 of
+    * 39 trigrams shared, jaccard ≈ 0.97 — the deterministic md5 minhashes
+    * collide in a band) + two fillers.
+    */
+  private def nearDupBatch: DataFrame =
+    docsDF(Seq((9001L, filler(123L + 50000L) + " extraTok"), (9002L, filler(1)), (9003L, filler(2))))
+
+  private def foundNearDupOf123(emitted: Set[(Long, Long, Double, Boolean)]): Boolean =
+    emitted.exists(p => p._1 === 123L && p._2 === 9001L && p._4)
+
+  test("a small batch probes a bounded fraction of a large compacted postings store (r5 verdict #2)") {
+    // a 3-doc batch probes 8000 compacted postings. The batch's ≤ 6 band
+    // keys push into the scan as InSet(b), so with 64 buckets the probe
+    // may touch at most ~6/64 of the store per evaluation — asserted via
+    // task-metrics records-read (the TrigramIndexSpec / BucketedIOSpec
+    // evidence shape).
+    val (storedDocs, root) = compactedPostings(buckets = 64)
+    val prior = new EpochStore(spark, root, bucketCol = Some("b")).readAll().map(_.drop("batch"))
     val storeRows = prior.get.count()
     assert(storeRows === 8000L, s"2 band postings per stored doc: $storeRows")
-
-    // the batch: one near-dup of stored doc 123 (its text + one appended
-    // token: 38 of 39 trigrams shared, jaccard ≈ 0.97 — the deterministic
-    // md5 minhashes collide in a band) + two fillers
-    val nearOfStored = filler(123L + 50000L) + " extraTok"
-    val batch = docsDF(Seq((9001L, nearOfStored), (9002L, filler(1)), (9003L, filler(2))))
+    val batch = nearDupBatch
 
     @volatile var recordsRead = 0L
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -196,10 +209,7 @@ class StreamDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       settle()
       val got = recordsRead
       // near-dup against the STORED corpus surfaces through the pruned probe
-      assert(
-        emitted.exists(p => p._1 === 123L && p._2 === 9001L && p._4),
-        s"the planted cross-store near-dup must be found: $emitted"
-      )
+      assert(foundNearDupOf123(emitted), s"the planted cross-store near-dup must be found: $emitted")
       // unpruned, the two store evaluations (cross-probe + cap fill) would
       // read ≥ 2 × 8000 postings rows; the bucket-pruned probe stays far
       // under one full scan even with skew headroom
@@ -208,5 +218,27 @@ class StreamDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.conf.set("spark.sql.adaptive.enabled", aqe)
       spark.sparkContext.removeSparkListener(listener)
     }
+  }
+
+  test("postings compacted in 16 buckets still probe correctly through a default store in a fresh catalog") {
+    // the reader is built with the default 32 buckets; the compaction's
+    // spec file, not the reader, must decide the registered bucket count,
+    // or InSet(b) pruning reads the wrong files and misses the near-dup
+    val (storedDocs, root) = compactedPostings(buckets = 16)
+    spark.catalog.listTables().collect().filter(_.name.startsWith("graft_")).foreach { t =>
+      spark.sql(s"DROP TABLE ${t.name}")
+    }
+    val prior = new EpochStore(spark, root, bucketCol = Some("b")).readAll().map(_.drop("batch"))
+    val batch = nearDupBatch
+    val (pairs, _, rel) = StreamDedup.dedupBatch(spark, batch, prior, Some(storedDocs.unionByName(batch)))
+    val emitted = pairSet(pairs)
+    rel()
+    assert(foundNearDupOf123(emitted), s"the planted cross-store near-dup must be found: $emitted")
+    // doc 123 meets the batch in both bands; band 1's key lands in bucket
+    // 11 under 16 and 32 buckets alike, so the pair alone can survive a
+    // wrong bucket count — band 2's (bucket 13 of 16, 29 of 32) cannot
+    val keys = TextQueries.bandBuckets(batch).select("b").distinct().collect().map(_.getString(0))
+    val seen123 = prior.get.filter(col("b").isin(keys.toSeq: _*) && col("doc_id") === 123L).count()
+    assert(seen123 === 2L, s"both band postings of doc 123 must reach the probe: $seen123")
   }
 }

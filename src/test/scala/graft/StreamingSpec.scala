@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
 import graft.core.CrawlParams
 import graft.fixtures.PagesGen
 import graft.round.ParquetTableIO
-import graft.streaming.StreamIngest
+import graft.streaming.{EpochStore, StreamIngest}
 
 /** Streaming semantics T1-T6 (SURVEY.md §2.9) against the deterministic
   * corpus: watermarked dedup, daily tumbling stats, and crawl rounds driven
@@ -135,7 +135,7 @@ class StreamingSpec extends AnyFunSuite {
   test("extracted store: per-epoch increments compact with crash-safe markers, retry exclusion holds") {
     import spark.implicits._
     val root = Files.createTempDirectory("exstore").toString
-    val store = new StreamIngest.ExtractedStore(spark, root)
+    val store = new EpochStore(spark, root)
     (0L until 5L).foreach { id =>
       store.writeIncrement(id, Seq((s"u$id", id)).toDF("url", "v"))
     }
