@@ -105,12 +105,6 @@ object RoundDriver {
     * sit far below this.
     */
   val MaxFetchPrefilterUrls = 100000
-
-  /** GRAFT_FETCH_PREFILTER=0 disables the fetch InSet prefilter (results
-    * identical — the broadcast join alone restricts to the batch; the
-    * prefilter only exists so the scan can prune).
-    */
-  def fetchPrefilterEnabled: Boolean = !sys.env.get("GRAFT_FETCH_PREFILTER").contains("0")
 }
 
 class RoundDriver(
@@ -507,7 +501,7 @@ class RoundDriver(
       spark.createDataset(batchRows.toSeq.map(r => (r.getString(0), r.getLong(1), r.getString(2)))).toDF("url", "id", "status")
     )
     val prefiltered =
-      if (RoundDriver.fetchPrefilterEnabled && batchUrls.size <= RoundDriver.MaxFetchPrefilterUrls)
+      if (batchUrls.size <= RoundDriver.MaxFetchPrefilterUrls)
         extracted.filter($"url".isInCollection(batchUrls))
       else extracted
     val batchExtracted = prefiltered

@@ -20,7 +20,9 @@ import graft.core.{CrawlParams, DeltaRow, WalkRow}
   * delta map), and walks whose event grafts a segment advance that segment
   * ONE hop per iteration with a single equi-join (state.cur == adj.src).
   * Expected iterations ≈ the α-geometric segment length; only live
-  * segments shuffle.
+  * segments shuffle. Once at most [[TailThreshold]] segments are live, the
+  * rest finish through SubgraphWalks.Resolver.drain — the same miss-retry
+  * drain the small-wave repair runs.
   *
   * Every draw is counter-based and keyed identically to
   * WalkAlgebra.repairWalk / generateSegment (the public repResamples /
@@ -32,6 +34,13 @@ import graft.core.{CrawlParams, DeltaRow, WalkRow}
   * (Graft), batch-distributed.
   */
 object IterativeRepair {
+
+  /** Below this many live segments the bulk-synchronous join loop hands the
+    * geometric tail to resolver point-lookups — the long tail of an
+    * α-geometric length distribution would otherwise cost one join PER HOP
+    * for a vanishing walk count.
+    */
+  private val TailThreshold = 2000L
 
   /** One walk's repair state. `segActive=false` ⇒ done (scan exhausted);
     * otherwise the walk awaits one adjacency lookup for `cur`.
@@ -152,19 +161,11 @@ object IterativeRepair {
       deltas: Map[Long, DeltaRow],
       round: Long,
       wave: Int,
-      params: CrawlParams,
-      checkpointEvery: Int = 8,
-      /** Below this many live segments the bulk-synchronous join loop hands
-        * the geometric tail to resolver point-lookups — the long tail of an
-        * α-geometric length distribution would otherwise cost one join PER
-        * HOP for a vanishing walk count.
-        */
-      tailThreshold: Long = 2000L
+      params: CrawlParams
   ): (Dataset[(WalkRow, Array[Long])], Long) = {
     import spark.implicits._
     val bDeltas = spark.sparkContext.broadcast(deltas)
     val (p, r, wv) = (params, round, wave)
-    val caches = mutable.ArrayBuffer.empty[Dataset[_]]
     // prefilter via the broadcast delta map — O(|path|) hash probes per
     // walk (see SubgraphWalks.repairAll for why not arrays_overlap)
     var state: Dataset[RepSt] = walks
@@ -192,10 +193,9 @@ object IterativeRepair {
     // cached WITH hash(src) partitioning so the per-hop equi-join reuses it
     // instead of re-exchanging the full adjacency every hop
     val adjDF = adjacency.toDF("src", "follows").repartition(col("src")).persist()
-    caches += adjDF
     var live = state.filter(_.segActive).count()
     var iter = 0
-    while (live > tailThreshold) {
+    while (live > TailThreshold) {
       doneParts += checkpointTracked(state.filter(!_.segActive))
       val active = state.filter(_.segActive)
       val stepped = active
@@ -206,9 +206,7 @@ object IterativeRepair {
             else adjRow.getAs[scala.collection.Seq[Long]]("follows").toArray
           stepSegment(s, follows, bDeltas.value, r, wv, p)
         }
-      val (next, nextRelease) =
-        if (iter % checkpointEvery == checkpointEvery - 1) graft.core.CacheOps.checkpointReleasable(stepped)
-        else { val n = stepped.persist(); (n, () => { n.unpersist(); () }) }
+      val (next, nextRelease) = IterativeWalker.keepHop(stepped, iter)
       live = next.filter(_.segActive).count()
       stateRelease()
       state = next
@@ -219,36 +217,18 @@ object IterativeRepair {
 
     // geometric-tail drain: the few remaining segments finish against
     // resolver point-lookups (driver memory O(tail × segment length)),
-    // with the same miss-retry determinism as SubgraphWalks
+    // through the same miss-retry drain as SubgraphWalks
     if (live > 0) {
-      var tail: Dataset[RepSt] = checkpointTracked(state.filter(_.segActive))
+      val tail = checkpointTracked(state.filter(_.segActive))
       stateRelease()
       resolver.resolve(tail.map(_.cur).distinct().collect().toIndexedSeq)
-      var drained = false
-      var attempt = 0
-      while (!drained) {
-        val bAdj = spark.sparkContext.broadcast(resolver.snapshot)
-        val out: Dataset[(RepSt, Long)] = tail
-          .map { s0 =>
-            try {
-              val adjF: Long => Array[Long] =
-                n => bAdj.value.getOrElse(n, throw new SubgraphWalks.Unresolved(n))
-              var s = s0
-              while (s.segActive) s = stepSegment(s, adjF(s.cur), bDeltas.value, r, wv, p)
-              (s, -1L)
-            } catch { case u: SubgraphWalks.Unresolved => (s0, u.node) }
-          }
-          .persist()
-        caches += out
-        val misses = out.filter(_._2 >= 0L).map(_._2).distinct().collect()
-        doneParts += checkpointTracked(out.filter(_._2 < 0L).map(_._1))
-        if (misses.isEmpty) drained = true
-        else {
-          attempt += 1
-          resolver.resolve(misses.toIndexedSeq, expandHops = math.min(1 << attempt, 16))
-          tail = out.filter(_._2 >= 0L).map(_._1)
-        }
+      val (tailDone, tailRelease) = resolver.drain(tail) { (adj, s0: RepSt) =>
+        var s = s0
+        while (s.segActive) s = stepSegment(s, adj(s.cur), bDeltas.value, r, wv, p)
+        Seq(s)
       }
+      doneParts += tailDone
+      releases += tailRelease
     } else {
       stateRelease()
     }
@@ -265,7 +245,7 @@ object IterativeRepair {
     // `changed` is a MEMORY_AND_DISK CacheManager cache and just
     // materialized — every drain slice and checkpoint can be released NOW
     // instead of at the JVM GC's leisure
-    caches.foreach(_.unpersist())
+    adjDF.unpersist()
     releases.foreach(_())
     (changed, n)
   }

@@ -1,9 +1,11 @@
 package graft.walks
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{CrawlParams, WalkRow}
+import graft.core.{CacheOps, CrawlParams, WalkRow}
 
 /** Join-based distributed walk generation — the scale path beyond broadcast
   * adjacency (SURVEY.md §7.4 item 3).
@@ -15,7 +17,9 @@ import graft.core.{CrawlParams, WalkRow}
   * iteration with a single equi-join (walk.cur == adj.src), shuffling only
   * live walks. Expected iterations ≈ geometric tail of α (≈ 7 live hops on
   * average, tail drains by ~α^k); lineage is cut with localCheckpoint every
-  * few steps.
+  * few steps. The array walker and the exploded-edge walker differ only in
+  * state row, hop join and hop table; both run the one hop loop,
+  * [[drainHops]].
   *
   * Because every draw is counter-based (WalkAlgebra.genContinues /
   * genNextIndex keyed by walkId/round/wave/step), this produces EXACTLY the
@@ -23,11 +27,28 @@ import graft.core.{CrawlParams, WalkRow}
   */
 object IterativeWalker {
 
-  /** Adjacency/exploded-edge row count below which the hop join broadcasts
-    * the graph side (guide §3.1) — fixture graphs and small crawl rounds
-    * qualify; a production-scale graph never does.
+  /** Edge count up to which the hop join broadcasts the graph side (guide
+    * §3.1) — fixture graphs and small crawl rounds qualify; a
+    * production-scale graph never does. It counts EDGES, not adjacency
+    * rows: a handful of array rows can carry 10^8 edges.
     */
-  private[graft] val BroadcastAdjMaxRows = 65536L
+  private val BroadcastMaxEdges = 65536L
+
+  /** Every CheckpointEvery-th hop state is a local checkpoint (plan depth
+    * stays bounded); the others are plain persists.
+    */
+  private val CheckpointEvery = 8
+
+  /** Hops between two live-count probes (see [[drainHops]]). */
+  private val LiveCheckEvery = 4
+
+  /** What the shared hop drain reads of a walker's state row. */
+  sealed trait Hop {
+    def walkId: Long
+    def start: Long
+    def path: Array[Long]
+    def alive: Boolean
+  }
 
   case class St(
       walkId: Long,
@@ -36,7 +57,7 @@ object IterativeWalker {
       cur: Long,
       step: Long,
       alive: Boolean
-  )
+  ) extends Hop
 
   /** Adjacency table from an edges Dataset: (src, follows sorted asc) —
     * sorted order is part of the walk spec.
@@ -73,70 +94,46 @@ object IterativeWalker {
       .repartition(spark.sparkContext.defaultParallelism, col("walkId"))
   }
 
-  /** Generate `walksPerNode` walks per start node. `starts` carries
-    * (nodeId); walkIds are nodeId*walksPerNode+i as everywhere else.
-    * Convenience form of [[generateReleasable]] that keeps the output cache
-    * alive for the caller (ContextCleaner reclaims it when unreachable).
+  /** One hop's state, kept: a local checkpoint every [[CheckpointEvery]]
+    * hops, a plain persist otherwise. Returns the kept state and its
+    * release handle.
     */
-  def generate(
-      spark: SparkSession,
-      starts: Dataset[Long],
-      adjacency: Dataset[(Long, Array[Long])],
-      round: Long,
-      wave: Int,
-      params: CrawlParams,
-      checkpointEvery: Int = 8
-  ): Dataset[WalkRow] =
-    generateReleasable(spark, starts, adjacency, round, wave, params, checkpointEvery)._1
+  private[walks] def keepHop[S](stepped: Dataset[S], iter: Int): (Dataset[S], () => Unit) =
+    if (iter % CheckpointEvery == CheckpointEvery - 1) CacheOps.checkpointReleasable(stepped)
+    else { val n = stepped.persist(); (n, () => { n.unpersist(); () }) }
 
-  /** [[generate]], returning the materialized walks PLUS the release handle
-    * of their (single) cache — every intermediate drain cache was already
-    * released inside. Long-lived callers (the round loop) release the
-    * output deterministically once it is folded into their own state.
+  /** The hop drain both walkers share: `hop` advances the live rows one
+    * hop against the hop side (`hopTable`, broadcast when it carries at
+    * most [[BroadcastMaxEdges]] edges) until no walk is alive or
+    * `maxSteps` hops ran. `edges` is evaluated once, after the initial
+    * state is materialized. Returns the finished walks, materialized in ONE
+    * checkpoint, plus its release handle; every intermediate cache and
+    * `hopTable` are released inside.
     */
-  def generateReleasable(
+  private def drainHops[S <: Hop](
       spark: SparkSession,
-      starts: Dataset[Long],
-      adjacency: Dataset[(Long, Array[Long])],
-      round: Long,
-      wave: Int,
-      params: CrawlParams,
-      checkpointEvery: Int = 8
-  ): (Dataset[WalkRow], () => Unit) = {
+      init: Dataset[S],
+      hopTable: DataFrame,
+      edges: => Long,
+      maxSteps: Int
+  )(hop: (Dataset[S], DataFrame) => Dataset[S]): (Dataset[WalkRow], () => Unit) = {
     import spark.implicits._
-    val p = params
-    var state: Dataset[St] = initialSegments(spark, starts, p).persist()
+    var state = init.persist()
     var stateRelease: () => Unit = { val s = state; () => { s.unpersist(); () } }
-
     var live = state.filter(_.alive).count()
-    var iter = 0
-    val liveCheckEvery = 4
-    val doneParts = scala.collection.mutable.ArrayBuffer.empty[Dataset[St]]
+    // size-aware join strategy (guide §3.1: broadcast the side that fits):
+    // a broadcast graph side lets the walk side flow with NO exchange, and
+    // the broadcast build is shared across the hops of one probe action
+    // (exchange reuse). Walks are identical either way (join strategy, not
+    // join semantics)
+    val hopSide = if (edges <= BroadcastMaxEdges) broadcast(hopTable) else hopTable
+    val doneParts = mutable.ArrayBuffer.empty[Dataset[S]]
     // release handles for every cache the drain takes — all deferred to the
     // final union (Dataset.unpersist cannot release local checkpoints,
     // CacheOps scaladoc), then released deterministically before returning
-    val releases = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-
-    // the adjacency aggregation (edges → groupByKey → sort) is hop-invariant:
-    // materialize it ONCE for the whole drain instead of re-running the
-    // full-graph shuffle on every hop (IterativeRepair does the same). The
-    // explicit repartition by the join key makes the CACHED partitioning
-    // hash(src), which every per-hop equi-join reuses — without it each hop
-    // re-exchanges the full adjacency (cached rows, but a full shuffle per
-    // hop: the dominant per-hop cost at 10^10 edges)
-    val adjDF = adjacency.toDF("src", "follows").repartition(col("src")).persist()
-    // size-aware join strategy (guide §3.1: broadcast the side that fits):
-    // when the crawled adjacency is small, broadcast it into every hop's
-    // lookup join — the walk side then flows with NO exchange at all and
-    // the broadcast build is shared across the hops of one probe action
-    // (exchange reuse). Above the gate the hash-partitioned cache path is
-    // unchanged — the 10^10-edge regime. Walks are identical either way
-    // (join strategy, not join semantics).
-    val adjRows = adjDF.count()
-    val adjSide = if (adjRows <= BroadcastAdjMaxRows) broadcast(adjDF) else adjDF
-
-    while (live > 0 && iter < params.maxWalkSteps) {
-      val liveDS = state.filter(_.alive)
+    val releases = mutable.ArrayBuffer.empty[() => Unit]
+    var iter = 0
+    while (live > 0 && iter < maxSteps) {
       // settled walks accumulate as LAZY filters over each hop's persisted
       // state — zero extra jobs per hop (the r5 shape eagerly checkpointed
       // each slice: one full job dispatch per hop just to copy settled rows
@@ -146,7 +143,70 @@ object IterativeWalker {
       // as the drain's output, and MEMORY_AND_DISK spills past that.
       doneParts += state.filter(!_.alive)
       releases += stateRelease
-      val stepped = liveDS
+      val (next, nextRelease) = keepHop(hop(state.filter(_.alive), hopSide), iter)
+      state = next
+      stateRelease = nextRelease
+      iter += 1
+      // the live count is only the early-exit probe — every probe is a full
+      // job dispatch, so probing every hop made the drain's cost the JOB
+      // COUNT at fixture scale (r6 profiling: 73 sub-0.25 s jobs on the
+      // 12-hop single-source rank). Probe every LiveCheckEvery hops instead:
+      // un-probed hops chain lazily and the next probe materializes them in
+      // one submission. Walks are identical either way (counter-based draws;
+      // extra hops past global death are empty-join no-ops).
+      if (iter % LiveCheckEvery == 0 || iter >= maxSteps)
+        live = next.filter(_.alive).count()
+    }
+    // every surviving slice is checkpointed or cache-materialized by the
+    // last probe, so the hop table can be released here
+    hopTable.unpersist()
+    doneParts += state
+    val (out, outRelease) = CacheOps.checkpointReleasable(
+      doneParts
+        .reduce(_ union _)
+        // the union carries one slice per drain iteration (tens of slices ×
+        // shuffle partitions each) — coalesce so every downstream job over
+        // the generated walks schedules O(cores) tasks, not O(hops × cores)
+        .coalesce(spark.sparkContext.defaultParallelism)
+        .map(s => WalkRow(s.walkId, s.start, s.path))
+    )
+    // every per-hop slice and superseded state cache is released NOW, not
+    // at JVM GC's leisure
+    releases.foreach(_())
+    stateRelease()
+    (out, outRelease)
+  }
+
+  /** Generate `walksPerNode` walks per start node. `starts` carries
+    * (nodeId); walkIds are nodeId*walksPerNode+i as everywhere else.
+    * Returns the walks materialized in ONE cache plus its release handle —
+    * every intermediate drain cache was already released inside.
+    * Long-lived callers (the round loop) release the output
+    * deterministically once it is folded into their own state.
+    */
+  def generateReleasable(
+      spark: SparkSession,
+      starts: Dataset[Long],
+      adjacency: Dataset[(Long, Array[Long])],
+      round: Long,
+      wave: Int,
+      params: CrawlParams
+  ): (Dataset[WalkRow], () => Unit) = {
+    import spark.implicits._
+    val p = params
+    // the adjacency aggregation (edges → groupByKey → sort) is hop-invariant:
+    // materialize it ONCE for the whole drain instead of re-running the
+    // full-graph shuffle on every hop (IterativeRepair does the same). The
+    // explicit repartition by the join key makes the CACHED partitioning
+    // hash(src), which every per-hop equi-join reuses — without it each hop
+    // re-exchanges the full adjacency (cached rows, but a full shuffle per
+    // hop: the dominant per-hop cost at 10^10 edges)
+    val adjDF = adjacency.toDF("src", "follows").repartition(col("src")).persist()
+    // the gate's edge count materializes the cache in the same single job
+    // a row count would
+    val edges = adjDF.agg(coalesce(sum(size(col("follows"))), lit(0L))).as[Long]
+    drainHops(spark, initialSegments(spark, starts, p), adjDF, edges.collect().head, params.maxWalkSteps) { (liveDS, adjSide) =>
+      liveDS
         .joinWith(adjSide, liveDS("cur") === adjSide("src"), "left_outer")
         .map { case (s, adjRow) =>
           // replicate WalkAlgebra.generateWalk's per-iteration decision tree
@@ -164,43 +224,7 @@ object IterativeWalker {
             }
           }
         }
-      // lineage cut every checkpointEvery hops (plan depth stays bounded);
-      // plain persist otherwise
-      val (next, nextRelease) =
-        if (iter % checkpointEvery == checkpointEvery - 1) graft.core.CacheOps.checkpointReleasable(stepped)
-        else { val n = stepped.persist(); (n, () => { n.unpersist(); () }) }
-      state = next
-      stateRelease = nextRelease
-      iter += 1
-      // the live count is only the early-exit probe — every probe is a full
-      // job dispatch, so probing every hop made the drain's cost the JOB
-      // COUNT at fixture scale (r6 profiling: 73 sub-0.25 s jobs on the
-      // 12-hop single-source rank). Probe every liveCheckEvery hops instead:
-      // un-probed hops chain lazily and the next probe materializes them in
-      // one submission. Walks are identical either way (counter-based draws;
-      // extra hops past global death are empty-join no-ops).
-      if (iter % liveCheckEvery == 0 || iter >= params.maxWalkSteps)
-        live = next.filter(_.alive).count()
     }
-    // every surviving slice is checkpointed or cache-materialized by the
-    // per-iteration count, so the adjacency cache can be released here
-    adjDF.unpersist()
-    doneParts += state
-    val (out, outRelease) = graft.core.CacheOps.checkpointReleasable(
-      doneParts
-        .reduce(_ union _)
-        // the union carries one slice per drain iteration (tens of slices ×
-        // shuffle partitions each) — coalesce so every downstream job over
-        // the generated walks schedules O(cores) tasks, not O(hops × cores)
-        .coalesce(spark.sparkContext.defaultParallelism)
-        .map(s => WalkRow(s.walkId, s.start, s.path))
-    )
-    // the finished walks are materialized in ONE cache (the caller's,
-    // released via the returned handle); every per-hop slice and superseded
-    // state cache is released NOW, not at JVM GC's leisure
-    releases.foreach(_())
-    stateRelease()
-    (out, outRelease)
   }
 
   /** Exploded-edge walk state: carries the CURRENT node's out-degree (so a
@@ -216,13 +240,13 @@ object IterativeWalker {
       step: Long,
       alive: Boolean,
       nextIdx: Int
-  )
+  ) extends Hop
 
   /** Mega-hub-safe walk generation over EXPLODED edges — byte-identical
-    * output to [[generate]] (IterativeWalkerSpec asserts it), different join
-    * shape for a different scale regime.
+    * output to [[generateReleasable]] (IterativeWalkerSpec asserts it),
+    * different join shape for a different scale regime.
     *
-    * [[generate]] joins each live walk against a (src, follows ARRAY) row:
+    * [[generateReleasable]] joins each live walk against a (src, follows ARRAY) row:
     * the right shape when degrees are modest, but at a 10^8-degree mega-hub
     * every walk standing on the hub receives a COPY of the hub's whole
     * follow array through one shuffle key — O(walks_on_hub × degree)
@@ -247,28 +271,13 @@ object IterativeWalker {
     * personalized rank uses THIS path, where the source is a hub by
     * definition.
     */
-  def generateExploded(
-      spark: SparkSession,
-      starts: Dataset[Long],
-      adjacency: Dataset[(Long, Array[Long])],
-      round: Long,
-      wave: Int,
-      params: CrawlParams,
-      checkpointEvery: Int = 8
-  ): Dataset[WalkRow] =
-    generateExplodedReleasable(spark, starts, adjacency, round, wave, params, checkpointEvery)._1
-
-  /** [[generateExploded]] with the output cache's release handle (see
-    * [[generateReleasable]]).
-    */
   def generateExplodedReleasable(
       spark: SparkSession,
       starts: Dataset[Long],
       adjacency: Dataset[(Long, Array[Long])],
       round: Long,
       wave: Int,
-      params: CrawlParams,
-      checkpointEvery: Int = 8
+      params: CrawlParams
   ): (Dataset[WalkRow], () => Unit) = {
     import spark.implicits._
     val p = params
@@ -278,8 +287,8 @@ object IterativeWalker {
     // release it before the drain (edgesIdx is the only table the hops use)
     val adjDF = adjacency.toDF("src", "follows").persist()
     val degrees = adjDF.select(col("src"), size(col("follows")).cast("int").as("deg"))
-    // (src, idx, dst, dstDeg): posexplode of the SAME sorted array generate
-    // walks over, so idx ranks agree even with duplicate edges; dstDeg is
+    // (src, idx, dst, dstDeg): posexplode of the SAME sorted array the array
+    // walker walks over, so idx ranks agree even with duplicate edges; dstDeg is
     // resolved once at build (left_outer: a sink node has no degrees row)
     val edgesIdx = adjDF
       .select(col("src"), posexplode(col("follows")).as(Seq("idx", "dst")))
@@ -291,8 +300,8 @@ object IterativeWalker {
         coalesce(col("dstDeg"), lit(0)).as("dstDeg")
       )
       // hash(src, idx) IS the per-hop join key: the cached partitioning is
-      // reused by every hop's equi-join (same discipline as generate's
-      // hash(src) adjacency cache)
+      // reused by every hop's equi-join (same discipline as the array
+      // walker's hash(src) adjacency cache)
       .repartition(col("src"), col("idx"))
       .persist()
 
@@ -301,7 +310,7 @@ object IterativeWalker {
       .join(degrees.select(col("src").as("node"), col("deg")), Seq("node"), "left_outer")
       .select(col("node"), coalesce(col("deg"), lit(0)).as("deg"))
       .as[(Long, Int)]
-    var state: Dataset[StE] = startDegs
+    val init = startDegs
       .flatMap { case (node, deg) =>
         (0 until p.walksPerNode).iterator.map { i =>
           StE(node * p.walksPerNode + i, node, Array(node), node, deg, 0L, alive = true, nextIdx = -1)
@@ -309,27 +318,13 @@ object IterativeWalker {
       }
       // same single-source fan-out spread as initialSegments
       .repartition(spark.sparkContext.defaultParallelism, col("walkId"))
-      .persist()
-
-    var stateRelease: () => Unit = { val s = state; () => { s.unpersist(); () } }
-    var live = state.filter(_.alive).count() // materializes state (and adjDF)
-    val edgeRows = edgesIdx.count() // materialize from the adjDF cache before dropping it
-    adjDF.unpersist()
-    // size-aware hop-join strategy — see generateReleasable; the exploded
-    // table is one skinny row per edge, so the gate is the same row bound
-    val edgeSide = if (edgeRows <= BroadcastAdjMaxRows) broadcast(edgesIdx) else edgesIdx
-    var iter = 0
-    val liveCheckEvery = 4
-    val doneParts = scala.collection.mutable.ArrayBuffer.empty[Dataset[StE]]
-    val releases = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-
-    while (live > 0 && iter < params.maxWalkSteps) {
-      // lazy settled slice over the persisted state — zero extra jobs per
-      // hop; release deferred to the final union (see generateReleasable)
-      doneParts += state.filter(!_.alive)
-      releases += stateRelease
+    // the initial live count has materialized adjDF: materialize edgesIdx
+    // from that cache before dropping it; the exploded table is one row
+    // per edge, so its row count is the gate's edge count
+    def edges: Long = { val n = edgesIdx.count(); adjDF.unpersist(); n }
+    drainHops(spark, init, edgesIdx, edges, params.maxWalkSteps) { (liveDS, edgeSide) =>
       // decide locally: stop draw and next-edge index need only curDeg
-      val decided = state.filter(_.alive).map { s =>
+      val decided = liveDS.map { s =>
         if (!WalkAlgebra.genContinues(p, s.walkId, round, wave, s.step)) {
           s.copy(step = s.step + 1, alive = false, nextIdx = -1)
         } else if (s.curDeg == 0) {
@@ -341,7 +336,7 @@ object IterativeWalker {
       // rows settled by the decide map carry nextIdx = -1 and match nothing
       // (idx >= 0), passing through the left join untouched; every live row
       // matches EXACTLY ONE edge (nextIdx < curDeg by construction)
-      val stepped = decided
+      decided
         .joinWith(
           edgeSide,
           decided("cur") === edgeSide("src") && decided("nextIdx") === edgeSide("idx"),
@@ -355,26 +350,6 @@ object IterativeWalker {
             else StE(s.walkId, s.start, s.path :+ dst, dst, e.getAs[Int]("dstDeg"), s.step + 1, alive = true, nextIdx = -1)
           }
         }
-      val (next, nextRelease) =
-        if (iter % checkpointEvery == checkpointEvery - 1) graft.core.CacheOps.checkpointReleasable(stepped)
-        else { val n = stepped.persist(); (n, () => { n.unpersist(); () }) }
-      state = next
-      stateRelease = nextRelease
-      iter += 1
-      // batched early-exit probe — see generateReleasable
-      if (iter % liveCheckEvery == 0 || iter >= params.maxWalkSteps)
-        live = next.filter(_.alive).count()
     }
-    edgesIdx.unpersist()
-    doneParts += state
-    val (out, outRelease) = graft.core.CacheOps.checkpointReleasable(
-      doneParts
-        .reduce(_ union _)
-        .coalesce(spark.sparkContext.defaultParallelism)
-        .map(s => WalkRow(s.walkId, s.start, s.path))
-    )
-    releases.foreach(_())
-    stateRelease()
-    (out, outRelease)
   }
 }

@@ -1,8 +1,10 @@
 package graft.walks
 
 import scala.collection.mutable
+import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 
 import graft.core.{CrawlParams, DeltaRow, WalkRow}
@@ -27,6 +29,10 @@ import graft.core.{CrawlParams, DeltaRow, WalkRow}
   * full-adjacency run, which CrawlEquivalenceSpec asserts against the
   * sequential spec.
   *
+  * That miss-retry loop exists once, as [[Resolver.drain]]: repairAll,
+  * generateAll and IterativeRepair's geometric-tail drain each supply only
+  * their per-item body and their own seeding `resolve` call.
+  *
   * Driver memory is O(nodes actually visited this wave); per-attempt the
   * map is broadcast once. Beyond `RoundDriver.broadcastMaxEdges` the
   * promotion path switches to IterativeWalker (join-per-hop, no driver
@@ -41,9 +47,16 @@ object SubgraphWalks {
   /** Control-flow signal: a walk reached a node whose follow list is not in
     * the broadcast map yet. Cheap (no stack trace).
     */
-  final class Unresolved(val node: Long) extends RuntimeException {
+  private final class Unresolved(val node: Long) extends RuntimeException {
     override def fillInStackTrace(): Throwable = this
   }
+
+  /** One item's outcome in one attempt of [[Resolver.drain]]: its outputs,
+    * or (on a miss) the item itself to retry and the node it missed. Not
+    * private: Spark's generated (de)serializers call its accessors, and
+    * they cannot compile against a private class.
+    */
+  case class Attempt[I, O](out: Seq[O], retry: Option[I], miss: Long)
 
   /** Driver-side cache of resolved follow lists, backed by the distributed
     * edges table (`edges` is a thunk so the cache survives in-round edge
@@ -129,10 +142,47 @@ object SubgraphWalks {
         hop += 1
       }
     }
-  }
 
-  case class RepairOut(walkId: Long, start: Long, oldPath: Array[Long], newPath: Array[Long], miss: Long)
-  case class GenOut(walkId: Long, start: Long, path: Array[Long], miss: Long)
+    /** The miss-retry drain of every resolver-backed walk path. `body` runs
+      * on each item against the follow lists resolved so far; an item whose
+      * body reaches an unresolved node is set aside with that node. The
+      * distinct misses are fetched — with exponential hop expansion, so a
+      * long segment resolves in O(log len) retries instead of one per hop —
+      * and ONLY the missed items retry, until none miss. Counter-based draws
+      * make a retried item repeat exactly its earlier draws. Returns the
+      * outputs as lazy slices over the per-attempt caches, plus the release
+      * of those caches: call it once the outputs are materialized.
+      */
+    def drain[I: TypeTag, O: TypeTag](items: Dataset[I])(body: (WalkAlgebra.Adjacency, I) => Seq[O]): (Dataset[O], () => Unit) = {
+      import spark.implicits._
+      val (itemEnc, outEnc) = (ExpressionEncoder[I](), ExpressionEncoder[O]())
+      var todo = items
+      val parts = mutable.ArrayBuffer.empty[Dataset[O]]
+      val caches = mutable.ArrayBuffer.empty[Dataset[_]]
+      var drained = false
+      var attempt = 0
+      while (!drained) {
+        val bAdj = spark.sparkContext.broadcast(snapshot)
+        val out = todo.mapPartitions { it =>
+          val adj: WalkAlgebra.Adjacency = n => bAdj.value.getOrElse(n, throw new Unresolved(n))
+          it.map { item =>
+            try Attempt[I, O](body(adj, item), None, -1L)
+            catch { case u: Unresolved => Attempt[I, O](Nil, Some(item), u.node) }
+          }
+        }.persist()
+        caches += out
+        val misses = out.filter(col("miss") >= 0L).select(col("miss")).distinct().as[Long].collect()
+        parts += out.flatMap(_.out)(outEnc)
+        if (misses.isEmpty) drained = true
+        else {
+          attempt += 1
+          resolve(misses.toIndexedSeq, expandHops = math.min(1 << attempt, 16))
+          todo = out.flatMap(_.retry)(itemEnc)
+        }
+      }
+      (parts.reduce(_ union _), () => caches.foreach(_.unpersist()))
+    }
+  }
 
   /** Repair every walk that visits a delta node, against distributed
     * adjacency. Returns (changed walks with old paths, count), with the
@@ -148,7 +198,6 @@ object SubgraphWalks {
       wave: Int,
       params: CrawlParams
   ): (Dataset[(WalkRow, Array[Long])], Long) = {
-    import spark.implicits._
     val bDeltas = spark.sparkContext.broadcast(deltas)
     // Seed with every delta's graft pools (Added ∪ Kept) + one hop: most
     // segments are short (expected length 1/(1-α)), so most walks repair
@@ -161,51 +210,20 @@ object SubgraphWalks {
     // per walk. (An arrays_overlap against a literal delta-node array
     // rebuilds its hash set PER ROW: O(|walks|·|deltas|), measured 50-130s
     // per wave at a 25k-author batch.)
-    var todo: Dataset[WalkRow] =
-      walks.filter(w => { val m = bDeltas.value; w.path.exists(m.contains) })
-    val changedParts = mutable.ArrayBuffer.empty[Dataset[(WalkRow, Array[Long])]]
-    val caches = mutable.ArrayBuffer.empty[Dataset[_]]
-    var drained = false
-    var attempt = 0
-    while (!drained) {
-      val bAdj = spark.sparkContext.broadcast(resolver.snapshot)
-      val (p, r, wv) = (params, round, wave)
-      val out: Dataset[RepairOut] = todo
-        .mapPartitions { it =>
-          val adjF: WalkAlgebra.Adjacency =
-            n => bAdj.value.getOrElse(n, throw new Unresolved(n))
-          it.map { w =>
-            try {
-              WalkAlgebra.repairWalk(adjF, bDeltas.value, w.walkId, w.path, r, wv, p) match {
-                case Some(np) => RepairOut(w.walkId, w.start, w.path, np, -1L)
-                case None => RepairOut(w.walkId, w.start, w.path, null, -1L)
-              }
-            } catch { case u: Unresolved => RepairOut(w.walkId, w.start, w.path, null, u.node) }
-          }
-        }
-        .persist()
-      caches += out
-      val misses = out.filter(col("miss") >= 0L).select(col("miss")).distinct().as[Long].collect()
-      changedParts += out
-        .filter(col("miss") < 0L && col("newPath").isNotNull)
-        .map(o => (WalkRow(o.walkId, o.start, o.newPath), o.oldPath))
-      if (misses.isEmpty) drained = true
-      else {
-        // exponential hop expansion: a long segment resolves in O(log len)
-        // retries instead of one per hop
-        attempt += 1
-        resolver.resolve(misses.toIndexedSeq, expandHops = math.min(1 << attempt, 16))
-        todo = out.filter(col("miss") >= 0L).map(o => WalkRow(o.walkId, o.start, o.oldPath))
-      }
+    val todo = walks.filter(w => { val m = bDeltas.value; w.path.exists(m.contains) })
+    val (p, r, wv) = (params, round, wave)
+    val (done, release) = resolver.drain(todo) { (adj, w: WalkRow) =>
+      val repaired = WalkAlgebra.repairWalk(adj, bDeltas.value, w.walkId, w.path, r, wv, p)
+      repaired.toList.map(np => (WalkRow(w.walkId, w.start, np), w.path))
     }
-    val changed = changedParts.reduce(_ union _).persist()
+    val changed = done.persist()
     val n = changed.count()
-    caches.foreach(_.unpersist())
+    release()
     (changed, n)
   }
 
   /** Generate walksPerNode walks per start node against distributed
-    * adjacency (same miss-retry scheme; walkIds = node*walksPerNode+i as
+    * adjacency (same miss-retry drain; walkIds = node*walksPerNode+i as
     * everywhere else). For promotion batches small enough that the touched
     * neighborhood fits a broadcast; IterativeWalker is the unbounded path.
     */
@@ -219,39 +237,16 @@ object SubgraphWalks {
   ): Dataset[WalkRow] = {
     import spark.implicits._
     resolver.resolve(startIds)
-    var todo: Dataset[Long] = spark.createDataset(startIds)
-    val doneParts = mutable.ArrayBuffer.empty[Dataset[WalkRow]]
-    val caches = mutable.ArrayBuffer.empty[Dataset[_]]
-    var drained = false
-    var attempt = 0
-    while (!drained) {
-      val bAdj = spark.sparkContext.broadcast(resolver.snapshot)
-      val (p, r, wv) = (params, round, wave)
-      val out: Dataset[GenOut] = todo
-        .flatMap { node =>
-          val adjF: WalkAlgebra.Adjacency =
-            n => bAdj.value.getOrElse(n, throw new Unresolved(n))
-          try {
-            (0 until p.walksPerNode).iterator.map { i =>
-              val wid = node * p.walksPerNode + i
-              GenOut(wid, node, WalkAlgebra.generateWalk(adjF, node, wid, r, wv, p), -1L)
-            }.toVector
-          } catch { case u: Unresolved => Vector(GenOut(-1L, node, null, u.node)) }
-        }
-        .persist()
-      caches += out
-      val misses = out.filter(col("miss") >= 0L).select(col("miss")).distinct().as[Long].collect()
-      doneParts += out.filter(col("miss") < 0L).map(o => WalkRow(o.walkId, o.start, o.path))
-      if (misses.isEmpty) drained = true
-      else {
-        attempt += 1
-        resolver.resolve(misses.toIndexedSeq, expandHops = math.min(1 << attempt, 16))
-        todo = out.filter(col("miss") >= 0L).select(col("start")).as[Long]
+    val (p, r, wv) = (params, round, wave)
+    val (done, release) = resolver.drain(spark.createDataset(startIds)) { (adj, node: Long) =>
+      (0 until p.walksPerNode).map { i =>
+        val wid = node * p.walksPerNode + i
+        WalkRow(wid, node, WalkAlgebra.generateWalk(adj, node, wid, r, wv, p))
       }
     }
-    val res = doneParts.reduce(_ union _).persist()
+    val res = done.persist()
     res.count()
-    caches.foreach(_.unpersist())
+    release()
     res
   }
 }

@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 import graft.core.{CrawlParams, Rng}
 import graft.walks.{IterativeWalker, WalkAlgebra}
@@ -33,22 +37,18 @@ class IterativeWalkerSpec extends AnyFunSuite {
 
     val adjDS = IterativeWalker.adjacencyTable(spark, spark.createDataset(edges))
     val starts = spark.createDataset((0L until n).toSeq)
-    val got = IterativeWalker
-      .generate(spark, starts, adjDS, 3L, 15, p)
-      .collect()
-      .map(w => w.walkId -> w.path.toSeq)
-      .toMap
+    val (walks, release) = IterativeWalker.generateReleasable(spark, starts, adjDS, 3L, 15, p)
+    val got = walks.collect().map(w => w.walkId -> w.path.toSeq).toMap
+    release()
 
     assert(got.size === expected.size)
     assert(got === expected)
 
     // the exploded-edge walker (composite (cur, nextIdx) hop key — the
     // mega-hub path q43 rides) must be byte-identical too
-    val gotExploded = IterativeWalker
-      .generateExploded(spark, starts, adjDS, 3L, 15, p)
-      .collect()
-      .map(w => w.walkId -> w.path.toSeq)
-      .toMap
+    val (explodedWalks, explodedRelease) = IterativeWalker.generateExplodedReleasable(spark, starts, adjDS, 3L, 15, p)
+    val gotExploded = explodedWalks.collect().map(w => w.walkId -> w.path.toSeq).toMap
+    explodedRelease()
     assert(gotExploded === expected)
   }
 
@@ -66,16 +66,59 @@ class IterativeWalkerSpec extends AnyFunSuite {
     }.toMap
 
     val adjDS = IterativeWalker.adjacencyTable(spark, spark.createDataset(edges))
-    val got = IterativeWalker
-      .generateExploded(spark, spark.createDataset(Seq(0L)), adjDS, 0L, 7, p)
-      .collect()
-      .map(w => w.walkId -> w.path.toSeq)
-      .toMap
+    val (walks, release) = IterativeWalker.generateExplodedReleasable(spark, spark.createDataset(Seq(0L)), adjDS, 0L, 7, p)
+    val got = walks.collect().map(w => w.walkId -> w.path.toSeq).toMap
+    release()
     assert(got === expected)
 
     // the walks' first hops must genuinely use many distinct (hub, idx)
     // join keys — the skew-spread claim, checked on the data itself
     val firstHopIdx = expected.values.filter(_.length > 1).map(_.apply(1)).toSet
     assert(firstHopIdx.size > 16, s"2000 draws over 64 spokes must hit many spokes: ${firstHopIdx.size}")
+  }
+
+  test("hop-join broadcast gate counts edges: two source nodes carrying 70k edges are not broadcast") {
+    import spark.implicits._
+    val p = CrawlParams(alpha = 0.85, walksPerNode = 50)
+    // 2 adjacency rows, 70,000 edges: far under a 65,536-ROW gate, far over
+    // a 65,536-EDGE one
+    val edges: Seq[(Long, Long)] = (1L to 40000L).map(d => (0L, d)) ++ (Seq(0L) ++ (40001L until 70000L)).map(d => (1L, d))
+    val adjMap = edges.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toArray.sorted }
+    val adjF: WalkAlgebra.Adjacency = v => adjMap.getOrElse(v, Array.empty)
+    val expected = Seq(0L, 1L).flatMap { node =>
+      (0 until p.walksPerNode).map { i =>
+        val wid = node * p.walksPerNode + i
+        wid -> WalkAlgebra.generateWalk(adjF, node, wid, 3L, 15, p).toSeq
+      }
+    }.toMap
+
+    // every executed plan of the walker run, cached sub-plans included
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    // with automatic broadcasts off, only the walker's forced hint can
+    // broadcast
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.listenerManager.register(listener)
+    try {
+      val adjDS = IterativeWalker.adjacencyTable(spark, spark.createDataset(edges))
+      val (walks, release) = IterativeWalker.generateReleasable(spark, spark.createDataset(Seq(0L, 1L)), adjDS, 3L, 15, p)
+      val got = walks.collect().map(w => w.walkId -> w.path.toSeq).toMap
+      release()
+      assert(got === expected)
+      // listener events arrive in order: once a marker query's plan is in,
+      // every plan of the walker run is too
+      spark.range(1).toDF("walker_gate_marker").collect()
+      eventually(timeout(Span(30, Seconds))) {
+        assert(plans.stream().anyMatch(_.contains("walker_gate_marker")))
+      }
+      plans.forEach(plan => assert(!plan.contains("Broadcast"), s"the hop join must not broadcast 70k edges:\n$plan"))
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    }
   }
 }

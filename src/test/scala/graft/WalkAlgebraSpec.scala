@@ -45,27 +45,6 @@ class WalkAlgebraSpec extends AnyFunSuite {
     assert(WalkAlgebra.divergence(Array.empty[Long], Array.empty[Long]) === -1)
   }
 
-  test("quadratic backoff retry (pool.go:713-719 analog)") {
-    assert(graft.core.Retry.backoffMillis(100, 1) === 100L)
-    assert(graft.core.Retry.backoffMillis(100, 3) === 900L)
-    var calls = 0
-    val got = graft.core.Retry.quadratic(maxAttempts = 3, baseMillis = 1) {
-      calls += 1
-      if (calls < 3) throw new RuntimeException("transient")
-      42
-    }
-    assert(got === 42 && calls === 3)
-    // non-retriable propagates immediately
-    var calls2 = 0
-    intercept[IllegalArgumentException] {
-      graft.core.Retry.quadratic(maxAttempts = 5, baseMillis = 1, retriable = !_.isInstanceOf[IllegalArgumentException]) {
-        calls2 += 1
-        throw new IllegalArgumentException("fatal")
-      }
-    }
-    assert(calls2 === 1)
-  }
-
   test("findCycle table (walks_test.go:139-154)") {
     assert(WalkAlgebra.findCycle(Array(0L, 1, 2, 3, 4, 5)) === -1)
     assert(WalkAlgebra.findCycle(Array(0L, 1, 2, 3, 1, 5)) === 4)

@@ -50,37 +50,43 @@ class WalkerCacheSpec extends AnyFunSuite {
     assert(cachedCount == 0)
   }
 
-  test("a forced-iterative crawl run leaves only the live state caches") {
-    import spark.implicits._
-    clearAll()
-    val cfg = PagesGen.Tiny
-    val params = CrawlParams(
-      seed = 42L,
-      alpha = 0.85,
-      walksPerNode = 10,
-      batch = 20,
-      hostBudget = 5,
-      promotion = 0.1,
-      demotion = 0.05,
-      activation = 0.01,
-      promotionWait = 0L
-    )
-    val v1 = (0L until cfg.pages.toLong).map(pid => PagesGen.pageOf(cfg, pid, 1))
-    val v2 = (0L until cfg.pages.toLong).filter(PagesGen.isRepublished).map(pid => PagesGen.pageOf(cfg, pid, 2))
-    val pagesDF = spark.createDataset(v1 ++ v2).toDF
-    val dir = Files.createTempDirectory("walker-cache-crawl").toString
-    val io = new ParquetTableIO(spark, dir)
-    val extracted = CrawlEngine.extractPages(spark, pagesDF).persist()
-    // force the iterative walker AND iterative repair on every round — the
-    // drains whose per-hop checkpoints used to leak
-    val driver = new RoundDriver(spark, io, params, broadcastMaxEdges = 0L, iterativeRepairMinEntries = 0L)
-    driver.init(PagesGen.seedUrls(cfg, 3))
-    driver.run(extracted, 4)
-    extracted.unpersist()
-    val left = spark.sparkContext.getPersistentRDDs
-    // live state = 7 table checkpoints (nodes, edges, walks, fetched,
-    // enqueued, leaks, visits); allow slack of 2 for in-flight cleaner work
-    assert(left.size <= 9, s"crawl leaked ${left.size} caches: ${left.values.map(_.toString).take(12).mkString("; ")}")
-    clearAll()
+  // the default configuration runs the resolver paths (miss-retry drain);
+  // the forced one runs the iterative walker AND iterative repair on every
+  // round — the drains whose per-hop checkpoints used to leak
+  Seq("default" -> None, "forced-iterative" -> Some(0L)).foreach { case (name, forced) =>
+    test(s"a $name crawl run leaves only the live state caches") {
+      import spark.implicits._
+      clearAll()
+      val cfg = PagesGen.Tiny
+      val params = CrawlParams(
+        seed = 42L,
+        alpha = 0.85,
+        walksPerNode = 10,
+        batch = 20,
+        hostBudget = 5,
+        promotion = 0.1,
+        demotion = 0.05,
+        activation = 0.01,
+        promotionWait = 0L
+      )
+      val v1 = (0L until cfg.pages.toLong).map(pid => PagesGen.pageOf(cfg, pid, 1))
+      val v2 = (0L until cfg.pages.toLong).filter(PagesGen.isRepublished).map(pid => PagesGen.pageOf(cfg, pid, 2))
+      val pagesDF = spark.createDataset(v1 ++ v2).toDF
+      val dir = Files.createTempDirectory("walker-cache-crawl").toString
+      val io = new ParquetTableIO(spark, dir)
+      val extracted = CrawlEngine.extractPages(spark, pagesDF).persist()
+      val driver = forced match {
+        case Some(gate) => new RoundDriver(spark, io, params, broadcastMaxEdges = gate, iterativeRepairMinEntries = gate)
+        case None => new RoundDriver(spark, io, params)
+      }
+      driver.init(PagesGen.seedUrls(cfg, 3))
+      driver.run(extracted, 4)
+      extracted.unpersist()
+      val left = spark.sparkContext.getPersistentRDDs
+      // live state = 7 table checkpoints (nodes, edges, walks, fetched,
+      // enqueued, leaks, visits); allow slack of 2 for in-flight cleaner work
+      assert(left.size <= 9, s"crawl leaked ${left.size} caches: ${left.values.map(_.toString).take(12).mkString("; ")}")
+      clearAll()
+    }
   }
 }
