@@ -30,6 +30,15 @@ object CacheOps {
     (cp, release)
   }
 
+  /** Bytes the blocks of a [[checkpointReleasable]] checkpoint hold, in
+    * memory and on disk; None for a Dataset that is not such a checkpoint.
+    */
+  def checkpointBytes(ds: Dataset[_]): Option[Long] = ds.queryExecution.analyzed match {
+    case l: org.apache.spark.sql.execution.LogicalRDD =>
+      ds.sparkSession.sparkContext.getRDDStorageInfo.find(_.id == l.rdd.id).map(i => i.memSize + i.diskSize)
+    case _ => None
+  }
+
   /** Rows above which [[drain]] refuses to collect and falls back to a
     * distributed result (the q34/q49 gate).
     */

@@ -2,8 +2,9 @@ package graft.round
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 import graft.core._
 import graft.extract.Extract
@@ -17,13 +18,19 @@ import graft.walks.{SubgraphWalks, WalkAlgebra}
   * Scale design:
   *
   *  - State lives IN MEMORY across rounds (persisted / locally-checkpointed
-  *    Datasets); disk sees per-round DELTA logs (changed+added+removed
-  *    walks, edge replacements, node additions/updates, fetched/enqueued
-  *    appends) plus a full compaction every `compactEvery` rounds and at
-  *    run exit — the incremental-snapshot pattern an Iceberg MERGE commit
+  *    Datasets); disk sees ONE `delta` table per round — every change
+  *    (changed+added+removed walks, edge replacements, node
+  *    additions/updates, fetched/enqueued/leak appends, visit-count deltas)
+  *    tagged with its `kind` on one superset schema, written in one
+  *    `io.write`, like the reference sink's one pipelined transaction per
+  *    batch — plus a full compaction every `compactEvery` rounds and at run
+  *    exit — the incremental-snapshot pattern an Iceberg MERGE commit
   *    gives. Every committed round is resumable: loadState() replays the
   *    delta logs on top of the latest compaction (crash path covered by
   *    test via compactOnExit=false).
+  *  - A round's independent Spark actions overlap: the state tables are
+  *    re-checkpointed (and, on resume, loaded) concurrently, and each wave
+  *    resolves its links in one collect.
   *  - NO driver-held graph. The edges table is the only adjacency truth;
   *    per-wave deltas are computed with distributed joins, and walk
   *    repair/generation resolve the (tiny) sub-adjacency they actually
@@ -105,6 +112,73 @@ object RoundDriver {
     * sit far below this.
     */
   val MaxFetchPrefilterUrls = 100000
+
+  /** Bytes per output file the delta log and the compaction size their
+    * partitions for.
+    */
+  private val TargetFileBytes: BigInt = BigInt(128L << 20)
+
+  /** Above this many outlink rows a wave assigns new ids with a
+    * distributed sort instead of one driver collect.
+    */
+  private val MaxDriverLinkRows = 2000000L
+
+  /** ⌈bytes / TargetFileBytes⌉, at least 1. */
+  private def partitionsFor(bytes: BigInt): Int =
+    ((bytes + TargetFileBytes - 1) / TargetFileBytes).max(BigInt(1)).min(BigInt(Int.MaxValue)).toInt
+
+  /** Columns of the per-round `delta` table after its `kind` tag: the
+    * union of every part's columns, with one shared long key `id` (node
+    * id, edge src, walkId, leak id or visit node). A part carries typed
+    * nulls in the columns it lacks.
+    */
+  private val DeltaColumns: Seq[(String, DataType)] = Seq(
+    "id" -> LongType,
+    "url" -> StringType,
+    "host" -> StringType,
+    "status" -> StringType,
+    "addedRound" -> LongType,
+    "promotedRound" -> LongType,
+    "demotedRound" -> LongType,
+    "dst" -> LongType,
+    "start" -> LongType,
+    "path" -> ArrayType(LongType, containsNull = false),
+    "detectedRound" -> LongType,
+    "proofs" -> ArrayType(StringType, containsNull = true),
+    "d" -> LongType
+  )
+
+  /** `df` tagged with `kind` and projected onto the delta schema, its `key`
+    * column becoming `id`.
+    */
+  private def deltaPart(kind: Column, df: DataFrame, key: String = "id"): DataFrame = {
+    val have = df.columns.toSet
+    df.select(kind.as("kind") +: DeltaColumns.map {
+      case ("id", t)                  => if (have(key)) col(key).as("id") else lit(null).cast(t).as("id")
+      case (name, _) if have(name)    => col(name)
+      case (name, t)                  => lit(null).cast(t).as(name)
+    }: _*)
+  }
+
+  /** Eagerly checkpoint `tables` concurrently — they are independent Spark
+    * jobs, and one round's are too small to keep the executors busy one at
+    * a time — returning each checkpoint with its release handle, in order.
+    */
+  private def checkpointAll(tables: Seq[DataFrame]): Seq[(DataFrame, () => Unit)] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(tables.size)
+    try {
+      tables
+        .map { df =>
+          pool.submit(new java.util.concurrent.Callable[(DataFrame, () => Unit)] {
+            def call(): (DataFrame, () => Unit) = CacheOps.checkpointReleasable(df)
+          })
+        }
+        .map { f =>
+          try f.get()
+          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+        }
+    } finally pool.shutdown()
+  }
 }
 
 class RoundDriver(
@@ -151,6 +225,7 @@ class RoundDriver(
 ) {
   import spark.implicits._
   import CrawlEngine._
+  import RoundDriver._
 
   private val GenWave = graft.spec.SequentialSpec.GenWave
 
@@ -289,7 +364,10 @@ class RoundDriver(
 
   /** Load state at `target`: latest full snapshot ≤ target + delta replay
     * (the crash-resume path; a run that exited cleanly compacted at target,
-    * so replay is a no-op there).
+    * so replay is a no-op there). A committed round in the replay range
+    * without a `delta` table — a legacy per-table delta layout — is refused
+    * rather than skipped: skipping it would silently resume from stale
+    * state.
     */
   private def loadState(target: Long): State = {
     checkWalkParams()
@@ -302,54 +380,59 @@ class RoundDriver(
     var leaks = if (io.exists(base, "leaks")) io.read(base, "leaks") else spark.emptyDataset[LeakRecord].toDF
     var visits = io.read(base, "visits")
     ((base + 1) to target).foreach { r =>
-      if (io.exists(r, "nodes_added")) nodes = nodes.union(io.read(r, "nodes_added"))
-      if (io.exists(r, "nodes_updates")) {
-        val u = io
-          .read(r, "nodes_updates")
-          .select($"id".as("uid"), $"status".as("ustatus"), $"promotedRound".as("upr"), $"demotedRound".as("udr"))
-        nodes = nodes
-          .join(u, nodes("id") === $"uid", "left")
-          .select(
-            $"id",
-            $"url",
-            $"host",
-            coalesce($"ustatus", $"status").as("status"),
-            $"addedRound",
-            coalesce($"upr", $"promotedRound").as("promotedRound"),
-            coalesce($"udr", $"demotedRound").as("demotedRound")
-          )
-      }
-      if (io.exists(r, "edges_removed_src")) {
-        val rem = io.read(r, "edges_removed_src").select($"src".as("rsrc"))
-        edges = edges.join(rem, edges("src") === $"rsrc", "left_anti")
-      }
-      if (io.exists(r, "edges_added")) edges = edges.union(io.read(r, "edges_added"))
-      if (io.exists(r, "walks_removed")) {
-        val rem = io.read(r, "walks_removed").select($"walkId".as("rwid"))
-        walks = walks.join(rem, walks("walkId") === $"rwid", "left_anti")
-      }
-      if (io.exists(r, "walks_added")) walks = walks.union(io.read(r, "walks_added"))
-      if (io.exists(r, "fetched_add")) fetched = fetched.union(io.read(r, "fetched_add"))
-      if (io.exists(r, "enqueued_add")) enqueued = enqueued.union(io.read(r, "enqueued_add")).dropDuplicates("url")
-      if (io.exists(r, "leaks_add")) leaks = leaks.union(io.read(r, "leaks_add"))
-      if (io.exists(r, "visits_delta")) visits = applyVisitDeltas(visits, io.read(r, "visits_delta"))
-      // legacy pre-delta-log dirs wrote the FULL visits table every round
-      // (no visits_delta): adopt it verbatim — skipping it would silently
-      // resume with visit counts stale back to the last compaction
-      else if (io.exists(r, "visits")) visits = io.read(r, "visits")
+      if (!io.exists(r, "delta"))
+        throw new IllegalStateException(
+          s"round dir ${io.roundDir(r)} is committed but has no `delta` table (a legacy per-table " +
+            "delta log?); refusing to replay past it"
+        )
+      val delta = io.read(r, "delta")
+      def kind(ks: String*): DataFrame = delta.filter($"kind".isin(ks: _*))
+      nodes = nodes.union(kind("node").select("id", "url", "host", "status", "addedRound", "promotedRound", "demotedRound"))
+      val u = kind("node_update")
+        .select($"id".as("uid"), $"status".as("ustatus"), $"promotedRound".as("upr"), $"demotedRound".as("udr"))
+      nodes = nodes
+        .join(u, nodes("id") === $"uid", "left")
+        .select(
+          $"id",
+          $"url",
+          $"host",
+          coalesce($"ustatus", $"status").as("status"),
+          $"addedRound",
+          coalesce($"upr", $"promotedRound").as("promotedRound"),
+          coalesce($"udr", $"demotedRound").as("demotedRound")
+        )
+      edges = edges
+        .join(kind("edge_src").select($"id".as("rsrc")), edges("src") === $"rsrc", "left_anti")
+        .union(kind("edge").select($"id".as("src"), $"dst"))
+      // a `walk` row is the walk's final version this round, so its id
+      // supersedes the stored row just as a `walk_removed` id does
+      walks = walks
+        .join(kind("walk", "walk_removed").select($"id".as("rwid")), walks("walkId") === $"rwid", "left_anti")
+        .union(kind("walk").select($"id".as("walkId"), $"start", $"path"))
+      fetched = fetched.union(kind("fetched").select($"url"))
+      enqueued = enqueued.union(kind("enqueued").select($"url")).dropDuplicates("url")
+      leaks = leaks.union(kind("leak").select("id", "url", "detectedRound", "status", "proofs"))
+      visits = applyVisitDeltas(visits, kind("visit").select($"id".as("node"), $"d"))
     }
-    val (nodesC, nodesR) = graft.core.CacheOps.checkpointReleasable(nodes)
-    val (edgesC, edgesR) = graft.core.CacheOps.checkpointReleasable(edges)
-    val (walksC, walksR) = graft.core.CacheOps.checkpointReleasable(walks.as[WalkRow])
-    val (fetchedC, fetchedR) = graft.core.CacheOps.checkpointReleasable(fetched)
-    val (enqueuedC, enqueuedR) = graft.core.CacheOps.checkpointReleasable(enqueued)
-    val (leaksC, leaksR) = graft.core.CacheOps.checkpointReleasable(leaks)
-    val (visitsC, visitsR) = graft.core.CacheOps.checkpointReleasable(visits)
-    val nextId = nodesC.agg(max($"id")).as[Option[Long]].first().getOrElse(-1L) + 1
-    val totalWalks = walksC.count()
-    val totalEdges = edgesC.count()
-    val fetchedCount = fetchedC.count()
-    val enqueuedCount = enqueuedC.count()
+    val Seq((nodesC, nodesR), (edgesC, edgesR), (walksDF, walksR), (fetchedC, fetchedR), (enqueuedC, enqueuedR), (leaksC, leaksR), (visitsC, visitsR)) =
+      checkpointAll(Seq(nodes, edges, walks, fetched, enqueued, leaks, visits))
+    val walksC = walksDF.as[WalkRow]
+    // nextId and the four counts in ONE job: per partition, a row count and
+    // max value per tagged table, folded on the driver
+    val perPartition = Seq(nodesC.select($"id"), walksDF.select(lit(0L)), edgesC.select(lit(0L)), fetchedC.select(lit(0L)), enqueuedC.select(lit(0L)))
+      .zipWithIndex
+      .map { case (df, t) => df.toDF("v").select(lit(t).as("t"), $"v") }
+      .reduce(_ union _)
+      .as[(Int, Long)]
+      .mapPartitions { it =>
+        val (n, mx) = (new Array[Long](5), Array.fill(5)(-1L))
+        it.foreach { case (t, v) => n(t) += 1; mx(t) = math.max(mx(t), v) }
+        Iterator((n.toSeq, mx.toSeq))
+      }
+      .collect()
+    val counts = perPartition.map(_._1).foldLeft(Seq.fill(5)(0L))((a, b) => a.zip(b).map { case (x, y) => x + y })
+    val nextId = perPartition.map(_._2.head).foldLeft(-1L)(math.max) + 1
+    val Seq(_, totalWalks, totalEdges, fetchedCount, enqueuedCount) = counts
     // distributed one-pass bloom rebuild over the seen set (resume only;
     // rounds maintain it incrementally from the batch). Below the gate: a
     // driver-resident filter of xxhash64(url) longs (broadcast probe).
@@ -434,16 +517,22 @@ class RoundDriver(
   }
 
   /** Full snapshot of the in-memory state at `round` (the Iceberg
-    * rewrite-compaction analog).
+    * rewrite-compaction analog). Each table is first coalesced to
+    * ⌈checkpoint bytes / 128 MiB⌉ partitions: a bucketed write opens up to
+    * one file per bucket in EVERY input partition, so a small table spread
+    * over many partitions would otherwise land as partitions × buckets
+    * files.
     */
   private def compact(st: State, round: Long): Unit = phase(round, "compact") {
-    io.write(round, "nodes", st.nodes.select("id", "url", "host", "status", "addedRound", "promotedRound", "demotedRound"))
-    io.write(round, "edges", st.edges)
-    io.write(round, "walks", st.walks.toDF)
-    io.write(round, "fetched", st.fetched)
-    io.write(round, "enqueued", st.enqueued)
-    io.write(round, "leaks", st.leaks)
-    io.write(round, "visits", st.visits)
+    def sized(df: DataFrame): DataFrame =
+      CacheOps.checkpointBytes(df).fold(df)(b => df.coalesce(partitionsFor(BigInt(b))))
+    io.write(round, "nodes", sized(st.nodes).select("id", "url", "host", "status", "addedRound", "promotedRound", "demotedRound"))
+    io.write(round, "edges", sized(st.edges))
+    io.write(round, "walks", sized(st.walks.toDF))
+    io.write(round, "fetched", sized(st.fetched))
+    io.write(round, "enqueued", sized(st.enqueued))
+    io.write(round, "leaks", sized(st.leaks))
+    io.write(round, "visits", sized(st.visits))
     io.commitRound(round) // idempotent
   }
 
@@ -454,6 +543,74 @@ class RoundDriver(
       .join(d, Seq("node"), "full_outer")
       .select($"node", (coalesce($"count", lit(0L)) + coalesce($"dsum", lit(0L))).as("count"))
       .filter($"count" > 0)
+  }
+
+  /** A wave's link resolution in ONE collect: each (author, link) row comes
+    * back with the link's id when `nodes` knows it and its url when not.
+    * The driver assigns `base`.. to the sorted unknown urls of ACTIVE
+    * authors and builds every author's sorted new follow list, self-links
+    * dropped; an unknown link of an inactive author resolves only when an
+    * active author adds it in the same wave. Returns (new nodes, their
+    * count, new follow lists by author).
+    */
+  private def resolveLinksOnDriver(
+      waveLinks: DataFrame,
+      nodes: DataFrame,
+      base: Long,
+      round: Long
+  ): (DataFrame, Long, Map[Long, Array[Long]]) = {
+    val rows = waveLinks
+      .filter($"link".isNotNull)
+      .join(nodes.select($"url".as("link"), $"id".as("lid")), Seq("link"), "left")
+      .select($"author", $"status" === NodeStatus.Active, $"lid", when($"lid".isNull, $"link"))
+      .collect()
+    val unknown = rows.collect { case r if r.isNullAt(2) && r.getBoolean(1) => r.getString(3) }.distinct.sorted
+    val newIds = unknown.iterator.zipWithIndex.map { case (u, i) => u -> (base + i) }.toMap
+    val adj = rows.groupBy(_.getLong(0)).map { case (author, rs) =>
+      author -> rs
+        .flatMap(r => if (r.isNullAt(2)) newIds.get(r.getString(3)) else Some(r.getLong(2)))
+        .filter(_ != author)
+        .distinct
+        .sorted
+    }
+    val newNodes = spark.createDataset(unknown.toSeq.zipWithIndex.map { case (u, i) =>
+      NodeRow(base + i, u, Extract.hostOf(u), NodeStatus.Inactive, round, -1L, -1L)
+    })
+    (newNodes.toDF.persist(), unknown.length.toLong, adj)
+  }
+
+  /** [[resolveLinksOnDriver]] for waves too big to collect: the unknown
+    * urls are ranked by a distributed sort + zipWithIndex (the sorted rank
+    * is invariant to partitioning) and only the per-author follow lists
+    * reach the driver.
+    */
+  private def resolveLinksDistributed(
+      waveLinks: DataFrame,
+      nodes: DataFrame,
+      base: Long,
+      round: Long
+  ): (DataFrame, Long, Map[Long, Array[Long]]) = {
+    val unknown = waveLinks
+      .join(nodes.select($"url".as("link"), $"id".as("lid")), Seq("link"), "left")
+      .filter($"status" === NodeStatus.Active && $"lid".isNull && $"link".isNotNull)
+      .select($"link")
+      .distinct()
+      .as[String]
+    val newNodes = spark
+      .createDataset(unknown.rdd.sortBy(identity).zipWithIndex().map { case (u, i) =>
+        NodeRow(base + i, u, Extract.hostOf(u), NodeStatus.Inactive, round, -1L, -1L)
+      })
+      .toDF
+      .persist()
+    val adj = waveLinks
+      .join(nodes.union(newNodes).select($"url".as("link"), $"id".as("lid")), Seq("link"), "left")
+      .filter($"lid".isNotNull && $"lid" =!= $"author")
+      .groupBy($"author")
+      .agg(sort_array(collect_set($"lid")).as("newList"))
+      .collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray)
+      .toMap
+    (newNodes, newNodes.count(), adj)
   }
 
   /** One crawl round over in-memory state. None ⇒ frontier exhausted. */
@@ -510,9 +667,9 @@ class RoundDriver(
       .persist()
     val verInfo = phase(round, "fetch") {
       batchExtracted
-        .select($"url", $"id", $"ver", $"rejected", $"has_secret", size($"suspect_proofs") > 0)
+        .select($"url", $"id", $"ver", $"rejected", $"has_secret", size($"suspect_proofs") > 0, coalesce(size($"outlinks"), lit(0)))
         .collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getInt(2), r.getBoolean(3), r.getBoolean(4), r.getBoolean(5)))
+        .map(r => (r.getString(0), r.getLong(1), r.getInt(2), r.getBoolean(3), r.getBoolean(4), r.getBoolean(5), r.getInt(6)))
     }
 
     // per-round delta logs (all O(changes))
@@ -560,7 +717,7 @@ class RoundDriver(
     while (wave < maxWaves) {
       // authors owning a wave-th version, oversize-gated (O(batch), driver)
       val waveAuthors: Seq[Long] =
-        verInfo.collect { case (_, id, v, rejected, _, _) if v == wave + 1 && !rejected => id }
+        verInfo.collect { case (_, id, v, rejected, _, _, _) if v == wave + 1 && !rejected => id }
       if (waveAuthors.nonEmpty) {
         // distributed link resolution: explode the wave's outlinks, resolve
         // url→id against the distributed nodes table
@@ -572,43 +729,18 @@ class RoundDriver(
 
         // deterministic id assignment for unknown urls of ACTIVE authors
         // (sorted-url order, prevMax+1.. — SURVEY.md §1.3; unknowns of
-        // inactive authors are dropped, engine.go:399-414). Sort +
-        // zipWithIndex is fully distributed; the sorted rank is invariant
-        // to partitioning.
-        val known0 = st.nodes.select($"url".as("link"), $"id".as("lid"))
-        val unknown = waveLinks
-          .join(known0, Seq("link"), "left")
-          .filter($"status" === NodeStatus.Active && $"lid".isNull && $"link".isNotNull)
-          .select($"link")
-          .distinct()
-          .as[String]
-        val base = st.nextId
-        val rnd = round
-        // unknown urls are bounded by the wave's links (O(batch × degree));
-        // when they fit the driver (always, unless batches are huge) a
-        // single limit-probed collect + driver sort assigns ids in one job;
-        // the fully distributed sort+zipWithIndex is the fallback — both
-        // produce the identical sorted-rank assignment.
-        val maxDriverUnknown = 2000000
-        val probe = phase(round, s"ids-w$wave") { unknown.limit(maxDriverUnknown + 1).collect() }
-        val newNodesDF = (if (probe.length <= maxDriverUnknown) {
-                            spark.createDataset(
-                              probe.sorted.zipWithIndex.toSeq.map { case (u, i) =>
-                                NodeRow(base + i, u, Extract.hostOf(u), NodeStatus.Inactive, rnd, -1L, -1L)
-                              }
-                            )
-                          } else {
-                            spark.createDataset(
-                              unknown.rdd
-                                .sortBy(identity)
-                                .zipWithIndex()
-                                .map { case (u, i) =>
-                                  NodeRow(base + i, u, Extract.hostOf(u), NodeStatus.Inactive, rnd, -1L, -1L)
-                                }
-                            )
-                          }).toDF.persist()
+        // inactive authors are dropped, engine.go:399-414), and each
+        // author's new follow list (reference computeDelta,
+        // engine.go:372-425). The link rows are bounded by the wave's
+        // outlinks (O(batch × degree)); below the gate one collect resolves
+        // them all, above it the ids come from a distributed sort — both
+        // give the identical sorted-rank assignment.
+        val waveLinkRows = verInfo.collect { case (_, _, v, rejected, _, _, n) if v == wave + 1 && !rejected => n.toLong }.sum
+        val (newNodesDF, nNew, newAdjMap) = phase(round, s"links-w$wave") {
+          if (waveLinkRows <= MaxDriverLinkRows) resolveLinksOnDriver(waveLinks, st.nodes, st.nextId, round)
+          else resolveLinksDistributed(waveLinks, st.nodes, st.nextId, round)
+        }
         tmpCaches += newNodesDF
-        val nNew = if (probe.length <= maxDriverUnknown) probe.length.toLong else newNodesDF.count()
         if (nNew > 0) {
           st.nextId += nNew
           newNodesCount += nNew
@@ -616,21 +748,9 @@ class RoundDriver(
           st.nodes = st.nodes.union(newNodesDF)
         }
 
-        // per-author deltas (reference computeDelta, engine.go:372-425):
-        // old follows via the resolver (one broadcast semi-join against the
-        // distributed edges table, cached across waves), new follows from
-        // the distributed link resolution; only the O(batch × degree) delta
-        // rows are collected (they are broadcast to walk repair anyway).
-        val newAdjRows = phase(round, s"delta-w$wave") {
-          waveLinks
-            .join(st.nodes.select($"url".as("link"), $"id".as("lid")), Seq("link"), "left")
-            .filter($"lid".isNotNull && $"lid" =!= $"author")
-            .groupBy($"author")
-            .agg(sort_array(collect_set($"lid")).as("newList"))
-            .collect()
-        }
-        val newAdjMap: Map[Long, Array[Long]] =
-          newAdjRows.map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toMap
+        // per-author deltas: old follows via the resolver (one broadcast
+        // semi-join against the distributed edges table, cached across
+        // waves), new follows from the link resolution above
         val oldLists = resolver.lists(waveAuthors)
         val deltas: Map[Long, DeltaRow] = waveAuthors.iterator.flatMap { author =>
           val d = WalkAlgebra.newDelta(
@@ -663,7 +783,7 @@ class RoundDriver(
           // waves resolve adjacency on demand from the updated edges table;
           // big waves run the fully distributed join-per-hop repair
           val waveEntries = deltas.valuesIterator.map(d => (d.remove.length + d.keep.length + d.add.length).toLong).sum
-          val (changed, nChanged) = phase(round, s"repair-w$wave") {
+          val (changed, nChanged, releaseChanged) = phase(round, s"repair-w$wave") {
             if (waveEntries > iterativeRepairMinEntries) {
               val adjDS = graft.walks.IterativeWalker.adjacencyTable(
                 spark,
@@ -672,7 +792,7 @@ class RoundDriver(
               graft.walks.IterativeRepair.repairAll(spark, st.walks, adjDS, resolver, deltas, round, wave, params)
             } else SubgraphWalks.repairAll(spark, st.walks, resolver, deltas, round, wave, params)
           }
-          tmpCaches += changed
+          tmpReleases += releaseChanged
           walksChanged += nChanged
           if (nChanged > 0) {
             val changedIds = changed.map(_._1.walkId).toDF("rwid").persist()
@@ -855,8 +975,7 @@ class RoundDriver(
             } else {
               // bounded path: resolve only the neighborhood the walks visit
               val promotedIds = promotedDF.select($"id").as[Long].collect().sorted.toSeq
-              val g = SubgraphWalks.generateAll(spark, promotedIds, resolver, r, gw, p)
-              (g, () => { g.unpersist(); () })
+              SubgraphWalks.generateAll(spark, promotedIds, resolver, r, gw, p)
             }
           tmpReleases += newWalksRelease
           st.walks = st.walks.union(newWalks)
@@ -898,23 +1017,36 @@ class RoundDriver(
     }
 
     // ---- re-materialize in-memory state (one pass; no parquet rewrite of
-    // the full store) and cut lineage. Partition-count creep from repeated
-    // unions is coalesced back to the session default.
+    // the full store) and cut lineage: the seven state tables are
+    // checkpointed concurrently, each coalesced to at most 2 ×
+    // defaultParallelism partitions (repeated unions would otherwise grow
+    // their partition counts round after round), and only then — every new
+    // table is computed from the old ones — are the previous checkpoints
+    // released. Small tables too: status updates add two joins per round,
+    // and Catalyst replanning of deep chains costs more than materializing.
     val targetParts = spark.sparkContext.defaultParallelism * 2
     val oldWalks = st.walks
-    st.walks = phase(round, "rematerialize") {
-      val w = if (st.walks.rdd.getNumPartitions > 3 * targetParts) st.walks.coalesce(targetParts) else st.walks
-      recp(st, "walks", w)
+    phase(round, "rematerialize") {
+      val keys = Seq("walks", "visits", "nodes", "edges", "fetched", "enqueued", "leaks")
+      val cps = checkpointAll(
+        Seq(st.walks.toDF, st.visits, st.nodes, st.edges, st.fetched.union(batchUrls.toDF("url")), st.enqueued, st.leaks)
+          .map(_.coalesce(targetParts))
+      )
+      keys.zip(cps).foreach { case (key, (_, rel)) =>
+        st.cpRelease.get(key).foreach(_())
+        st.cpRelease(key) = rel
+      }
+      val Seq(walks, visits, nodes, edges, fetched, enqueued, leaks) = cps.map(_._1)
+      st.walks = walks.as[WalkRow]
+      st.visits = visits
+      st.nodes = nodes
+      st.edges = edges
+      st.fetched = fetched
+      st.enqueued = enqueued
+      st.leaks = leaks
     }
     oldWalks.unpersist()
-    st.visits = recp(st, "visits", st.visits)
     st.fetchedCount += batchUrls.size
-    // small tables: per-round localCheckpoint keeps their plans shallow
-    // (status updates add two joins per round — Catalyst replanning of deep
-    // chains costs more than materializing these small tables)
-    st.nodes = recp(st, "nodes", st.nodes)
-    st.edges = recp(st, "edges", st.edges)
-    st.fetched = recp(st, "fetched", st.fetched.union(batchUrls.toDF("url")))
     // incremental seen-bloom upkeep, size-gated: driver filter while small,
     // the distributed sharded table beyond maxDriverBloomUrls (rebuilt
     // doubled from the fetched table when the seen set outgrows it)
@@ -957,40 +1089,44 @@ class RoundDriver(
           )
         }
     }
-    st.enqueued = recp(st, "enqueued", st.enqueued)
-    st.leaks = recp(st, "leaks", st.leaks)
     if (promotedCount > 0) st.enqueuedCount = st.enqueued.count()
 
-    // ---- per-round delta checkpoint (O(changes), not O(state))
+    // ---- per-round delta checkpoint (O(changes), not O(state)): ONE
+    // table, every part tagged with its kind, in ⌈estimated bytes /
+    // 128 MiB⌉ files
     phase(round, "delta-write") {
-      if (nodesAddedParts.nonEmpty) io.write(round, "nodes_added", nodesAddedParts.reduce(_ union _))
-      if (nodeUpdateParts.nonEmpty) io.write(round, "nodes_updates", nodeUpdateParts.reduce(_ union _))
+      val parts = mutable.ArrayBuffer.empty[DataFrame]
+      parts ++= nodesAddedParts.map(deltaPart(lit("node"), _))
+      parts ++= nodeUpdateParts.map(deltaPart(lit("node_update"), _))
       if (touchedAuthors.nonEmpty) {
-        io.write(round, "edges_removed_src", spark.createDataset(touchedAuthors.toSeq).toDF("src"))
+        parts += deltaPart(lit("edge_src"), touchedAuthors.toSeq.toDF("src"), key = "src")
         // FINAL adjacency of touched authors (net of all waves this round)
         val finalEdges = touchedAuthors.toSeq.flatMap(a => roundAdj.getOrElse(a, Array.empty[Long]).map(dst => EdgeRow(a, dst)))
-        if (finalEdges.nonEmpty) io.write(round, "edges_added", spark.createDataset(finalEdges).toDF)
+        if (finalEdges.nonEmpty) parts += deltaPart(lit("edge"), spark.createDataset(finalEdges).toDF, key = "src")
       }
       if (walkEventParts.nonEmpty) {
-        val events = walkEventParts.reduce(_ union _)
+        // each touched walk's last event: its final version, or its removal
         val w = org.apache.spark.sql.expressions.Window.partitionBy($"walkId").orderBy($"seq".desc)
-        val last = events.withColumn("rn", row_number().over(w)).filter($"rn" === 1).persist()
-        tmpCaches += last
-        io.write(round, "walks_removed", last.select($"walkId"))
-        io.write(round, "walks_added", last.filter($"isAdd").select($"walkId", $"start", $"path"))
-      }
-      if (leakRecordParts.nonEmpty) io.write(round, "leaks_add", leakRecordParts.reduce(_ union _))
-      io.write(round, "fetched_add", batchUrls.toDF("url"))
-      enqueuedAdd.foreach(df => io.write(round, "enqueued_add", df))
-      // visit-count DELTA log (net per node, zeros dropped) — O(changes);
-      // the full visits table lands only at compactions, like every other
-      // state table
-      if (roundVisitDeltas.nonEmpty)
-        io.write(
-          round,
-          "visits_delta",
-          roundVisitDeltas.reduce(_ union _).groupBy("node").agg(sum($"d").as("d")).filter($"d" =!= 0)
+        val last = walkEventParts.reduce(_ union _).withColumn("rn", row_number().over(w)).filter($"rn" === 1)
+        parts += deltaPart(
+          when($"isAdd", lit("walk")).otherwise(lit("walk_removed")),
+          last.select($"isAdd", $"walkId", when($"isAdd", $"start").as("start"), when($"isAdd", $"path").as("path")),
+          key = "walkId"
         )
+      }
+      parts ++= leakRecordParts.map(deltaPart(lit("leak"), _))
+      parts += deltaPart(lit("fetched"), batchUrls.toDF("url"))
+      parts ++= enqueuedAdd.map(deltaPart(lit("enqueued"), _))
+      // visit-count deltas, net per node, zeros dropped — the full visits
+      // table lands only at compactions, like every other state table
+      if (roundVisitDeltas.nonEmpty)
+        parts += deltaPart(
+          lit("visit"),
+          roundVisitDeltas.reduce(_ union _).groupBy("node").agg(sum($"d").as("d")).filter($"d" =!= 0),
+          key = "node"
+        )
+      val delta = parts.reduce(_ union _)
+      io.write(round, "delta", delta.coalesce(partitionsFor(delta.queryExecution.optimizedPlan.stats.sizeInBytes)))
     }
 
     val wallMillis = System.currentTimeMillis() - t0

@@ -20,6 +20,9 @@ trait TableIO {
   def exists(round: Long, name: String): Boolean
   def commitRound(round: Long): Unit
 
+  /** Where round `round`'s tables live, as error messages name it. */
+  def roundDir(round: Long): String
+
   /** Largest round with a commit marker, or -1. */
   def lastCompleteRound(): Long
 }
@@ -29,7 +32,7 @@ class ParquetTableIO(spark: SparkSession, val root: String) extends TableIO {
     new java.net.URI(root),
     spark.sparkContext.hadoopConfiguration
   )
-  protected def roundDir(round: Long) = s"$root/r=$round"
+  override def roundDir(round: Long): String = s"$root/r=$round"
   private def marker(round: Long) =
     new org.apache.hadoop.fs.Path(s"${roundDir(round)}/_COMPLETE")
 

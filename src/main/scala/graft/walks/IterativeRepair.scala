@@ -151,7 +151,8 @@ object IterativeRepair {
 
   /** Repair every walk visiting a delta node, fully distributed. Same
     * contract as SubgraphWalks.repairAll: (changed walks with their old
-    * paths, count), result persisted, intermediates released.
+    * paths, count, release); here the result is persisted and every
+    * intermediate already released, so the release only drops the result.
     */
   def repairAll(
       spark: SparkSession,
@@ -162,7 +163,7 @@ object IterativeRepair {
       round: Long,
       wave: Int,
       params: CrawlParams
-  ): (Dataset[(WalkRow, Array[Long])], Long) = {
+  ): (Dataset[(WalkRow, Array[Long])], Long, () => Unit) = {
     import spark.implicits._
     val bDeltas = spark.sparkContext.broadcast(deltas)
     val (p, r, wv) = (params, round, wave)
@@ -222,7 +223,7 @@ object IterativeRepair {
       val tail = checkpointTracked(state.filter(_.segActive))
       stateRelease()
       resolver.resolve(tail.map(_.cur).distinct().collect().toIndexedSeq)
-      val (tailDone, tailRelease) = resolver.drain(tail) { (adj, s0: RepSt) =>
+      val (tailDone, _, tailRelease) = resolver.drain(tail) { (adj, s0: RepSt) =>
         var s = s0
         while (s.segActive) s = stepSegment(s, adj(s.cur), bDeltas.value, r, wv, p)
         Seq(s)
@@ -247,6 +248,6 @@ object IterativeRepair {
     // instead of at the JVM GC's leisure
     adjDF.unpersist()
     releases.foreach(_())
-    (changed, n)
+    (changed, n, () => { changed.unpersist(); () })
   }
 }

@@ -3,7 +3,7 @@ package graft.walks
 import scala.collection.mutable
 import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{functions, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 
@@ -149,11 +149,14 @@ object SubgraphWalks {
       * distinct misses are fetched — with exponential hop expansion, so a
       * long segment resolves in O(log len) retries instead of one per hop —
       * and ONLY the missed items retry, until none miss. Counter-based draws
-      * make a retried item repeat exactly its earlier draws. Returns the
-      * outputs as lazy slices over the per-attempt caches, plus the release
-      * of those caches: call it once the outputs are materialized.
+      * make a retried item repeat exactly its earlier draws. Each attempt's
+      * one job groups its outcomes by miss, which yields both the distinct
+      * misses and that attempt's output count. Returns the outputs as lazy
+      * slices over the per-attempt MEMORY_AND_DISK caches, their total
+      * count, and the release of those caches: call it once every consumer
+      * of the outputs has materialized.
       */
-    def drain[I: TypeTag, O: TypeTag](items: Dataset[I])(body: (WalkAlgebra.Adjacency, I) => Seq[O]): (Dataset[O], () => Unit) = {
+    def drain[I: TypeTag, O: TypeTag](items: Dataset[I])(body: (WalkAlgebra.Adjacency, I) => Seq[O]): (Dataset[O], Long, () => Unit) = {
       import spark.implicits._
       val (itemEnc, outEnc) = (ExpressionEncoder[I](), ExpressionEncoder[O]())
       var todo = items
@@ -161,6 +164,7 @@ object SubgraphWalks {
       val caches = mutable.ArrayBuffer.empty[Dataset[_]]
       var drained = false
       var attempt = 0
+      var produced = 0L
       while (!drained) {
         val bAdj = spark.sparkContext.broadcast(snapshot)
         val out = todo.mapPartitions { it =>
@@ -171,7 +175,10 @@ object SubgraphWalks {
           }
         }.persist()
         caches += out
-        val misses = out.filter(col("miss") >= 0L).select(col("miss")).distinct().as[Long].collect()
+        // (miss, outputs) per distinct miss; miss = -1 groups the successes
+        val byMiss = out.groupBy(col("miss")).agg(sum(functions.size(col("out")))).as[(Long, Long)].collect()
+        produced += byMiss.iterator.map(_._2).sum
+        val misses = byMiss.collect { case (m, _) if m >= 0L => m }
         parts += out.flatMap(_.out)(outEnc)
         if (misses.isEmpty) drained = true
         else {
@@ -180,14 +187,15 @@ object SubgraphWalks {
           todo = out.flatMap(_.retry)(itemEnc)
         }
       }
-      (parts.reduce(_ union _), () => caches.foreach(_.unpersist()))
+      (parts.reduce(_ union _), produced, () => caches.foreach(_.unpersist()))
     }
   }
 
   /** Repair every walk that visits a delta node, against distributed
-    * adjacency. Returns (changed walks with old paths, count), with the
-    * result persisted and all intermediates released. Results are identical
-    * to repairing with the full adjacency map.
+    * adjacency. Returns (changed walks with old paths, count, release): the
+    * walks stay lazy over the drain's attempt caches, so call the release
+    * only once every consumer has materialized. Results are identical to
+    * repairing with the full adjacency map.
     */
   def repairAll(
       spark: SparkSession,
@@ -197,7 +205,7 @@ object SubgraphWalks {
       round: Long,
       wave: Int,
       params: CrawlParams
-  ): (Dataset[(WalkRow, Array[Long])], Long) = {
+  ): (Dataset[(WalkRow, Array[Long])], Long, () => Unit) = {
     val bDeltas = spark.sparkContext.broadcast(deltas)
     // Seed with every delta's graft pools (Added ∪ Kept) + one hop: most
     // segments are short (expected length 1/(1-α)), so most walks repair
@@ -212,20 +220,18 @@ object SubgraphWalks {
     // per wave at a 25k-author batch.)
     val todo = walks.filter(w => { val m = bDeltas.value; w.path.exists(m.contains) })
     val (p, r, wv) = (params, round, wave)
-    val (done, release) = resolver.drain(todo) { (adj, w: WalkRow) =>
+    resolver.drain(todo) { (adj, w: WalkRow) =>
       val repaired = WalkAlgebra.repairWalk(adj, bDeltas.value, w.walkId, w.path, r, wv, p)
       repaired.toList.map(np => (WalkRow(w.walkId, w.start, np), w.path))
     }
-    val changed = done.persist()
-    val n = changed.count()
-    release()
-    (changed, n)
   }
 
   /** Generate walksPerNode walks per start node against distributed
     * adjacency (same miss-retry drain; walkIds = node*walksPerNode+i as
     * everywhere else). For promotion batches small enough that the touched
     * neighborhood fits a broadcast; IterativeWalker is the unbounded path.
+    * Returns the walks, lazy over the drain's attempt caches, and the
+    * release of those caches.
     */
   def generateAll(
       spark: SparkSession,
@@ -234,19 +240,16 @@ object SubgraphWalks {
       round: Long,
       wave: Int,
       params: CrawlParams
-  ): Dataset[WalkRow] = {
+  ): (Dataset[WalkRow], () => Unit) = {
     import spark.implicits._
     resolver.resolve(startIds)
     val (p, r, wv) = (params, round, wave)
-    val (done, release) = resolver.drain(spark.createDataset(startIds)) { (adj, node: Long) =>
+    val (walks, _, release) = resolver.drain(spark.createDataset(startIds)) { (adj, node: Long) =>
       (0 until p.walksPerNode).map { i =>
         val wid = node * p.walksPerNode + i
         WalkRow(wid, node, WalkAlgebra.generateWalk(adj, node, wid, r, wv, p))
       }
     }
-    val res = done.persist()
-    res.count()
-    release()
-    res
+    (walks, release)
   }
 }

@@ -285,6 +285,18 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     assert(wA === wB, "walk store differs")
   }
 
+  test("replay refuses a committed round with legacy per-table delta logs, naming its dir") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("crawl-legacy").toString
+    val io = new ParquetTableIO(spark, dir)
+    new RoundDriver(spark, io, params).init(seeds)
+    // a round written by the per-table delta layout: no `delta` table
+    io.write(1L, "fetched_add", seeds.take(1).toDF("url"))
+    io.commitRound(1L)
+    val err = intercept[IllegalStateException](runEngine(2, dir))
+    assert(err.getMessage.contains(s"$dir/r=1"), err.getMessage)
+  }
+
   test("walk↔visit-index consistency + leak/demotion invariants (e2e_test.go analogs)") {
     val dir = Files.createTempDirectory("crawl-inv").toString
     runEngine(rounds, dir)

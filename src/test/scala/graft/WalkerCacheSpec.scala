@@ -4,10 +4,10 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{CrawlParams, Rng}
+import graft.core.{CrawlParams, Rng, WalkRow}
 import graft.fixtures.PagesGen
 import graft.round.{CrawlEngine, ParquetTableIO, RoundDriver}
-import graft.walks.IterativeWalker
+import graft.walks.{IterativeWalker, SubgraphWalks, WalkAlgebra}
 
 /** Pins deterministic cache release (round-5 profiling finding): every
   * iterative drain takes one `localCheckpoint(true)` per hop, and
@@ -16,7 +16,8 @@ import graft.walks.IterativeWalker
   * pressure across a 48-query bench JVM or a many-round crawl (the round-4
   * bench's sporadic >60 s walker reps). After a drain, exactly ONE cache
   * (the output) may remain; after a crawl run, only the live state-table
-  * checkpoints.
+  * checkpoints, none spread over more than 2 × defaultParallelism
+  * partitions (repeated unions would otherwise grow them every round).
   */
 class WalkerCacheSpec extends AnyFunSuite {
   lazy val spark = graft.core.Sessions.local(4, appName = "walker-cache-spec")
@@ -86,7 +87,47 @@ class WalkerCacheSpec extends AnyFunSuite {
       // live state = 7 table checkpoints (nodes, edges, walks, fetched,
       // enqueued, leaks, visits); allow slack of 2 for in-flight cleaner work
       assert(left.size <= 9, s"crawl leaked ${left.size} caches: ${left.values.map(_.toString).take(12).mkString("; ")}")
+      val maxParts = 2 * spark.sparkContext.defaultParallelism
+      val wide = left.values.filter(_.getNumPartitions > maxParts)
+      assert(wide.isEmpty, s"state caches over $maxParts partitions: ${wide.map(r => s"$r: ${r.getNumPartitions}").mkString("; ")}")
       clearAll()
     }
+  }
+
+  test("resolver drain counts its outputs in the misses job and releases every attempt cache") {
+    import spark.implicits._
+    clearAll()
+    // a chain 0 → 1 → … → 59 and an EMPTY resolver: every walk misses on
+    // its first attempt, and the long ones miss again past the first
+    // speculative expansion
+    val n = 60L
+    val edges = (0L until n - 1).map(i => (i, i + 1))
+    val edgesDF = spark.createDataset(edges).toDF("src", "dst")
+    val p = CrawlParams(alpha = 0.95, walksPerNode = 5)
+    val fullAdj: WalkAlgebra.Adjacency = v => if (v < n - 1) Array(v + 1) else Array.empty
+    val starts = (0L until n by 3).toSeq
+    val resolver = new SubgraphWalks.Resolver(spark, () => edgesDF)
+    val calls = spark.sparkContext.longAccumulator("drain-body-calls")
+    val (walks, count, release) = resolver.drain(spark.createDataset(starts)) { (adj, node: Long) =>
+      calls.add(1)
+      (0 until p.walksPerNode).map { i =>
+        val wid = node * p.walksPerNode + i
+        WalkRow(wid, node, WalkAlgebra.generateWalk(adj, node, wid, 2L, 15, p))
+      }
+    }
+    val got = walks.collect().map(w => w.walkId -> w.path.toSeq).toMap
+    assert(calls.value >= starts.size + 1L, s"expected a retry attempt, body ran ${calls.value} times")
+    assert(count === walks.count())
+    assert(count === starts.size.toLong * p.walksPerNode)
+    val expected = starts.flatMap { node =>
+      (0 until p.walksPerNode).map { i =>
+        val wid = node * p.walksPerNode + i
+        wid -> WalkAlgebra.generateWalk(fullAdj, node, wid, 2L, 15, p).toSeq
+      }
+    }.toMap
+    assert(got === expected)
+    assert(got.values.exists(_.size > 4), "the chain walks never went past the first expansion")
+    release()
+    assert(cachedCount == 0, s"release must drop every attempt cache: ${spark.sparkContext.getPersistentRDDs}")
   }
 }
