@@ -165,7 +165,8 @@ object CrawlMain {
     val broadcastMax = sys.env.getOrElse("GRAFT_BROADCAST_MAX_EDGES", "10000000").toLong
     // GRAFT_MAX_DRIVER_BLOOM_URLS=0 forces the distributed sharded
     // seen-bloom (the 10^10-url path) from round 1.
-    val maxDriverBloom = sys.env.getOrElse("GRAFT_MAX_DRIVER_BLOOM_URLS", "50000000").toLong
+    val maxDriverBloom =
+      sys.env.get("GRAFT_MAX_DRIVER_BLOOM_URLS").map(_.toLong).getOrElse(graft.frontier.SeenSet.DefaultMaxDriverUrls)
     val driver = new RoundDriver(spark, io, params, broadcastMax, maxDriverBloomUrls = maxDriverBloom)
     val resumedFrom = io.lastCompleteRound()
     if (resumedFrom < 0) {

@@ -53,28 +53,16 @@ object SchedulerBench {
     val hostBudget = math.max(batch * 3 / hosts, 10)
     val prepSec = (System.nanoTime() - t0) / 1e9
 
-    // bloom over the initial seen set (the engine maintains the same filter
-    // incrementally; rebuilt here in one distributed pass), then merged
-    // per-batch inside the timed loop — the full bloom-prefiltered
-    // scheduling path the engine runs. Holds xxhash64(url) longs; sized to
-    // the seen set (initial + everything this run will schedule), like the
-    // engine — never to the frontier. GRAFT_SCHED_SHARDED=1 runs the
-    // distributed sharded-bloom path instead (the 10^10-url shape: zero
-    // driver bloom bytes); fingerprints must match the driver-bloom legs.
+    // the engine's seen set (graft.frontier.SeenSet) over the initial
+    // seen set, then grown per batch inside the timed loop — the full
+    // bloom-prefiltered scheduling path the engine runs.
+    // GRAFT_SCHED_SHARDED=1 sets its gate to 0, the distributed sharded
+    // table (the 10^10-url shape: zero driver bloom bytes); fingerprints
+    // must match the driver-bloom legs.
     val sharded = sys.env.get("GRAFT_SCHED_SHARDED").contains("1")
-    val numShards = graft.frontier.BloomShards.DefaultShards
-    val seenCapacity = math.max((n / 10 + (iters + 1).toLong * batch) * 2, 100000L)
-    var bloom: Option[org.apache.spark.util.sketch.BloomFilter] = None
-    var shards: Option[org.apache.spark.sql.Dataset[graft.frontier.BloomShard]] = None
-    if (sharded) {
-      shards = Some(
-        graft.frontier.BloomShards
-          .build(spark, fetched, numShards, seenCapacity / numShards)
-          .localCheckpoint(true)
-      )
-    } else {
-      bloom = Some(fetched.select(xxhash64($"url").as("h")).stat.bloomFilter("h", seenCapacity, 0.01))
-    }
+    val maxDriverUrls = if (sharded) 0L else graft.frontier.SeenSet.DefaultMaxDriverUrls
+    var seenCount = fetched.count()
+    var seen = graft.frontier.SeenSet.build(spark, fetched, seenCount, maxDriverUrls)
     def scheduleOnce(fetchedNow: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
       graft.frontier.Politeness
         .schedule(
@@ -85,24 +73,20 @@ object SchedulerBench {
           fetchedNow,
           batch,
           hostBudget,
-          bloom,
-          seenShards = shards.map(s => (s, numShards))
+          seen.bloom,
+          seenShards = seen.shards
         )
         .select($"url")
         .localCheckpoint(true)
-    def noteSeen(rows: Array[org.apache.spark.sql.Row], b: org.apache.spark.sql.DataFrame): Unit =
-      if (sharded)
-        shards = Some(
-          graft.frontier.BloomShards
-            .merge(spark, shards.get, b, numShards, seenCapacity / numShards)
-            .localCheckpoint(true)
-        )
-      else rows.foreach(r => bloom.get.putLong(Rng.sparkXxhash64String(r.getString(0))))
+    def noteSeen(rows: Array[org.apache.spark.sql.Row]): Unit = {
+      seenCount += rows.length
+      seen = seen.add(rows.map(_.getString(0)).toSeq, fetched, seenCount)
+    }
 
     // warm-up iteration (excluded)
     val warm = scheduleOnce(fetched)
     fetched = fetched.union(warm).localCheckpoint(true)
-    noteSeen(warm.collect(), warm)
+    noteSeen(warm.collect())
 
     val batches = Vector.newBuilder[org.apache.spark.sql.DataFrame]
     val t1 = System.nanoTime()
@@ -112,9 +96,9 @@ object SchedulerBench {
       val b = scheduleOnce(fetched)
       val rows = b.collect()
       scheduled += rows.length
-      noteSeen(rows, b) // incremental seen-set upkeep
       batches += b
       fetched = fetched.union(b).localCheckpoint(true)
+      noteSeen(rows) // incremental seen-set upkeep
       i += 1
     }
     val wallSec = (System.nanoTime() - t1) / 1e9

@@ -18,10 +18,10 @@ case class BloomShard(shard: Int, bits: Array[Byte])
   * filter stops fitting — VERDICT r2 "what's wrong #2").
   *
   * The seen set is held as a small TABLE of [[BloomShard]] rows that lives
-  * persisted on the executors: at a 10^10-url seen set and fpp 0.01 the
-  * bits total ~12 GB — split over B shards no single row exceeds 12 GB / B
-  * and the DRIVER holds only the Dataset handle (zero bloom bytes; compare
-  * the reference's bounded-memory LRU seen cache,
+  * persisted on the executors: at a 10^10-url seen set and `SeenSet.Fpp`
+  * the bits total ~12 GB — split over B shards no single row exceeds
+  * 12 GB / B and the DRIVER holds only the Dataset handle (zero bloom
+  * bytes; compare the reference's bounded-memory LRU seen cache,
   * /root/reference/pkg/pipe/firehose/firehose.go:20,61-64).
   *
   * Probing joins the frontier to its shard by explicit co-partitioning
@@ -68,8 +68,7 @@ object BloomShards {
       spark: SparkSession,
       urls: DataFrame,
       numShards: Int,
-      capacityPerShard: Long,
-      fpp: Double = 0.01
+      capacityPerShard: Long
   ): Dataset[BloomShard] = {
     import spark.implicits._
     val cap = math.max(capacityPerShard, 1000L)
@@ -78,7 +77,7 @@ object BloomShards {
       .as[(Int, Long)]
       .groupByKey(_._1)
       .mapGroups { (shard, it) =>
-        val bf = BloomFilter.create(cap, fpp)
+        val bf = BloomFilter.create(cap, SeenSet.Fpp)
         it.foreach { case (_, h) => bf.putLong(h) }
         BloomShard(shard, ser(bf))
       }
@@ -93,8 +92,7 @@ object BloomShards {
       shards: Dataset[BloomShard],
       newUrls: DataFrame,
       numShards: Int,
-      capacityPerShard: Long,
-      fpp: Double = 0.01
+      capacityPerShard: Long
   ): Dataset[BloomShard] = {
     import spark.implicits._
     val cap = math.max(capacityPerShard, 1000L)
@@ -108,7 +106,7 @@ object BloomShards {
       .map { case (old, add) =>
         if (add == null) old
         else {
-          val bf = if (old == null) BloomFilter.create(cap, fpp) else deser(old.bits)
+          val bf = if (old == null) BloomFilter.create(cap, SeenSet.Fpp) else deser(old.bits)
           add._2.foreach(bf.putLong)
           BloomShard(add._1, ser(bf))
         }

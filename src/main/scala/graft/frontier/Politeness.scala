@@ -28,23 +28,11 @@ object Politeness {
     * global rank-ordered batch cut. Used verbatim by the round driver and
     * by SchedulerBench.
     *
-    * `seenBloom`: a DRIVER-RESIDENT bloom filter over the fetched set
-    * (north_star's "distributed bloom/cuckoo URL-seen set" — the
-    * reference's LRU seen cache,
-    * /root/reference/pkg/pipe/firehose/firehose.go:20,61-64).
-    * Bloom-negative urls are DEFINITELY unseen and skip the exact anti-join
-    * entirely; only bloom-positive urls (seen + false positives) take the
-    * exact path — the result set is identical, but the shuffled anti-join
-    * side shrinks from |enqueued| to ~|fetched|·(1+fpp). This path is for
-    * seen sets small enough to broadcast (RoundDriver gates it at
-    * maxDriverBloomUrls, keeping driver bloom memory bounded like the
-    * reference's LRU).
-    *
-    * `seenShards`: the DISTRIBUTED sharded bloom (BloomShards) + its shard
-    * count — the 10^10-url path: the filter bits live as a table on the
-    * executors (zero driver bytes), probed by co-partitioned zip. Takes
-    * precedence over `seenBloom`. Results are identical on every path
-    * (bloom positives always re-check exactly).
+    * `seenBloom` / `seenShards`: the two forms of the URL-seen bloom,
+    * `SeenSet.bloom` and `SeenSet.shards` (see [[SeenSet]]). Bloom-negative
+    * urls are DEFINITELY unseen and skip the exact anti-join; only the
+    * positives take it, so the result is identical on every path (or with
+    * neither).
     *
     * `robots`: (host, prefix) disallow rules; a pending url whose path
     * starts with a disallowed prefix for its host is never scheduled.

@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 import graft.core._
 import graft.extract.Extract
+import graft.frontier.SeenSet
 import graft.walks.{SubgraphWalks, WalkAlgebra}
 
 /** The distributed crawl-and-rank engine: a deterministic round loop over
@@ -51,10 +52,12 @@ import graft.walks.{SubgraphWalks, WalkAlgebra}
   *    the cached store), merged back with a broadcast anti-join + union;
   *    the store is re-materialized once per round via an eager
   *    localCheckpoint — no per-round parquet rewrite of the full store.
-  *  - A driver-side bloom filter over the seen set pre-filters the
-  *    scheduling anti-join (exact fallback on positives — results are
-  *    identical); it is maintained incrementally from each round's batch
-  *    and rebuilt from the fetched table on resume.
+  *  - A bloom filter over the seen set (graft.frontier.SeenSet: a driver
+  *    filter while small, the distributed BloomShards table past the
+  *    maxDriverBloomUrls gate) pre-filters the scheduling anti-join (exact
+  *    fallback on positives — results are identical); each round's batch
+  *    is added to it, it is rebuilt from the fetched table on resume, and
+  *    run() releases it with the state checkpoints when it returns.
   */
 object CrawlEngine {
 
@@ -210,18 +213,12 @@ class RoundDriver(
       * for their host are never scheduled (north_rule robots gate).
       */
     robots: Option[DataFrame] = None,
-    /** Above this many seen urls the driver-resident bloom (fast broadcast
-      * probe, ~1.2 MB per 10^6 urls at fpp 0.01) is replaced by the
-      * DISTRIBUTED sharded bloom table (graft.frontier.BloomShards) — zero
-      * driver bloom bytes, probe via co-partitioned zip. The default gate
-      * caps driver bloom memory at ~60 MB (5×10^7 urls) — bounded like the
-      * reference's LRU seen cache; at a 10^10-url crawl the sharded table
-      * carries the ~12 GB of bits on the executors. 0 forces the sharded
-      * path from round 1 (the equivalence test uses this). Results are
-      * identical on both paths.
+    /** The seen-set gate (graft.frontier.SeenSet): the driver-resident
+      * bloom serves while 2·|seen| fits under it, the distributed sharded
+      * table beyond. 0 forces the sharded table from round 1 (the
+      * equivalence test uses this). Results are identical on both paths.
       */
-    maxDriverBloomUrls: Long = 50000000L,
-    bloomNumShards: Int = graft.frontier.BloomShards.DefaultShards
+    maxDriverBloomUrls: Long = SeenSet.DefaultMaxDriverUrls
 ) {
   import spark.implicits._
   import CrawlEngine._
@@ -256,21 +253,7 @@ class RoundDriver(
       var totalEdges: Long,
       var fetchedCount: Long,
       var enqueuedCount: Long,
-      /** driver-resident bloom (below the maxDriverBloomUrls gate) … */
-      var seenBloom: Option[org.apache.spark.util.sketch.BloomFilter],
-      /** capacity the driver bloom was built for; it is rebuilt (doubled)
-        * from `fetched` when the seen set outgrows it — otherwise a long
-        * fresh crawl would drive fpp toward 1 and silently turn the
-        * prefilter into a no-op (correctness holds via the exact anti-join,
-        * the optimization would just vanish).
-        */
-      var bloomBuildCapacity: Long,
-      /** … or the distributed sharded bloom table (above it). */
-      var seenShards: Option[Dataset[graft.frontier.BloomShard]],
-      /** per-shard capacity the current shards were built with; the table
-        * is rebuilt (doubled) from `fetched` when the seen set outgrows it.
-        */
-      var bloomShardCapacity: Long
+      var seen: SeenSet // bloom over `fetched`
   ) {
 
     /** Release handle of each table's CURRENT local checkpoint, by key —
@@ -280,17 +263,6 @@ class RoundDriver(
       * growing storage pressure linearly in rounds run.
       */
     val cpRelease: mutable.Map[String, () => Unit] = mutable.Map.empty
-  }
-
-  /** Eagerly re-checkpoint a state table and release the PREVIOUS round's
-    * checkpoint under the same key (strictly after the new one is
-    * materialized — the new value is computed from the old).
-    */
-  private def recp[T](st: State, key: String, ds: Dataset[T]): Dataset[T] = {
-    val (cp, rel) = graft.core.CacheOps.checkpointReleasable(ds)
-    st.cpRelease.get(key).foreach(_())
-    st.cpRelease(key) = rel
-    cp
   }
 
   private def paramsDF: DataFrame =
@@ -433,35 +405,6 @@ class RoundDriver(
     val counts = perPartition.map(_._1).foldLeft(Seq.fill(5)(0L))((a, b) => a.zip(b).map { case (x, y) => x + y })
     val nextId = perPartition.map(_._2.head).foldLeft(-1L)(math.max) + 1
     val Seq(_, totalWalks, totalEdges, fetchedCount, enqueuedCount) = counts
-    // distributed one-pass bloom rebuild over the seen set (resume only;
-    // rounds maintain it incrementally from the batch). Below the gate: a
-    // driver-resident filter of xxhash64(url) longs (broadcast probe).
-    // Above it: the sharded bloom table — bits stay on the executors.
-    var shardsR: Option[() => Unit] = None
-    val (bloom, bloomCap, shards, shardCap) =
-      if (maxDriverBloomUrls == 0 || fetchedCount * 2 > maxDriverBloomUrls) {
-        val cap = math.max(fetchedCount * 2 / bloomNumShards, 100000L)
-        val (sh, shR) = graft.core.CacheOps.checkpointReleasable(
-          graft.frontier.BloomShards.build(spark, fetchedC, bloomNumShards, cap)
-        )
-        shardsR = Some(shR)
-        (None, 0L, Some(sh), cap)
-      } else if (fetchedCount == 0)
-        (Some(org.apache.spark.util.sketch.BloomFilter.create(100000L, 0.01)), 100000L, None, 0L)
-      else {
-        val cap = math.max(fetchedCount * 2, 100000L)
-        (
-          Some(
-            fetchedC
-              .select(xxhash64($"url").as("h"))
-              .stat
-              .bloomFilter("h", cap, 0.01)
-          ),
-          cap,
-          None,
-          0L
-        )
-      }
     val st = State(
       nodesC,
       edgesC,
@@ -475,10 +418,7 @@ class RoundDriver(
       totalEdges,
       fetchedCount,
       enqueuedCount,
-      bloom,
-      bloomCap,
-      shards,
-      shardCap
+      SeenSet.build(spark, fetchedC, fetchedCount, maxDriverBloomUrls)
     )
     st.cpRelease ++= Seq(
       "nodes" -> nodesR,
@@ -489,31 +429,37 @@ class RoundDriver(
       "leaks" -> leaksR,
       "visits" -> visitsR
     )
-    shardsR.foreach(r => st.cpRelease("seenShards") = r)
     st
   }
 
-  /** Run rounds [lastComplete+1 .. maxRounds]. */
+  /** Run rounds [lastComplete+1 .. maxRounds]. Every round is committed
+    * to `io`, so the in-memory state (its checkpoints and the seen set) is
+    * released when this returns; the next run reloads it.
+    */
   def run(extracted: DataFrame, maxRounds: Int): Result = {
     val traces = Vector.newBuilder[Trace]
     var round = io.lastCompleteRound() + 1
     require(round >= 1, "call init() first")
     if (round > maxRounds) return Result(Vector.empty, round - 1)
     val st = loadState(round - 1)
-    var done = false
-
-    while (!done && round <= maxRounds) {
-      runRound(st, round, extracted) match {
-        case Some(t) =>
-          traces += t
-          if (round % compactEvery == 0) compact(st, round)
-          round += 1
-        case None => done = true
+    try {
+      var done = false
+      while (!done && round <= maxRounds) {
+        runRound(st, round, extracted) match {
+          case Some(t) =>
+            traces += t
+            if (round % compactEvery == 0) compact(st, round)
+            round += 1
+          case None => done = true
+        }
       }
+      val lastDone = round - 1
+      if (compactOnExit && lastDone >= 1 && !io.exists(lastDone, "walks")) compact(st, lastDone)
+      Result(traces.result(), lastDone)
+    } finally {
+      st.cpRelease.values.foreach(_())
+      st.seen.release()
     }
-    val lastDone = round - 1
-    if (compactOnExit && lastDone >= 1 && !io.exists(lastDone, "walks")) compact(st, lastDone)
-    Result(traces.result(), lastDone)
   }
 
   /** Full snapshot of the in-memory state at `round` (the Iceberg
@@ -631,9 +577,9 @@ class RoundDriver(
           st.fetched,
           params.batch,
           params.hostBudget,
-          seenBloom = st.seenBloom,
+          seenBloom = st.seen.bloom,
           robots = robots,
-          seenShards = st.seenShards.map(sh => (sh, bloomNumShards))
+          seenShards = st.seen.shards
         )
         .collect()
     }
@@ -1047,48 +993,7 @@ class RoundDriver(
     }
     oldWalks.unpersist()
     st.fetchedCount += batchUrls.size
-    // incremental seen-bloom upkeep, size-gated: driver filter while small,
-    // the distributed sharded table beyond maxDriverBloomUrls (rebuilt
-    // doubled from the fetched table when the seen set outgrows it)
-    st.seenBloom match {
-      case Some(bf) if st.fetchedCount * 2 <= maxDriverBloomUrls =>
-        if (st.fetchedCount > st.bloomBuildCapacity) {
-          // the seen set outgrew the filter's build capacity (fpp would
-          // drift toward 1, degrading the prefilter to a no-op): rebuild
-          // doubled from the fetched table, mirroring the sharded path's
-          // overflow rebuild
-          val cap = math.max(st.fetchedCount * 2, 100000L)
-          st.seenBloom = Some(
-            st.fetched.select(xxhash64($"url").as("h")).stat.bloomFilter("h", cap, 0.01)
-          )
-          st.bloomBuildCapacity = cap
-        } else batchUrls.foreach(u => bf.putLong(Rng.sparkXxhash64String(u)))
-      case Some(_) => // seen set crossed the gate: move the bits off the driver
-        val cap = math.max(st.fetchedCount * 2 / bloomNumShards, 100000L)
-        st.seenShards = Some(
-          recp(st, "seenShards", graft.frontier.BloomShards.build(spark, st.fetched, bloomNumShards, cap))
-        )
-        st.bloomShardCapacity = cap
-        st.seenBloom = None
-      case None =>
-        val overflow = st.fetchedCount > st.bloomShardCapacity * bloomNumShards
-        if (overflow) {
-          val cap = math.max(st.fetchedCount * 2 / bloomNumShards, 100000L)
-          st.seenShards = Some(
-            recp(st, "seenShards", graft.frontier.BloomShards.build(spark, st.fetched, bloomNumShards, cap))
-          )
-          st.bloomShardCapacity = cap
-        } else {
-          st.seenShards = Some(
-            recp(
-              st,
-              "seenShards",
-              graft.frontier.BloomShards
-                .merge(spark, st.seenShards.get, batchUrls.toDF("url"), bloomNumShards, st.bloomShardCapacity)
-            )
-          )
-        }
-    }
+    st.seen = st.seen.add(batchUrls, st.fetched, st.fetchedCount)
     if (promotedCount > 0) st.enqueuedCount = st.enqueued.count()
 
     // ---- per-round delta checkpoint (O(changes), not O(state)): ONE

@@ -73,7 +73,7 @@ class BloomShardsSpec extends AnyFunSuite {
 
     def run(dir: String, maxDriverBloomUrls: Long): graft.round.TableIO = {
       val io = new ParquetTableIO(spark, dir)
-      val driver = new RoundDriver(spark, io, params, maxDriverBloomUrls = maxDriverBloomUrls, bloomNumShards = 8)
+      val driver = new RoundDriver(spark, io, params, maxDriverBloomUrls = maxDriverBloomUrls)
       driver.init(seeds)
       driver.run(extracted, 3)
       io

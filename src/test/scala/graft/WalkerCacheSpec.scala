@@ -2,11 +2,12 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{CrawlParams, Rng, WalkRow}
 import graft.fixtures.PagesGen
-import graft.round.{CrawlEngine, ParquetTableIO, RoundDriver}
+import graft.round.{CrawlEngine, ParquetTableIO, RoundDriver, TableIO}
 import graft.walks.{IterativeWalker, SubgraphWalks, WalkAlgebra}
 
 /** Pins deterministic cache release (round-5 profiling finding): every
@@ -15,9 +16,11 @@ import graft.walks.{IterativeWalker, SubgraphWalks, WalkAlgebra}
   * orphaned slices lingered until the JVM's ContextCleaner, piling storage
   * pressure across a 48-query bench JVM or a many-round crawl (the round-4
   * bench's sporadic >60 s walker reps). After a drain, exactly ONE cache
-  * (the output) may remain; after a crawl run, only the live state-table
-  * checkpoints, none spread over more than 2 × defaultParallelism
-  * partitions (repeated unions would otherwise grow them every round).
+  * (the output) may remain; after a crawl run, none — `RoundDriver.run`
+  * releases its state checkpoints and seen set when it returns, and
+  * before that no state checkpoint is spread over more than 2 ×
+  * defaultParallelism partitions (repeated unions would otherwise grow
+  * them every round).
   */
 class WalkerCacheSpec extends AnyFunSuite {
   lazy val spark = graft.core.Sessions.local(4, appName = "walker-cache-spec")
@@ -52,10 +55,16 @@ class WalkerCacheSpec extends AnyFunSuite {
   }
 
   // the default configuration runs the resolver paths (miss-retry drain);
-  // the forced one runs the iterative walker AND iterative repair on every
-  // round — the drains whose per-hop checkpoints used to leak
-  Seq("default" -> None, "forced-iterative" -> Some(0L)).foreach { case (name, forced) =>
-    test(s"a $name crawl run leaves only the live state caches") {
+  // forced-iterative runs the iterative walker AND iterative repair on
+  // every round — the drains whose per-hop checkpoints used to leak;
+  // forced-sharded keeps the seen set as the checkpointed shard table
+  Seq(
+    "default" -> ((s: SparkSession, io: TableIO, p: CrawlParams) => new RoundDriver(s, io, p)),
+    "forced-iterative" -> ((s: SparkSession, io: TableIO, p: CrawlParams) =>
+      new RoundDriver(s, io, p, broadcastMaxEdges = 0L, iterativeRepairMinEntries = 0L)),
+    "forced-sharded" -> ((s: SparkSession, io: TableIO, p: CrawlParams) => new RoundDriver(s, io, p, maxDriverBloomUrls = 0L))
+  ).foreach { case (name, newDriver) =>
+    test(s"a $name crawl run leaves no cache behind") {
       import spark.implicits._
       clearAll()
       val cfg = PagesGen.Tiny
@@ -74,22 +83,32 @@ class WalkerCacheSpec extends AnyFunSuite {
       val v2 = (0L until cfg.pages.toLong).filter(PagesGen.isRepublished).map(pid => PagesGen.pageOf(cfg, pid, 2))
       val pagesDF = spark.createDataset(v1 ++ v2).toDF
       val dir = Files.createTempDirectory("walker-cache-crawl").toString
-      val io = new ParquetTableIO(spark, dir)
       val extracted = CrawlEngine.extractPages(spark, pagesDF).persist()
-      val driver = forced match {
-        case Some(gate) => new RoundDriver(spark, io, params, broadcastMaxEdges = gate, iterativeRepairMinEntries = gate)
-        case None => new RoundDriver(spark, io, params)
+      extracted.count()
+      val extractedIds = spark.sparkContext.getPersistentRDDs.keySet
+      // the live state caches, seen as the exit compaction writes its first
+      // table (round 4; the init round writes round 0)
+      val maxParts = 2 * spark.sparkContext.defaultParallelism
+      var live = 0
+      var wide = Seq.empty[String]
+      val io = new ParquetTableIO(spark, dir) {
+        override def write(round: Long, table: String, df: DataFrame): Unit = {
+          if (round == 4L && table == "nodes") {
+            val rdds = spark.sparkContext.getPersistentRDDs.filter(r => !extractedIds(r._1)).values.toSeq
+            live = rdds.size
+            wide = rdds.filter(_.getNumPartitions > maxParts).map(r => s"$r: ${r.getNumPartitions}")
+          }
+          super.write(round, table, df)
+        }
       }
+      val driver = newDriver(spark, io, params)
       driver.init(PagesGen.seedUrls(cfg, 3))
       driver.run(extracted, 4)
       extracted.unpersist()
+      assert(live > 0, "the exit compaction saw no live state caches")
+      assert(wide.isEmpty, s"state caches over $maxParts partitions: ${wide.mkString("; ")}")
       val left = spark.sparkContext.getPersistentRDDs
-      // live state = 7 table checkpoints (nodes, edges, walks, fetched,
-      // enqueued, leaks, visits); allow slack of 2 for in-flight cleaner work
-      assert(left.size <= 9, s"crawl leaked ${left.size} caches: ${left.values.map(_.toString).take(12).mkString("; ")}")
-      val maxParts = 2 * spark.sparkContext.defaultParallelism
-      val wide = left.values.filter(_.getNumPartitions > maxParts)
-      assert(wide.isEmpty, s"state caches over $maxParts partitions: ${wide.map(r => s"$r: ${r.getNumPartitions}").mkString("; ")}")
+      assert(left.isEmpty, s"crawl leaked ${left.size} caches: ${left.values.map(_.toString).take(12).mkString("; ")}")
       clearAll()
     }
   }
