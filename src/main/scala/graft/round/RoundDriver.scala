@@ -29,8 +29,18 @@ import graft.walks.{SubgraphWalks, WalkAlgebra}
   *    gives. Every committed round is resumable: loadState() replays the
   *    delta logs on top of the latest compaction (crash path covered by
   *    test via compactOnExit=false).
-  *  - A round's independent Spark actions overlap: the state tables are
-  *    re-checkpointed (and, on resume, loaded) concurrently, and each wave
+  *  - The `delta` write is one Spark job with no exchange: every part
+  *    reads what the round already materialized. `walk` rows are the
+  *    re-checkpointed walks filtered by the ids the round repaired or
+  *    generated (O(changes) ids held on the driver, shipped as a broadcast
+  *    set), `walk_removed` rows the ids it removed for leaks and
+  *    demotions, and `visit` rows each application's per-node delta sum —
+  *    the same persisted sum that updated the visits, so a node may have
+  *    two `visit` rows in a round and replay sums them per node.
+  *  - A round's independent Spark actions overlap: the tables the round
+  *    changed are re-checkpointed (and, on resume, all are loaded)
+  *    concurrently — an unchanged table keeps its checkpoint — the
+  *    end-of-round scalar job runs beside the delta write, and each wave
   *    resolves its links in one collect.
   *  - NO driver-held graph. The edges table is the only adjacency truth;
   *    per-wave deltas are computed with distributed joins, and walk
@@ -48,8 +58,13 @@ import graft.walks.{SubgraphWalks, WalkAlgebra}
   *  - totalWalks is pure arithmetic: every active node owns exactly
   *    walksPerNode walks, so repairs don't change the count and
   *    promote/demote/leak shift it by ±walksPerNode each.
+  *  - totalVisits (the rank denominator) is a driver scalar, like the
+  *    reference's counter (reference pkg/regraph/walks.go:20-21):
+  *    ONE job at the end of each round, over the new checkpoints, yields
+  *    it together with the `lineage` rows and, after promotions, the
+  *    enqueued count; on resume loadState's one scalar job yields it.
   *  - Walk repair emits ONLY changed walks (a narrow arrays_overlap scan of
-  *    the cached store), merged back with a broadcast anti-join + union;
+  *    the cached store), merged back with a broadcast-set filter + union;
   *    the store is re-materialized once per round via an eager
   *    localCheckpoint — no per-round parquet rewrite of the full store.
   *  - A bloom filter over the seen set (graft.frontier.SeenSet: a driver
@@ -130,6 +145,17 @@ object RoundDriver {
   private def partitionsFor(bytes: BigInt): Int =
     ((bytes + TargetFileBytes - 1) / TargetFileBytes).max(BigInt(1)).min(BigInt(Int.MaxValue)).toInt
 
+  /** The plan's size estimate of `df`, or — when `rows` is given — that many
+    * rows at Spark's per-row estimate of its schema: for a part cut from an
+    * O(state) table, whose plan estimate is that table's, by a count the
+    * driver already holds.
+    */
+  private def estimatedBytes(df: DataFrame, rows: Option[Long] = None): BigInt =
+    rows.fold(df.queryExecution.optimizedPlan.stats.sizeInBytes) { n =>
+      org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+        .getSizePerRow(df.queryExecution.analyzed.output) * n
+    }
+
   /** Columns of the per-round `delta` table after its `kind` tag: the
     * union of every part's columns, with one shared long key `id` (node
     * id, edge src, walkId, leak id or visit node). A part carries typed
@@ -163,25 +189,26 @@ object RoundDriver {
     }: _*)
   }
 
-  /** Eagerly checkpoint `tables` concurrently — they are independent Spark
-    * jobs, and one round's are too small to keep the executors busy one at
-    * a time — returning each checkpoint with its release handle, in order.
+  /** Runs `job` on a new thread — which inherits the caller's Spark local
+    * properties — and returns the wait for its result, rethrowing its
+    * failure: one round's independent Spark actions are too small to keep
+    * the executors busy one at a time.
     */
-  private def checkpointAll(tables: Seq[DataFrame]): Seq[(DataFrame, () => Unit)] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(tables.size)
+  private def overlap[T](job: => T): () => T = {
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
     try {
-      tables
-        .map { df =>
-          pool.submit(new java.util.concurrent.Callable[(DataFrame, () => Unit)] {
-            def call(): (DataFrame, () => Unit) = CacheOps.checkpointReleasable(df)
-          })
-        }
-        .map { f =>
-          try f.get()
-          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-        }
+      val f = pool.submit(new java.util.concurrent.Callable[T] { def call(): T = job })
+      () =>
+        try f.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
     } finally pool.shutdown()
   }
+
+  /** Eagerly checkpoint `tables` concurrently, returning each checkpoint
+    * with its release handle, in order.
+    */
+  private def checkpointAll(tables: Seq[DataFrame]): Seq[(DataFrame, () => Unit)] =
+    tables.map(df => overlap(CacheOps.checkpointReleasable(df))).map(_())
 }
 
 class RoundDriver(
@@ -226,13 +253,23 @@ class RoundDriver(
 
   private val GenWave = graft.spec.SequentialSpec.GenWave
 
+  /** GRAFT_PHASE_TIMING=1 prints each phase's wall time and Spark job
+    * count (its jobs run under a job group named for the phase, restored
+    * after); the phases of a round cover its `wallMillis`.
+    */
   private val phaseTiming = sys.env.get("GRAFT_PHASE_TIMING").contains("1")
   private def phase[T](round: Long, name: String)(body: => T): T = {
     if (!phaseTiming) body
     else {
+      val sc = spark.sparkContext
+      val (outer, group) = (Option(sc.getLocalProperty("spark.jobGroup.id")), s"graft-phase-r$round-$name")
+      sc.setJobGroup(group, s"round $round $name")
       val t = System.nanoTime()
-      val r = body
-      System.err.println(s"[phase r=$round] $name ${(System.nanoTime() - t) / 1000000} ms")
+      val r =
+        try body
+        finally outer.fold(sc.clearJobGroup())(sc.setJobGroup(_, null))
+      val jobs = sc.statusTracker.getJobIdsForGroup(group).length
+      System.err.println(s"[phase r=$round] $name ${(System.nanoTime() - t) / 1000000} ms $jobs jobs")
       r
     }
   }
@@ -253,6 +290,7 @@ class RoundDriver(
       var totalEdges: Long,
       var fetchedCount: Long,
       var enqueuedCount: Long,
+      var totalVisits: Long, // Σ visits.count at the last checkpoint
       var seen: SeenSet // bloom over `fetched`
   ) {
 
@@ -263,6 +301,31 @@ class RoundDriver(
       * growing storage pressure linearly in rounds run.
       */
     val cpRelease: mutable.Map[String, () => Unit] = mutable.Map.empty
+  }
+
+  /** Partitions of every state checkpoint: at most 2 × defaultParallelism
+    * (repeated unions would otherwise grow them round after round).
+    */
+  private def stateParts: Int = spark.sparkContext.defaultParallelism * 2
+
+  /** The row count, max and sum of each of `tables` (one long column each)
+    * in ONE job over their tagged union: one (counts, maxes, sums) triple
+    * per union partition, indexed by table. A union partition reads one
+    * partition of each table it holds, so a table's entries in it are that
+    * partition's own.
+    */
+  private def partitionScalars(tables: Seq[DataFrame]): Array[(Seq[Long], Seq[Long], Seq[Long])] = {
+    val k = tables.size
+    tables.zipWithIndex
+      .map { case (df, t) => df.toDF("v").select(lit(t).as("t"), $"v".cast(LongType).as("v")) }
+      .reduce(_ union _)
+      .as[(Int, Long)]
+      .mapPartitions { it =>
+        val (n, mx, s) = (new Array[Long](k), Array.fill(k)(-1L), new Array[Long](k))
+        it.foreach { case (t, v) => n(t) += 1; mx(t) = math.max(mx(t), v); s(t) += v }
+        Iterator((n.toSeq, mx.toSeq, s.toSeq))
+      }
+      .collect()
   }
 
   private def paramsDF: DataFrame =
@@ -384,27 +447,19 @@ class RoundDriver(
       fetched = fetched.union(kind("fetched").select($"url"))
       enqueued = enqueued.union(kind("enqueued").select($"url")).dropDuplicates("url")
       leaks = leaks.union(kind("leak").select("id", "url", "detectedRound", "status", "proofs"))
-      visits = applyVisitDeltas(visits, kind("visit").select($"id".as("node"), $"d"))
+      // a round's `visit` rows may name a node twice (one row per
+      // application); the sum per node is the round's net delta
+      visits = applyVisitDeltas(visits, sumVisitDeltas(kind("visit").select($"id".as("node"), $"d")))
     }
     val Seq((nodesC, nodesR), (edgesC, edgesR), (walksDF, walksR), (fetchedC, fetchedR), (enqueuedC, enqueuedR), (leaksC, leaksR), (visitsC, visitsR)) =
-      checkpointAll(Seq(nodes, edges, walks, fetched, enqueued, leaks, visits))
+      checkpointAll(Seq(nodes, edges, walks, fetched, enqueued, leaks, visits).map(_.coalesce(stateParts)))
     val walksC = walksDF.as[WalkRow]
-    // nextId and the four counts in ONE job: per partition, a row count and
-    // max value per tagged table, folded on the driver
-    val perPartition = Seq(nodesC.select($"id"), walksDF.select(lit(0L)), edgesC.select(lit(0L)), fetchedC.select(lit(0L)), enqueuedC.select(lit(0L)))
-      .zipWithIndex
-      .map { case (df, t) => df.toDF("v").select(lit(t).as("t"), $"v") }
-      .reduce(_ union _)
-      .as[(Int, Long)]
-      .mapPartitions { it =>
-        val (n, mx) = (new Array[Long](5), Array.fill(5)(-1L))
-        it.foreach { case (t, v) => n(t) += 1; mx(t) = math.max(mx(t), v) }
-        Iterator((n.toSeq, mx.toSeq))
-      }
-      .collect()
-    val counts = perPartition.map(_._1).foldLeft(Seq.fill(5)(0L))((a, b) => a.zip(b).map { case (x, y) => x + y })
+    // nextId, the four counts and Σ visits in ONE job
+    val perPartition = partitionScalars(
+      Seq(nodesC.select($"id"), walksDF.select(lit(0L)), edgesC.select(lit(0L)), fetchedC.select(lit(0L)), enqueuedC.select(lit(0L)), visitsC.select($"count"))
+    )
+    def total(t: Int): Long = perPartition.map(_._1(t)).sum
     val nextId = perPartition.map(_._2.head).foldLeft(-1L)(math.max) + 1
-    val Seq(_, totalWalks, totalEdges, fetchedCount, enqueuedCount) = counts
     val st = State(
       nodesC,
       edgesC,
@@ -414,11 +469,12 @@ class RoundDriver(
       visitsC,
       leaksC,
       nextId,
-      totalWalks,
-      totalEdges,
-      fetchedCount,
-      enqueuedCount,
-      SeenSet.build(spark, fetchedC, fetchedCount, maxDriverBloomUrls)
+      totalWalks = total(1),
+      totalEdges = total(2),
+      fetchedCount = total(3),
+      enqueuedCount = total(4),
+      totalVisits = perPartition.map(_._3(5)).sum,
+      seen = SeenSet.build(spark, fetchedC, total(3), maxDriverBloomUrls)
     )
     st.cpRelease ++= Seq(
       "nodes" -> nodesR,
@@ -482,14 +538,18 @@ class RoundDriver(
     io.commitRound(round) // idempotent
   }
 
-  /** Apply a (node, d) delta table to the exact visit counts. */
-  private def applyVisitDeltas(visits: DataFrame, deltas: DataFrame): DataFrame = {
-    val d = deltas.groupBy("node").agg(sum($"d").as("dsum"))
+  /** A (node, d) delta table summed per node, zero sums dropped. */
+  private def sumVisitDeltas(deltas: DataFrame): DataFrame =
+    deltas.groupBy("node").agg(sum($"d").as("d")).filter($"d" =!= 0)
+
+  /** Apply per-node summed (node, d) deltas ([[sumVisitDeltas]]) to the
+    * exact visit counts.
+    */
+  private def applyVisitDeltas(visits: DataFrame, summed: DataFrame): DataFrame =
     visits
-      .join(d, Seq("node"), "full_outer")
-      .select($"node", (coalesce($"count", lit(0L)) + coalesce($"dsum", lit(0L))).as("count"))
+      .join(summed, Seq("node"), "full_outer")
+      .select($"node", (coalesce($"count", lit(0L)) + coalesce($"d", lit(0L))).as("count"))
       .filter($"count" > 0)
-  }
 
   /** A wave's link resolution in ONE collect: each (author, link) row comes
     * back with the link's id when `nodes` knows it and its url when not.
@@ -565,14 +625,14 @@ class RoundDriver(
 
     // ---- 1./2. pending + politeness-capped priority cut (J9 anti-join,
     // bloom-prefiltered, robots-gated, W3 salted window). Rank = exact
-    // incremental visits / totalVisits.
-    val totalVisits0 = st.visits.agg(sum($"count")).as[Option[Long]].first().getOrElse(0L)
+    // incremental visits / totalVisits (a driver scalar, see the end of the
+    // round).
     val batchRows = phase(round, "schedule") {
       graft.frontier.Politeness
         .schedule(
           st.nodes,
           st.visits,
-          totalVisits0,
+          st.totalVisits,
           st.enqueued,
           st.fetched,
           params.batch,
@@ -586,7 +646,6 @@ class RoundDriver(
     if (batchRows.isEmpty) return None
 
     val batchUrls: Vector[String] = batchRows.map(_.getString(0)).toVector
-    val batchIds: Map[String, Long] = batchRows.map(r => r.getString(0) -> r.getLong(1)).toMap
     val statusById: mutable.Map[Long, String] =
       mutable.Map(batchRows.map(r => r.getLong(1) -> r.getString(2)): _*)
 
@@ -611,38 +670,68 @@ class RoundDriver(
       .join(batchDF, Seq("url"))
       .select($"url", $"id", $"status", $"ver", $"outlinks", $"rejected", $"has_secret", $"secret_proofs", $"suspect_proofs")
       .persist()
-    val verInfo = phase(round, "fetch") {
+    // one row per fetched version: (url, id, ver, rejected, has_secret,
+    // has suspects, outlink count, proofs — secret ++ suspect, null when
+    // either is)
+    val fetchedRows = phase(round, "fetch") {
       batchExtracted
-        .select($"url", $"id", $"ver", $"rejected", $"has_secret", size($"suspect_proofs") > 0, coalesce(size($"outlinks"), lit(0)))
+        .select(
+          $"url",
+          $"id",
+          $"ver",
+          $"rejected",
+          $"has_secret",
+          size($"suspect_proofs") > 0,
+          coalesce(size($"outlinks"), lit(0)),
+          concat($"secret_proofs", $"suspect_proofs")
+        )
         .collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getInt(2), r.getBoolean(3), r.getBoolean(4), r.getBoolean(5), r.getInt(6)))
     }
+    val verInfo =
+      fetchedRows.map(r => (r.getString(0), r.getLong(1), r.getInt(2), r.getBoolean(3), r.getBoolean(4), r.getBoolean(5), r.getInt(6)))
 
     // per-round delta logs (all O(changes))
     val nodesAddedParts = mutable.ArrayBuffer.empty[DataFrame]
     var newNodesCount = 0L
-    val nodeUpdateParts = mutable.ArrayBuffer.empty[DataFrame] // (id, status, promotedRound?, demotedRound?)
+    // (id, status, promotedRound?, demotedRound?) with its row count when
+    // cut from the nodes table
+    val nodeUpdateParts = mutable.ArrayBuffer.empty[(DataFrame, Option[Long])]
     val touchedAuthors = mutable.LinkedHashSet.empty[Long] // authors whose adjacency changed
     val roundAdj = mutable.Map.empty[Long, Array[Long]] // FINAL adjacency of touched authors (O(changes))
     val visitDeltaParts = mutable.ArrayBuffer.empty[DataFrame] // (node, d)
-    // every visit delta applied this round, kept for the O(changes) delta
-    // log (the visits table itself is only written at compactions — a full
-    // per-round rewrite would be O(crawled graph) IO, the same scale bug
-    // as the round-3 fetch scan)
-    val roundVisitDeltas = mutable.ArrayBuffer.empty[DataFrame]
-    // replay logs are NET-of-round: ids touched (replaced/removed/created)
-    // plus the FINAL version of each touched id — a walk repaired twice in
-    // one round, or repaired then demoted, must not resurrect stale rows.
-    // Net is computed over an event log of the (small) changed sets, never
-    // a pass over the full store: (seq, isAdd, walk).
-    var walkEventSeq = 0
-    val walkEventParts = mutable.ArrayBuffer.empty[DataFrame] // (seq, isAdd, walkId, start, path)
+    // each application's per-node summed visit deltas, persisted: it updates
+    // `visits` and is the round's `visit` log rows (the visits table itself
+    // is only written at compactions — a full per-round rewrite would be
+    // O(crawled graph) IO, the same scale bug as the round-3 fetch scan)
+    val visitSums = mutable.ArrayBuffer.empty[DataFrame]
+    // the walk log is net of the round: a `walk` row per id the round
+    // repaired or generated, cut from the re-checkpointed store (its final
+    // version), and a `walk_removed` row per id it removed (leaks and
+    // demotions — a removed walk's start is leaked or demoted, so nothing
+    // later in the round re-adds it). Both id sets are O(changes) and held
+    // on the driver.
+    val touchedWalkIds = mutable.Set.empty[Long]
+    val removedWalkIds = mutable.ArrayBuffer.empty[Long]
+    // the walks of `nodes`: walkIds = node * walksPerNode + i, as everywhere
+    // else
+    def walkIdsOf(nodes: Seq[Long]): Seq[Long] =
+      nodes.flatMap(n => (0 until params.walksPerNode).map(n * params.walksPerNode + _))
     var enqueuedAdd: Option[DataFrame] = None
+    // state tables this round changed; only they are re-checkpointed
+    val dirty = mutable.Set("fetched")
     val tmpCaches = mutable.ArrayBuffer.empty[Dataset[_]]
     // release handles for checkpoint-backed round-temporaries (walker
     // outputs) — unpersist can't release those, see core.CacheOps
     val tmpReleases = mutable.ArrayBuffer.empty[() => Unit]
     tmpCaches += batchExtracted
+    // `c` ∈ `ids` through one broadcast set, released with the round's
+    // temporaries: no exchange — so no extra job in each plan that reads
+    // it — and no literal list in the plan, at any size the driver holds
+    def isIn(ids: Iterable[Long], c: Column): Column = {
+      val b = spark.sparkContext.broadcast(ids.toSet)
+      tmpReleases += (() => b.destroy())
+      udf((id: Long) => b.value.contains(id)).apply(c)
+    }
 
     // per-round on-demand adjacency cache over the distributed edges table
     // (reused across waves; delta authors are overwritten in place) —
@@ -692,12 +781,13 @@ class RoundDriver(
           newNodesCount += nNew
           nodesAddedParts += newNodesDF
           st.nodes = st.nodes.union(newNodesDF)
+          dirty += "nodes"
         }
 
         // per-author deltas: old follows via the resolver (one broadcast
         // semi-join against the distributed edges table, cached across
         // waves), new follows from the link resolution above
-        val oldLists = resolver.lists(waveAuthors)
+        val oldLists = phase(round, s"old-lists-w$wave")(resolver.lists(waveAuthors))
         val deltas: Map[Long, DeltaRow] = waveAuthors.iterator.flatMap { author =>
           val d = WalkAlgebra.newDelta(
             author,
@@ -723,6 +813,7 @@ class RoundDriver(
           st.edges = st.edges
             .join(touchedDF, st.edges("src") === col("aid"), "left_anti")
             .union(spark.createDataset(newEdgeRows).toDF)
+          dirty += "edges"
 
           // distributed walk repair against the wave's deltas (the reference
           // updates the graph before repairing, engine.go:346-369): small
@@ -741,17 +832,10 @@ class RoundDriver(
           tmpReleases += releaseChanged
           walksChanged += nChanged
           if (nChanged > 0) {
-            val changedIds = changed.map(_._1.walkId).toDF("rwid").persist()
-            tmpCaches += changedIds
-            st.walks = st.walks
-              .join(broadcast(changedIds), st.walks("walkId") === $"rwid", "left_anti")
-              .as[WalkRow]
-              .union(changed.map(_._1))
-            walkEventSeq += 1
-            walkEventParts += changed
-              .map(_._1)
-              .toDF
-              .select(lit(walkEventSeq).as("seq"), lit(true).as("isAdd"), $"walkId", $"start", $"path")
+            val changedIds = changed.map(_._1.walkId).collect()
+            st.walks = st.walks.filter(!isIn(changedIds, $"walkId")).union(changed.map(_._1))
+            dirty += "walks"
+            touchedWalkIds ++= changedIds
             visitDeltaParts += changed
               .flatMap { case (nw, old) => old.map(n => (n, -1L)) ++ nw.path.map(n => (n, 1L)) }
               .toDF("node", "d")
@@ -776,66 +860,79 @@ class RoundDriver(
     val suspectedIds: Seq[Long] = suspectedSet.filterNot(leakedSet.contains).toSeq
     val leakedActive = leakedIds.filter(id => statusById.getOrElse(id, "") == NodeStatus.Active)
     val leakRecordParts = mutable.ArrayBuffer.empty[DataFrame]
-    if (leakedIds.nonEmpty || suspectedIds.nonEmpty) {
-      val recIds = leakedIds.map((_, LeakStatus.Confirmed)) ++ suspectedIds.map((_, LeakStatus.Suspected))
-      val recDF = spark.createDataset(recIds).toDF("rid", "rstatus")
-      val proofs = batchExtracted
-        .select(
-          $"id".as("rid"),
-          explode(concat($"secret_proofs", $"suspect_proofs")).as("proof")
-        )
-        .groupBy($"rid")
-        .agg(sort_array(collect_set($"proof")).as("proofs"))
-      val newRecs = recDF
-        .join(st.leaks.select($"id".as("rid"), lit(1).as("already")), Seq("rid"), "left")
-        .filter($"already".isNull || $"rstatus" === LeakStatus.Confirmed)
-        .join(st.leaks.filter($"status" === LeakStatus.Confirmed).select($"id".as("rid"), lit(1).as("conf")), Seq("rid"), "left")
-        .filter($"conf".isNull)
-        .join(st.nodes.select($"id".as("rid"), $"url"), Seq("rid"))
-        .join(proofs, Seq("rid"), "left")
-        .select(
-          $"rid".as("id"),
-          $"url",
-          lit(round).as("detectedRound"),
-          $"rstatus".as("status"),
-          coalesce($"proofs", typedLit(Array.empty[String])).as("proofs")
-        )
-        .persist()
-      tmpCaches += newRecs
-      if (newRecs.count() > 0) {
-        leakRecordParts += newRecs
-        st.leaks = st.leaks.union(newRecs)
-      }
+    // removes the walks starting at `starts` from the store. EAGER
+    // checkpoint, not a lazy persist: the removed walks' visit deltas may
+    // be consumed after the rematerialize step releases the walks
+    // checkpoint they are read from — a lazy cache would recompute from a
+    // released local checkpoint (no lineage) and crash
+    def removeWalksOf(starts: Seq[Long]): Unit = {
+      val removing = isIn(starts, $"start")
+      val (removed, relRemoved) = CacheOps.checkpointReleasable(st.walks.filter(removing))
+      tmpReleases += relRemoved
+      visitDeltaParts += removed.flatMap(w => w.path.map(n => (n, -1L))).toDF("node", "d")
+      removedWalkIds ++= walkIdsOf(starts)
+      st.walks = st.walks.filter(!removing)
+      st.totalWalks -= params.walksPerNode.toLong * starts.size
+      dirty += "walks"
     }
-    if (leakedIds.nonEmpty) {
-      leakedIds.foreach(id => statusById(id) = NodeStatus.Leaked)
-      nodeUpdateParts += spark
-        .createDataset(leakedIds)
-        .toDF("id")
-        .withColumn("status", lit(NodeStatus.Leaked))
-        .withColumn("promotedRound", lit(null).cast("long"))
-        .withColumn("demotedRound", lit(null).cast("long"))
-      val leakedDF = broadcast(spark.createDataset(leakedIds).toDF("lid"))
-      st.nodes = st.nodes
-        .join(leakedDF, st.nodes("id") === col("lid"), "left")
-        .withColumn("status", when(col("lid").isNotNull, NodeStatus.Leaked).otherwise($"status"))
-        .drop("lid")
-      if (leakedActive.nonEmpty) {
-        val laDF = broadcast(spark.createDataset(leakedActive).toDF("lid"))
-        // EAGER checkpoint, not a lazy persist: `removed` is consumed (visit
-        // deltas, walk-event log) only after the rematerialize step below
-        // releases the walks checkpoint it reads from — a lazy cache would
-        // recompute from a released local checkpoint (no lineage) and crash
-        val (removed, relRemoved) = graft.core.CacheOps.checkpointReleasable(
-          st.walks.join(laDF, st.walks("start") === col("lid"), "left_semi").as[WalkRow]
-        )
-        tmpReleases += relRemoved
-        visitDeltaParts += removed.flatMap(w => w.path.map(n => (n, -1L))).toDF("node", "d")
-        walkEventSeq += 1
-        walkEventParts += removed.toDF
-          .select(lit(walkEventSeq).as("seq"), lit(false).as("isAdd"), $"walkId", $"start", $"path")
-        st.walks = st.walks.join(laDF, st.walks("start") === col("lid"), "left_anti").as[WalkRow]
-        st.totalWalks -= params.walksPerNode.toLong * leakedActive.size
+    // sums the pending visit deltas ONCE — persisted, as the visits update
+    // and the `visit` log rows both read the sum — and applies them
+    def applyPendingVisitDeltas(): Unit = if (visitDeltaParts.nonEmpty) {
+      val summed = sumVisitDeltas(visitDeltaParts.reduce(_ union _)).persist()
+      tmpCaches += summed
+      visitSums += summed
+      visitDeltaParts.clear()
+      st.visits = applyVisitDeltas(st.visits, summed)
+      dirty += "visits"
+    }
+
+    phase(round, "leak-scan") {
+      // the new leak records, O(batch), built on the driver: a flagged page
+      // is recorded unless it already is — a confirmed one unless it
+      // already is as confirmed — with the sorted distinct proofs of all
+      // its versions; only the recorded statuses of the flagged ids come
+      // from `leaks`, in one filtered collect
+      if (leakedIds.nonEmpty || suspectedIds.nonEmpty) {
+        val recIds = leakedIds.map((_, LeakStatus.Confirmed)) ++ suspectedIds.map((_, LeakStatus.Suspected))
+        val recorded: Map[Long, Seq[String]] = st.leaks
+          .filter($"id".isInCollection(recIds.map(_._1)))
+          .select($"id", $"status")
+          .as[(Long, String)]
+          .collect()
+          .groupBy(_._1)
+          .map { case (id, rs) => id -> rs.map(_._2).toSeq }
+        val urlOf = batchRows.map(r => r.getLong(1) -> r.getString(0)).toMap
+        val proofsOf = fetchedRows.groupBy(_.getLong(1)).map { case (id, rs) =>
+          id -> rs.filterNot(_.isNullAt(7)).flatMap(_.getSeq[String](7)).filter(_ != null).distinct.sorted
+        }
+        val newRecs = recIds.collect {
+          case (id, status)
+              if (!recorded.contains(id) || status == LeakStatus.Confirmed) &&
+                !recorded.getOrElse(id, Nil).contains(LeakStatus.Confirmed) =>
+            LeakRecord(id, urlOf(id), round, status, proofsOf.getOrElse(id, Array.empty[String]))
+        }
+        if (newRecs.nonEmpty) {
+          val recs = spark.createDataset(newRecs).toDF
+          leakRecordParts += recs
+          st.leaks = st.leaks.union(recs)
+          dirty += "leaks"
+        }
+      }
+      if (leakedIds.nonEmpty) {
+        leakedIds.foreach(id => statusById(id) = NodeStatus.Leaked)
+        nodeUpdateParts += spark
+          .createDataset(leakedIds)
+          .toDF("id")
+          .withColumn("status", lit(NodeStatus.Leaked))
+          .withColumn("promotedRound", lit(null).cast("long"))
+          .withColumn("demotedRound", lit(null).cast("long")) -> None
+        val leakedDF = broadcast(spark.createDataset(leakedIds).toDF("lid"))
+        st.nodes = st.nodes
+          .join(leakedDF, st.nodes("id") === col("lid"), "left")
+          .withColumn("status", when(col("lid").isNotNull, NodeStatus.Leaked).otherwise($"status"))
+          .drop("lid")
+        dirty += "nodes"
+        if (leakedActive.nonEmpty) removeWalksOf(leakedActive)
       }
     }
 
@@ -846,17 +943,15 @@ class RoundDriver(
     var demotedCount = 0L
     val scanRan = ratio >= params.activation && totalWalks > 0
 
-    // the scan needs post-repair ranks → apply wave+leak visit deltas now
-    if (visitDeltaParts.nonEmpty) {
-      val v = applyVisitDeltas(st.visits, visitDeltaParts.reduce(_ union _)).persist()
-      tmpCaches += v
-      st.visits = v
-      roundVisitDeltas ++= visitDeltaParts
-      visitDeltaParts.clear()
-    }
-
     if (scanRan) {
-      val tv = st.visits.agg(sum($"count")).as[Option[Long]].first().getOrElse(0L)
+      // the scan needs post-repair ranks → apply wave+leak visit deltas
+      // now; the sum job also materializes the updated visits
+      val tv = phase(round, "arbiter-visits") {
+        applyPendingVisitDeltas()
+        st.visits = st.visits.persist()
+        tmpCaches += st.visits
+        st.visits.agg(sum($"count")).as[Option[Long]].first().getOrElse(0L)
+      }
       if (tv > 0) {
         val baseRank = params.walksPerNode.toDouble / tv
         val promotionT = baseRank * params.promotion
@@ -885,27 +980,18 @@ class RoundDriver(
         val demotedDF = rankedNodes.filter($"transition" === "demote").select($"id")
         val promotedDF = rankedNodes.filter($"transition" === "promote").select($"id", $"url")
 
-        if (demotedCount > 0) {
-          // eager checkpoint for the same reason as the leak path above
-          val (removed, relRemoved) = graft.core.CacheOps.checkpointReleasable(
-            st.walks.join(demotedDF, st.walks("start") === demotedDF("id"), "left_semi").as[WalkRow]
-          )
-          tmpReleases += relRemoved
-          visitDeltaParts += removed.flatMap(w => w.path.map(n => (n, -1L))).toDF("node", "d")
-          walkEventSeq += 1
-          walkEventParts += removed.toDF
-            .select(lit(walkEventSeq).as("seq"), lit(false).as("isAdd"), $"walkId", $"start", $"path")
-          st.walks = st.walks.join(demotedDF, st.walks("start") === demotedDF("id"), "left_anti").as[WalkRow]
-          st.totalWalks -= params.walksPerNode.toLong * demotedCount
+        if (demotedCount > 0) phase(round, "demote") {
+          removeWalksOf(demotedDF.as[Long].collect().toSeq)
           nodeUpdateParts += demotedDF
             .withColumn("status", lit(NodeStatus.Inactive))
             .withColumn("promotedRound", lit(null).cast("long"))
-            .withColumn("demotedRound", lit(round))
+            .withColumn("demotedRound", lit(round)) -> Some(demotedCount)
         }
-        if (promotedCount > 0) {
+        if (promotedCount > 0) phase(round, "promote") {
           val p = params
           val r = round
           val gw = GenWave
+          val promotedIds = promotedDF.select($"id").as[Long].collect().sorted.toSeq
           val (newWalks, newWalksRelease) =
             if (st.totalEdges > broadcastMaxEdges) {
               // scale path: one shuffle join per hop, no driver sub-adjacency.
@@ -920,15 +1006,12 @@ class RoundDriver(
                 .generateReleasable(spark, promotedDF.select($"id").as[Long], adjDS, r, gw, p)
             } else {
               // bounded path: resolve only the neighborhood the walks visit
-              val promotedIds = promotedDF.select($"id").as[Long].collect().sorted.toSeq
               SubgraphWalks.generateAll(spark, promotedIds, resolver, r, gw, p)
             }
           tmpReleases += newWalksRelease
           st.walks = st.walks.union(newWalks)
           st.totalWalks += params.walksPerNode.toLong * promotedCount
-          walkEventSeq += 1
-          walkEventParts += newWalks.toDF
-            .select(lit(walkEventSeq).as("seq"), lit(true).as("isAdd"), $"walkId", $"start", $"path")
+          touchedWalkIds ++= walkIdsOf(promotedIds)
           visitDeltaParts += newWalks.flatMap(w => w.path.map(n => (n, 1L))).toDF("node", "d")
           st.enqueued = st.enqueued.union(promotedDF.select($"url")).dropDuplicates("url")
           enqueuedAdd = Some(promotedDF.select($"url"))
@@ -936,103 +1019,107 @@ class RoundDriver(
             .select($"id")
             .withColumn("status", lit(NodeStatus.Active))
             .withColumn("promotedRound", lit(round))
-            .withColumn("demotedRound", lit(null).cast("long"))
+            .withColumn("demotedRound", lit(null).cast("long")) -> Some(promotedCount)
+          dirty ++= Seq("walks", "enqueued")
         }
 
         // status transitions on the nodes table
-        st.nodes = st.nodes
-          .join(demotedDF.withColumnRenamed("id", "did"), $"id" === $"did", "left")
-          .join(promotedDF.select($"id".as("pid")), $"id" === $"pid", "left")
-          .withColumn(
-            "status",
-            when($"did".isNotNull, NodeStatus.Inactive)
-              .when($"pid".isNotNull, NodeStatus.Active)
-              .otherwise($"status")
-          )
-          .withColumn("demotedRound", when($"did".isNotNull, lit(round)).otherwise($"demotedRound"))
-          .withColumn("promotedRound", when($"pid".isNotNull, lit(round)).otherwise($"promotedRound"))
-          .drop("did", "pid")
+        if (demotedCount + promotedCount > 0) {
+          st.nodes = st.nodes
+            .join(demotedDF.withColumnRenamed("id", "did"), $"id" === $"did", "left")
+            .join(promotedDF.select($"id".as("pid")), $"id" === $"pid", "left")
+            .withColumn(
+              "status",
+              when($"did".isNotNull, NodeStatus.Inactive)
+                .when($"pid".isNotNull, NodeStatus.Active)
+                .otherwise($"status")
+            )
+            .withColumn("demotedRound", when($"did".isNotNull, lit(round)).otherwise($"demotedRound"))
+            .withColumn("promotedRound", when($"pid".isNotNull, lit(round)).otherwise($"promotedRound"))
+            .drop("did", "pid")
+          dirty += "nodes"
+        }
       }
     }
+    // the round's remaining visit deltas: wave+leak ones when the scan did
+    // not run, else promote/demote ones
+    applyPendingVisitDeltas()
 
-    // promote/demote visit deltas
-    if (visitDeltaParts.nonEmpty) {
-      st.visits = applyVisitDeltas(st.visits, visitDeltaParts.reduce(_ union _))
-      roundVisitDeltas ++= visitDeltaParts
-      visitDeltaParts.clear()
-    }
-
-    // ---- re-materialize in-memory state (one pass; no parquet rewrite of
-    // the full store) and cut lineage: the seven state tables are
-    // checkpointed concurrently, each coalesced to at most 2 ×
-    // defaultParallelism partitions (repeated unions would otherwise grow
-    // their partition counts round after round), and only then — every new
-    // table is computed from the old ones — are the previous checkpoints
-    // released. Small tables too: status updates add two joins per round,
-    // and Catalyst replanning of deep chains costs more than materializing.
-    val targetParts = spark.sparkContext.defaultParallelism * 2
-    val oldWalks = st.walks
+    // ---- re-materialize the tables this round changed (one pass; no
+    // parquet rewrite of the full store) and cut lineage: they are
+    // checkpointed concurrently, each coalesced to stateParts partitions,
+    // and only then — every new table is computed from the old ones — are
+    // their previous checkpoints released. A table the round left unchanged
+    // keeps its checkpoint and its release handle. Small tables too: status
+    // updates add two joins per round, and Catalyst replanning of deep
+    // chains costs more than materializing.
     phase(round, "rematerialize") {
-      val keys = Seq("walks", "visits", "nodes", "edges", "fetched", "enqueued", "leaks")
-      val cps = checkpointAll(
-        Seq(st.walks.toDF, st.visits, st.nodes, st.edges, st.fetched.union(batchUrls.toDF("url")), st.enqueued, st.leaks)
-          .map(_.coalesce(targetParts))
-      )
-      keys.zip(cps).foreach { case (key, (_, rel)) =>
+      val tables = Seq[(String, DataFrame, DataFrame => Unit)](
+        ("walks", st.walks.toDF, cp => st.walks = cp.as[WalkRow]),
+        ("visits", st.visits, st.visits = _),
+        ("nodes", st.nodes, st.nodes = _),
+        ("edges", st.edges, st.edges = _),
+        ("fetched", st.fetched.union(batchUrls.toDF("url")), st.fetched = _),
+        ("enqueued", st.enqueued, st.enqueued = _),
+        ("leaks", st.leaks, st.leaks = _)
+      ).filter(t => dirty(t._1))
+      val cps = checkpointAll(tables.map(_._2.coalesce(stateParts)))
+      tables.zip(cps).foreach { case ((key, _, set), (cp, rel)) =>
         st.cpRelease.get(key).foreach(_())
         st.cpRelease(key) = rel
+        set(cp)
       }
-      val Seq(walks, visits, nodes, edges, fetched, enqueued, leaks) = cps.map(_._1)
-      st.walks = walks.as[WalkRow]
-      st.visits = visits
-      st.nodes = nodes
-      st.edges = edges
-      st.fetched = fetched
-      st.enqueued = enqueued
-      st.leaks = leaks
     }
-    oldWalks.unpersist()
     st.fetchedCount += batchUrls.size
-    st.seen = st.seen.add(batchUrls, st.fetched, st.fetchedCount)
-    if (promotedCount > 0) st.enqueuedCount = st.enqueued.count()
+    phase(round, "seen-add") {
+      st.seen = st.seen.add(batchUrls, st.fetched, st.fetchedCount)
+    }
+
+    // ---- the round's scalars in ONE job over the new checkpoints,
+    // overlapping the delta write: the walks per partition (the lineage
+    // rows; empty partitions absent), Σ visits (the next round's
+    // totalVisits) and, after promotions, the enqueued count
+    val scalarTables =
+      Seq(st.walks.select(spark_partition_id()), st.visits.select($"count")) ++ enqueuedAdd.map(_ => st.enqueued.select(lit(0L)))
+    val scalars = overlap(phase(round, "scalars")(partitionScalars(scalarTables)))
 
     // ---- per-round delta checkpoint (O(changes), not O(state)): ONE
     // table, every part tagged with its kind, in ⌈estimated bytes /
-    // 128 MiB⌉ files
+    // 128 MiB⌉ files. Every part reads what the round already materialized
+    // — local relations, the round's caches and checkpoints, the new walks
+    // checkpoint filtered by the touched ids — so the write is one job with
+    // no exchange. A part cut from an O(state) table is sized by its row
+    // count.
     phase(round, "delta-write") {
-      val parts = mutable.ArrayBuffer.empty[DataFrame]
-      parts ++= nodesAddedParts.map(deltaPart(lit("node"), _))
-      parts ++= nodeUpdateParts.map(deltaPart(lit("node_update"), _))
+      val parts = mutable.ArrayBuffer.empty[(DataFrame, BigInt)]
+      def add(kind: String, df: DataFrame, key: String = "id", rows: Option[Long] = None): Unit =
+        parts += deltaPart(lit(kind), df, key) -> estimatedBytes(df, rows)
+      nodesAddedParts.foreach(add("node", _))
+      nodeUpdateParts.foreach { case (df, rows) => add("node_update", df, rows = rows) }
       if (touchedAuthors.nonEmpty) {
-        parts += deltaPart(lit("edge_src"), touchedAuthors.toSeq.toDF("src"), key = "src")
+        add("edge_src", touchedAuthors.toSeq.toDF("src"), key = "src")
         // FINAL adjacency of touched authors (net of all waves this round)
         val finalEdges = touchedAuthors.toSeq.flatMap(a => roundAdj.getOrElse(a, Array.empty[Long]).map(dst => EdgeRow(a, dst)))
-        if (finalEdges.nonEmpty) parts += deltaPart(lit("edge"), spark.createDataset(finalEdges).toDF, key = "src")
+        if (finalEdges.nonEmpty) add("edge", spark.createDataset(finalEdges).toDF, key = "src")
       }
-      if (walkEventParts.nonEmpty) {
-        // each touched walk's last event: its final version, or its removal
-        val w = org.apache.spark.sql.expressions.Window.partitionBy($"walkId").orderBy($"seq".desc)
-        val last = walkEventParts.reduce(_ union _).withColumn("rn", row_number().over(w)).filter($"rn" === 1)
-        parts += deltaPart(
-          when($"isAdd", lit("walk")).otherwise(lit("walk_removed")),
-          last.select($"isAdd", $"walkId", when($"isAdd", $"start").as("start"), when($"isAdd", $"path").as("path")),
-          key = "walkId"
+      if (touchedWalkIds.nonEmpty)
+        add(
+          "walk",
+          st.walks.filter(isIn(touchedWalkIds, $"walkId")).toDF,
+          key = "walkId",
+          rows = Some(walksChanged + params.walksPerNode.toLong * promotedCount)
         )
-      }
-      parts ++= leakRecordParts.map(deltaPart(lit("leak"), _))
-      parts += deltaPart(lit("fetched"), batchUrls.toDF("url"))
-      parts ++= enqueuedAdd.map(deltaPart(lit("enqueued"), _))
-      // visit-count deltas, net per node, zeros dropped — the full visits
-      // table lands only at compactions, like every other state table
-      if (roundVisitDeltas.nonEmpty)
-        parts += deltaPart(
-          lit("visit"),
-          roundVisitDeltas.reduce(_ union _).groupBy("node").agg(sum($"d").as("d")).filter($"d" =!= 0),
-          key = "node"
-        )
-      val delta = parts.reduce(_ union _)
-      io.write(round, "delta", delta.coalesce(partitionsFor(delta.queryExecution.optimizedPlan.stats.sizeInBytes)))
+      if (removedWalkIds.nonEmpty) add("walk_removed", removedWalkIds.toSeq.toDF("walkId"), key = "walkId")
+      leakRecordParts.foreach(add("leak", _))
+      add("fetched", batchUrls.toDF("url"))
+      enqueuedAdd.foreach(add("enqueued", _, rows = Some(promotedCount)))
+      visitSums.foreach(add("visit", _, key = "node"))
+      io.write(round, "delta", parts.map(_._1).reduce(_ union _).coalesce(partitionsFor(parts.map(_._2).sum)))
     }
+    val perPartition = scalars()
+    val lineage = perPartition.collect { case (n, mx, _) if n.head > 0 => (mx.head.toInt, n.head, round) }.sortBy(_._1)
+    st.totalVisits = perPartition.map(_._3(1)).sum
+    if (enqueuedAdd.nonEmpty) st.enqueuedCount = perPartition.map(_._1(2)).sum
 
     val wallMillis = System.currentTimeMillis() - t0
     val m = RoundMetrics(
@@ -1056,11 +1143,7 @@ class RoundDriver(
     )
     io.write(round, "metrics", spark.createDataset(Seq(m)).toDF)
     // per-partition lineage of the walk state (north_rule observability)
-    io.write(
-      round,
-      "lineage",
-      st.walks.groupBy(spark_partition_id().as("partition")).count().withColumn("round", lit(round))
-    )
+    io.write(round, "lineage", lineage.toSeq.toDF("partition", "count", "round"))
     io.commitRound(round)
 
     tmpCaches.foreach(_.unpersist())

@@ -121,6 +121,21 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
       .toMap
   }
 
+  /** The visits table at the last compaction, as node → count, after
+    * asserting it has one row per node and no zero row.
+    */
+  def engineVisits(dir: String): Map[Long, Long] = {
+    val io = new ParquetTableIO(spark, dir)
+    val rows = io.read(io.lastCompleteRound(), "visits").collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(rows.map(_._1).distinct.length === rows.length, "visits has a node twice")
+    assert(rows.forall(_._2 > 0), "visits has a zero row")
+    rows.toMap
+  }
+
+  /** `explode(walks.path)` counted per node: what `visits` must equal. */
+  def visitsOf(walks: Map[Long, Seq[Long]]): Map[Long, Long] =
+    walks.values.flatten.groupBy(identity).map { case (n, vs) => n -> vs.size.toLong }
+
   test("engine matches spec byte-for-byte: crawl order, seen set, statuses, walks") {
     val dir = Files.createTempDirectory("crawl-eq").toString
     val engine = runEngine(rounds, dir)
@@ -283,6 +298,10 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     assert(nA === nB, "node table differs")
     assert(aA === aB, "adjacency differs")
     assert(wA === wB, "walk store differs")
+    // the replayed `visit` rows rebuild the exact visit index
+    val (vA, vB) = (engineVisits(dirA), engineVisits(dirB))
+    assert(vB === visitsOf(wB), "replayed visits differ from the walk store")
+    assert(vB === vA, "replayed visits differ from the uncrashed run's")
   }
 
   test("replay refuses a committed round with legacy per-table delta logs, naming its dir") {
@@ -313,5 +332,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     activeIds.foreach { id =>
       assert(byStart.getOrElse(id, Nil).size === params.walksPerNode, s"node $id walk count")
     }
+    // the visit index is exactly the walks' node occurrences
+    assert(engineVisits(dir) === visitsOf(walks))
   }
 }

@@ -2,7 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{CrawlParams, Rng, WalkRow}
@@ -20,7 +24,8 @@ import graft.walks.{IterativeWalker, SubgraphWalks, WalkAlgebra}
   * releases its state checkpoints and seen set when it returns, and
   * before that no state checkpoint is spread over more than 2 ×
   * defaultParallelism partitions (repeated unions would otherwise grow
-  * them every round).
+  * them every round). The crawl runs also pin the round's log writes: no
+  * `delta` write plans a shuffle, and the `lineage` rows count the walks.
   */
 class WalkerCacheSpec extends AnyFunSuite {
   lazy val spark = graft.core.Sessions.local(4, appName = "walker-cache-spec")
@@ -91,8 +96,17 @@ class WalkerCacheSpec extends AnyFunSuite {
       val maxParts = 2 * spark.sparkContext.defaultParallelism
       var live = 0
       var wide = Seq.empty[String]
+      // every round's `delta` write reads only what the round materialized:
+      // its executed plan holds no shuffle (AQE wraps the plan, so collect
+      // through the helper)
+      val shuffled = mutable.ArrayBuffer.empty[String]
+      val plans = new AdaptiveSparkPlanHelper {}
       val io = new ParquetTableIO(spark, dir) {
         override def write(round: Long, table: String, df: DataFrame): Unit = {
+          if (table == "delta") {
+            val exchanges = plans.collect(df.queryExecution.executedPlan) { case s: ShuffleExchangeExec => s.outputPartitioning }
+            if (exchanges.nonEmpty) shuffled += s"round $round: ${exchanges.mkString(", ")}"
+          }
           if (round == 4L && table == "nodes") {
             val rdds = spark.sparkContext.getPersistentRDDs.filter(r => !extractedIds(r._1)).values.toSeq
             live = rdds.size
@@ -105,6 +119,10 @@ class WalkerCacheSpec extends AnyFunSuite {
       driver.init(PagesGen.seedUrls(cfg, 3))
       driver.run(extracted, 4)
       extracted.unpersist()
+      assert(shuffled.isEmpty, s"delta writes with a shuffle: ${shuffled.mkString("\n")}")
+      // the last round's lineage rows count its walks, partition by partition
+      val lineage = io.read(4L, "lineage").select("count").as[Long].collect()
+      assert(lineage.nonEmpty && lineage.sum === io.read(4L, "walks").count())
       assert(live > 0, "the exit compaction saw no live state caches")
       assert(wide.isEmpty, s"state caches over $maxParts partitions: ${wide.mkString("; ")}")
       val left = spark.sparkContext.getPersistentRDDs
