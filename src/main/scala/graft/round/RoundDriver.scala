@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import graft.core._
 import graft.extract.Extract
 import graft.frontier.SeenSet
-import graft.walks.{SubgraphWalks, WalkAlgebra}
+import graft.walks.{IterativeRepair, SubgraphWalks, WalkAlgebra}
 
 /** The distributed crawl-and-rank engine: a deterministic round loop over
   * columnar state tables, mirroring graft.spec.SequentialSpec 1:1 (that
@@ -24,7 +24,7 @@ import graft.walks.{SubgraphWalks, WalkAlgebra}
   *    additions/updates, fetched/enqueued/leak appends, visit-count deltas)
   *    tagged with its `kind` on one superset schema, written in one
   *    `io.write`, like the reference sink's one pipelined transaction per
-  *    batch — plus a full compaction every `compactEvery` rounds and at run
+  *    batch — plus a full compaction every `CompactEvery` rounds and at run
   *    exit — the incremental-snapshot pattern an Iceberg MERGE commit
   *    gives. Every committed round is resumable: loadState() replays the
   *    delta logs on top of the latest compaction (crash path covered by
@@ -43,9 +43,12 @@ import graft.walks.{SubgraphWalks, WalkAlgebra}
   *    end-of-round scalar job runs beside the delta write, and each wave
   *    resolves its links in one collect.
   *  - NO driver-held graph. The edges table is the only adjacency truth;
-  *    per-wave deltas are computed with distributed joins, and walk
-  *    repair/generation resolve the (tiny) sub-adjacency they actually
-  *    visit on demand from the edges table (graft.walks.SubgraphWalks).
+  *    per-wave deltas are computed with distributed joins. Walk repair
+  *    (graft.walks.IterativeRepair) scans every walk visiting a delta node,
+  *    advances a big wave's graft segments by hop joins against the edges
+  *    table, and finishes the rest, like walk generation, on the (tiny)
+  *    sub-adjacency they actually visit, resolved on demand from the edges
+  *    table (graft.walks.SubgraphWalks).
   *    Per-round driver-side data is O(batch + changes) — the fetch batch
   *    (like the reference's, /root/reference/pkg/pipe/fetcher/fetcher.go:
   *    74-107), the per-wave delta map, and the visited sub-adjacency —
@@ -63,10 +66,11 @@ import graft.walks.{SubgraphWalks, WalkAlgebra}
   *    ONE job at the end of each round, over the new checkpoints, yields
   *    it together with the `lineage` rows and, after promotions, the
   *    enqueued count; on resume loadState's one scalar job yields it.
-  *  - Walk repair emits ONLY changed walks (a narrow arrays_overlap scan of
-  *    the cached store), merged back with a broadcast-set filter + union;
-  *    the store is re-materialized once per round via an eager
-  *    localCheckpoint — no per-round parquet rewrite of the full store.
+  *  - Walk repair emits ONLY changed walks (a scan of the cached store
+  *    prefiltered through the broadcast delta map), merged back with a
+  *    broadcast-set filter + union; the store is re-materialized once per
+  *    round via an eager localCheckpoint — no per-round parquet rewrite of
+  *    the full store.
   *  - A bloom filter over the seen set (graft.frontier.SeenSet: a driver
   *    filter while small, the distributed BloomShards table past the
   *    maxDriverBloomUrls gate) pre-filters the scheduling anti-join (exact
@@ -140,6 +144,9 @@ object RoundDriver {
     * distributed sort instead of one driver collect.
     */
   private val MaxDriverLinkRows = 2000000L
+
+  /** Full-snapshot cadence; rounds in between write delta logs only. */
+  private val CompactEvery = 8
 
   /** ⌈bytes / TargetFileBytes⌉, at least 1. */
   private def partitionsFor(bytes: BigInt): Int =
@@ -221,21 +228,11 @@ class RoundDriver(
       * either way.
       */
     broadcastMaxEdges: Long = 10000000L,
-    /** Full-snapshot cadence; rounds in between write delta logs only. */
-    compactEvery: Int = 8,
     /** Write a full snapshot when run() exits (downstream readers expect
       * full tables at the last round; disable to exercise the crash-resume
       * replay path).
       */
     compactOnExit: Boolean = true,
-    /** Above this many delta-list entries in one wave, walk repair switches
-      * from the driver-resolver path (SubgraphWalks — cheapest for small
-      * incremental waves) to the fully distributed join-per-hop
-      * IterativeRepair (mandatory for mass-refresh waves, whose graft
-      * neighborhoods would otherwise drag much of the graph through the
-      * driver); results are identical either way.
-      */
-    iterativeRepairMinEntries: Long = 20000L,
     /** robots.txt disallow rules (host, path-prefix); urls matching a rule
       * for their host are never scheduled (north_rule robots gate).
       */
@@ -504,7 +501,7 @@ class RoundDriver(
         runRound(st, round, extracted) match {
           case Some(t) =>
             traces += t
-            if (round % compactEvery == 0) compact(st, round)
+            if (round % CompactEvery == 0) compact(st, round)
             round += 1
           case None => done = true
         }
@@ -559,7 +556,7 @@ class RoundDriver(
     * active author adds it in the same wave. Returns (new nodes, their
     * count, new follow lists by author).
     */
-  private def resolveLinksOnDriver(
+  private[round] def resolveLinksOnDriver(
       waveLinks: DataFrame,
       nodes: DataFrame,
       base: Long,
@@ -590,7 +587,7 @@ class RoundDriver(
     * is invariant to partitioning) and only the per-author follow lists
     * reach the driver.
     */
-  private def resolveLinksDistributed(
+  private[round] def resolveLinksDistributed(
       waveLinks: DataFrame,
       nodes: DataFrame,
       base: Long,
@@ -815,19 +812,11 @@ class RoundDriver(
             .union(spark.createDataset(newEdgeRows).toDF)
           dirty += "edges"
 
-          // distributed walk repair against the wave's deltas (the reference
-          // updates the graph before repairing, engine.go:346-369): small
-          // waves resolve adjacency on demand from the updated edges table;
-          // big waves run the fully distributed join-per-hop repair
-          val waveEntries = deltas.valuesIterator.map(d => (d.remove.length + d.keep.length + d.add.length).toLong).sum
+          // distributed walk repair against the wave's deltas, over the
+          // updated edges table (the reference updates the graph before
+          // repairing, engine.go:346-369)
           val (changed, nChanged, releaseChanged) = phase(round, s"repair-w$wave") {
-            if (waveEntries > iterativeRepairMinEntries) {
-              val adjDS = graft.walks.IterativeWalker.adjacencyTable(
-                spark,
-                st.edges.as[EdgeRow].map(e => (e.src, e.dst))
-              )
-              graft.walks.IterativeRepair.repairAll(spark, st.walks, adjDS, resolver, deltas, round, wave, params)
-            } else SubgraphWalks.repairAll(spark, st.walks, resolver, deltas, round, wave, params)
+            IterativeRepair.repairAll(spark, st.walks, st.edges, resolver, deltas, round, wave, params)
           }
           tmpReleases += releaseChanged
           walksChanged += nChanged

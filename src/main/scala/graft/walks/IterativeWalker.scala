@@ -22,8 +22,10 @@ import graft.core.{CacheOps, CrawlParams, WalkRow}
   * [[drainHops]].
   *
   * Because every draw is counter-based (WalkAlgebra.genContinues /
-  * genNextIndex keyed by walkId/round/wave/step), this produces EXACTLY the
-  * same walks as WalkAlgebra.generateWalk — asserted by IterativeWalkerSpec.
+  * genNextIndex keyed by walkId/round/wave/step) and the array walker's hop
+  * is generateWalk's own step (WalkAlgebra.genStep), this produces EXACTLY
+  * the same walks as WalkAlgebra.generateWalk — asserted by
+  * IterativeWalkerSpec.
   */
 object IterativeWalker {
 
@@ -209,19 +211,10 @@ object IterativeWalker {
       liveDS
         .joinWith(adjSide, liveDS("cur") === adjSide("src"), "left_outer")
         .map { case (s, adjRow) =>
-          // replicate WalkAlgebra.generateWalk's per-iteration decision tree
-          if (!WalkAlgebra.genContinues(p, s.walkId, round, wave, s.step)) {
-            s.copy(step = s.step + 1, alive = false)
-          } else {
-            val follows: Array[Long] =
-              if (adjRow == null) Array.empty
-              else adjRow.getAs[scala.collection.Seq[Long]]("follows").toArray
-            if (follows.isEmpty) s.copy(step = s.step + 1, alive = false)
-            else {
-              val next = follows(WalkAlgebra.genNextIndex(p, s.walkId, round, wave, s.step, follows.length))
-              if (s.path.contains(next)) s.copy(step = s.step + 1, alive = false)
-              else St(s.walkId, s.start, s.path :+ next, next, s.step + 1, alive = true)
-            }
+          def follows = if (adjRow == null) Array.emptyLongArray else adjRow.getAs[scala.collection.Seq[Long]]("follows").toArray
+          WalkAlgebra.genStep(p, s.walkId, round, wave, s.step, s.path, follows) match {
+            case Some(path) => St(s.walkId, s.start, path, path.last, s.step + 1, alive = true)
+            case None       => s.copy(step = s.step + 1, alive = false)
           }
         }
     }

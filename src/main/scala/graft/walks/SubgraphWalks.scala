@@ -7,15 +7,16 @@ import org.apache.spark.sql.{functions, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 
-import graft.core.{CrawlParams, DeltaRow, WalkRow}
+import graft.core.{CrawlParams, WalkRow}
 
 /** Walk repair / generation against a DISTRIBUTED adjacency (the edges
   * table), with on-demand sub-adjacency resolution.
   *
   * The round loop must never hold the crawled graph on the driver (at a
   * 10^10-URL frontier the crawled subgraph is billions of edges). But walk
-  * repair (WalkAlgebra.repairWalk) and generation need random access to the
-  * follow lists of whichever nodes a segment happens to visit — an
+  * repair (WalkAlgebra's repair state machine) and generation need random
+  * access to the follow lists of whichever nodes a segment happens to
+  * visit — an
   * unpredictable, *tiny* subset: O(changed walks × segment length) per wave,
   * independent of graph size.
   *
@@ -29,9 +30,10 @@ import graft.core.{CrawlParams, DeltaRow, WalkRow}
   * full-adjacency run, which CrawlEquivalenceSpec asserts against the
   * sequential spec.
   *
-  * That miss-retry loop exists once, as [[Resolver.drain]]: repairAll,
-  * generateAll and IterativeRepair's geometric-tail drain each supply only
-  * their per-item body and their own seeding `resolve` call.
+  * That miss-retry loop exists once, as [[Resolver.drain]]: generateAll
+  * and the walk repair (IterativeRepair.repairAll, which drains a small
+  * wave's segments directly and a big wave's after its hop joins) each
+  * supply only their per-item body and their own seeding `resolve` call.
   *
   * Driver memory is O(nodes actually visited this wave); per-attempt the
   * map is broadcast once. Beyond `RoundDriver.broadcastMaxEdges` the
@@ -154,7 +156,10 @@ object SubgraphWalks {
       * misses and that attempt's output count. Returns the outputs as lazy
       * slices over the per-attempt MEMORY_AND_DISK caches, their total
       * count, and the release of those caches: call it once every consumer
-      * of the outputs has materialized.
+      * of the outputs has materialized. Those caches are materialized when
+      * drain returns, so the caches `items` was read from may be released
+      * then. Items: start nodes (generateAll) or scanned repair states
+      * whose segments are finished here (IterativeRepair.repairAll).
       */
     def drain[I: TypeTag, O: TypeTag](items: Dataset[I])(body: (WalkAlgebra.Adjacency, I) => Seq[O]): (Dataset[O], Long, () => Unit) = {
       import spark.implicits._
@@ -188,41 +193,6 @@ object SubgraphWalks {
         }
       }
       (parts.reduce(_ union _), produced, () => caches.foreach(_.unpersist()))
-    }
-  }
-
-  /** Repair every walk that visits a delta node, against distributed
-    * adjacency. Returns (changed walks with old paths, count, release): the
-    * walks stay lazy over the drain's attempt caches, so call the release
-    * only once every consumer has materialized. Results are identical to
-    * repairing with the full adjacency map.
-    */
-  def repairAll(
-      spark: SparkSession,
-      walks: Dataset[WalkRow],
-      resolver: Resolver,
-      deltas: Map[Long, DeltaRow],
-      round: Long,
-      wave: Int,
-      params: CrawlParams
-  ): (Dataset[(WalkRow, Array[Long])], Long, () => Unit) = {
-    val bDeltas = spark.sparkContext.broadcast(deltas)
-    // Seed with every delta's graft pools (Added ∪ Kept) + one hop: most
-    // segments are short (expected length 1/(1-α)), so most walks repair
-    // on the first attempt.
-    resolver.resolve(deltas.valuesIterator.flatMap(d => d.add.iterator ++ d.keep.iterator).toSeq)
-
-    // Only a walk visiting a delta node can change: repairWalk triggers at
-    // delta positions only, and grafted tails are rescanned inside the same
-    // call. Prefilter via the broadcast delta map — O(|path|) hash probes
-    // per walk. (An arrays_overlap against a literal delta-node array
-    // rebuilds its hash set PER ROW: O(|walks|·|deltas|), measured 50-130s
-    // per wave at a 25k-author batch.)
-    val todo = walks.filter(w => { val m = bDeltas.value; w.path.exists(m.contains) })
-    val (p, r, wv) = (params, round, wave)
-    resolver.drain(todo) { (adj, w: WalkRow) =>
-      val repaired = WalkAlgebra.repairWalk(adj, bDeltas.value, w.walkId, w.path, r, wv, p)
-      repaired.toList.map(np => (WalkRow(w.walkId, w.start, np), w.path))
     }
   }
 

@@ -40,8 +40,9 @@ object WalkAlgebra extends Serializable {
   @inline private def stepKey(round: Long, wave: Int, step: Long): Long =
     (round << 24) | (wave.toLong << 20) | step
 
-  /** Public step draws — the iterative (join-based) walker must make the
-    * exact same draws as [[generateWalk]].
+  /** Generation step draws. [[genStep]] makes them for the pure and the
+    * array walkers; the exploded walker (IterativeWalker) splits the same
+    * decision between its local decide map and its edge lookup.
     */
   @inline def genContinues(params: CrawlParams, walkId: Long, round: Long, wave: Int, step: Long): Boolean =
     Rng.u01(params.seed, walkId, stepKey(round, wave, step), GenContinue) <= params.alpha
@@ -49,50 +50,63 @@ object WalkAlgebra extends Serializable {
   @inline def genNextIndex(params: CrawlParams, walkId: Long, round: Long, wave: Int, step: Long, n: Int): Int =
     Rng.uniformIndex(params.seed, walkId, stepKey(round, wave, step), GenNext, n)
 
-  /** Public repair-decision draws (reference ToUpdate, walks.go:199-244).
-    * Counter-based draws are pure functions of their keys, so exposing them
-    * changes nothing about the draw sequence — the distributed repair makes
-    * the exact same decisions as [[repairWalk]].
+  /** Repair-decision draws (reference ToUpdate, walks.go:199-244), made by
+    * [[scanRepair]] alone.
     */
-  @inline def repResamples(params: CrawlParams, walkId: Long, round: Long, wave: Int, pos: Long, d: DeltaRow): Boolean = {
+  @inline private def repResamples(params: CrawlParams, walkId: Long, round: Long, wave: Int, pos: Long, d: DeltaRow): Boolean = {
     val a = d.add.length.toDouble
     val kc = d.keep.length.toDouble
     val resampleP = if (d.add.isEmpty) 0.0 else a / (a + kc)
     Rng.u01(params.seed, walkId, stepKey(round, wave, pos), RepResample) < resampleP
   }
 
-  @inline def repAlphaPasses(params: CrawlParams, walkId: Long, round: Long, wave: Int, pos: Long): Boolean =
+  @inline private def repAlphaPasses(params: CrawlParams, walkId: Long, round: Long, wave: Int, pos: Long): Boolean =
     Rng.u01(params.seed, walkId, stepKey(round, wave, pos), RepAlpha) < params.alpha
 
-  /** Public segment draws — the distributed join-per-hop repair
-    * (IterativeRepair) must make the exact same draws as
-    * [[generateSegment]]. `posKey` namespaces a segment within
-    * (walk, round, wave); the start draw uses slot 0 of the segment's
-    * key block, step draws use slots step+1.
+  /** Graft-segment draws. `posKey` namespaces a segment within
+    * (walk, round, wave); the start draw ([[scanRepair]]) uses slot 0 of the
+    * segment's key block, step draws ([[stepRepair]]) use slots step+1.
     */
-  @inline def segMaxSteps(params: CrawlParams): Long = math.min(params.maxWalkSteps.toLong, 1023L)
+  @inline private def segMaxSteps(params: CrawlParams): Long = math.min(params.maxWalkSteps.toLong, 1023L)
 
-  @inline def segStartIndex(params: CrawlParams, walkId: Long, round: Long, wave: Int, posKey: Long, n: Int): Int =
+  @inline private def segStartIndex(params: CrawlParams, walkId: Long, round: Long, wave: Int, posKey: Long, n: Int): Int =
     Rng.uniformIndex(params.seed, walkId, stepKey(round, wave, posKey << 10), SegStart, n)
 
-  @inline def segContinues(params: CrawlParams, walkId: Long, round: Long, wave: Int, posKey: Long, step: Long): Boolean =
+  @inline private def segContinues(params: CrawlParams, walkId: Long, round: Long, wave: Int, posKey: Long, step: Long): Boolean =
     Rng.u01(params.seed, walkId, stepKey(round, wave, (posKey << 10) | (step + 1)), SegContinue) <= params.alpha
 
-  @inline def segNextIndex(
-      params: CrawlParams,
-      walkId: Long,
-      round: Long,
-      wave: Int,
-      posKey: Long,
-      step: Long,
-      n: Int
-  ): Int =
+  @inline private def segNextIndex(params: CrawlParams, walkId: Long, round: Long, wave: Int, posKey: Long, step: Long, n: Int): Int =
     Rng.uniformIndex(params.seed, walkId, stepKey(round, wave, (posKey << 10) | (step + 1)), SegNext, n)
 
   /** Adjacency access. Follow lists MUST be sorted ascending by node id —
     * next-hop selection picks by index, so ordering is part of the spec.
     */
   type Adjacency = Long => Array[Long]
+
+  /** One generation step of walk `walkId` standing at the last node of
+    * `path`, whose follow list is `follows`: the extended path, or None
+    * when the walk stops — on the stop draw, at a dangling node, or on a
+    * cycle (without appending). `follows` is read only after the continue
+    * draw, so a stopping walk never looks up its node.
+    */
+  def genStep(
+      params: CrawlParams,
+      walkId: Long,
+      round: Long,
+      wave: Int,
+      step: Long,
+      path: Array[Long],
+      follows: => Array[Long]
+  ): Option[Array[Long]] =
+    if (!genContinues(params, walkId, round, wave, step)) None
+    else {
+      val fl = follows
+      if (fl.isEmpty) None
+      else {
+        val next = fl(genNextIndex(params, walkId, round, wave, step, fl.length))
+        if (path.contains(next)) None else Some(path :+ next)
+      }
+    }
 
   /** Generate one walk from `start` (always included). Reference:
     * walks.go:140-174 with per-step seeded draws instead of a global RNG.
@@ -105,63 +119,17 @@ object WalkAlgebra extends Serializable {
       wave: Int,
       params: CrawlParams
   ): Array[Long] = {
-    val path = scala.collection.mutable.ArrayBuffer[Long](start)
-    var node = start
+    var path = Array(start)
     var step = 0L
-    var done = false
-    while (!done && step < params.maxWalkSteps) {
-      if (!genContinues(params, walkId, round, wave, step)) {
-        done = true
-      } else {
-        val follows = adj(node)
-        if (follows.isEmpty) done = true // dangling
-        else {
-          val next = follows(genNextIndex(params, walkId, round, wave, step, follows.length))
-          if (path.contains(next)) done = true // cycle: stop, do not append
-          else { path += next; node = next }
-        }
+    var walking = true
+    while (walking && step < params.maxWalkSteps) {
+      genStep(params, walkId, round, wave, step, path, adj(path.last)) match {
+        case Some(extended) => path = extended
+        case None           => walking = false
       }
       step += 1
     }
-    path.toArray
-  }
-
-  /** Generate a segment starting from a uniformly drawn element of `pool`
-    * (reference generate(start...) with a start set, walks.go:140-174).
-    * Returns empty for an empty pool. Cycle check is against the segment
-    * only; global cycle-trimming happens in [[graft]].
-    * `posKey` namespaces the draws of this segment within (walk, round, wave).
-    */
-  def generateSegment(
-      adj: Adjacency,
-      pool: Array[Long],
-      walkId: Long,
-      round: Long,
-      wave: Int,
-      posKey: Long,
-      params: CrawlParams
-  ): Array[Long] = {
-    if (pool.isEmpty) return Array.empty
-    val start = pool(segStartIndex(params, walkId, round, wave, posKey, pool.length))
-    val path = scala.collection.mutable.ArrayBuffer[Long](start)
-    var node = start
-    var step = 0L
-    val maxSeg = segMaxSteps(params)
-    var done = false
-    while (!done && step < maxSeg) {
-      if (!segContinues(params, walkId, round, wave, posKey, step)) done = true
-      else {
-        val follows = adj(node)
-        if (follows.isEmpty) done = true
-        else {
-          val next = follows(segNextIndex(params, walkId, round, wave, posKey, step, follows.length))
-          if (path.contains(next)) done = true
-          else { path += next; node = next }
-        }
-      }
-      step += 1
-    }
-    path.toArray
+    path
   }
 
   /** First index where two walks differ, -1 if equal. Reference Divergence
@@ -201,12 +169,124 @@ object WalkAlgebra extends Serializable {
     if (cut == -1) combined else combined.take(cut)
   }
 
-  /** Repair one walk against a wave of deltas (node → delta).
-    *
-    * Scans the path left-to-right; at each visited delta node, applies the
-    * reference's ToUpdate step (walks.go:199-244). After a repair the scan
-    * continues on the NEW path from the next position, so delta nodes that
-    * appear in a grafted tail are also repaired — this is the deterministic
+  /** One walk's repair state. `path` is the committed path; a non-empty
+    * `seg` is a graft segment in progress, drawn in the RNG namespace
+    * `posKey` and waiting for the follow list of its last node `cur`.
+    * The segment replaces `path` after position `posKey - 1`. `origPath`
+    * is the path at wave start; its head is the walk's start, which repair
+    * never changes.
+    */
+  case class RepSt(
+      walkId: Long,
+      origPath: Array[Long],
+      path: Array[Long],
+      changed: Boolean,
+      seg: Array[Long],
+      cur: Long,
+      posKey: Long
+  ) {
+    def segActive: Boolean = seg.nonEmpty
+  }
+
+  /** Scan `st.path` from position `from`, applying the reference's ToUpdate
+    * step (walks.go:199-244) at each delta node: resample w.p. a/(a+k) →
+    * prune there, then an α-gated graft of a segment from the Added nodes;
+    * else, if the next step is a Removed node → prune and graft a segment
+    * from the Kept nodes. A prune with an empty pool commits inline; a
+    * graft stops the scan with an active segment, whose remaining steps
+    * need adjacency ([[stepRepair]]).
+    */
+  def scanRepair(
+      st: RepSt,
+      from: Int,
+      deltas: scala.collection.Map[Long, DeltaRow],
+      round: Long,
+      wave: Int,
+      params: CrawlParams
+  ): RepSt = {
+    var path = st.path
+    var changed = st.changed
+    var pos = from
+    while (pos < path.length && pos < 1023) {
+      deltas.get(path(pos)) match {
+        case Some(d) =>
+          val posL = pos.toLong
+          // null ⇒ no event; empty ⇒ prune only; non-empty ⇒ graft
+          val pool: Array[Long] =
+            if (repResamples(params, st.walkId, round, wave, posL, d)) {
+              if (repAlphaPasses(params, st.walkId, round, wave, posL)) d.add else Array.emptyLongArray
+            } else if (pos + 1 < path.length && d.remove.contains(path(pos + 1))) d.keep
+            else null
+          if (pool != null && pool.nonEmpty) {
+            val segStart = pool(segStartIndex(params, st.walkId, round, wave, posL + 1, pool.length))
+            return RepSt(st.walkId, st.origPath, path, changed, Array(segStart), segStart, posL + 1)
+          } else if (pool != null && pos + 1 < path.length) {
+            path = path.take(pos + 1) // the prune drops a tail
+            changed = true
+          }
+        case None => ()
+      }
+      pos += 1
+    }
+    RepSt(st.walkId, st.origPath, path, changed, Array.emptyLongArray, -1L, 0L)
+  }
+
+  /** The repair state of walk `walkId` on `path` once its scan first stops. */
+  def startRepair(
+      walkId: Long,
+      path: Array[Long],
+      deltas: scala.collection.Map[Long, DeltaRow],
+      round: Long,
+      wave: Int,
+      params: CrawlParams
+  ): RepSt =
+    scanRepair(RepSt(walkId, path, path, changed = false, Array.emptyLongArray, -1L, 0L), 0, deltas, round, wave, params)
+
+  /** Advance `st`'s active segment one step, `follows` being the follow
+    * list of `st.cur` (read only after the continue draw). A finished
+    * segment is grafted onto the pruned path, trimmed at its first global
+    * repetition (walks.go:84-92), and the scan resumes after the event —
+    * which may open the next segment.
+    */
+  def stepRepair(
+      st: RepSt,
+      follows: => Array[Long],
+      deltas: scala.collection.Map[Long, DeltaRow],
+      round: Long,
+      wave: Int,
+      params: CrawlParams
+  ): RepSt = {
+    val step = st.seg.length - 1L
+    if (step < segMaxSteps(params) && segContinues(params, st.walkId, round, wave, st.posKey, step)) {
+      val fl = follows
+      if (fl.nonEmpty) {
+        val next = fl(segNextIndex(params, st.walkId, round, wave, st.posKey, step, fl.length))
+        if (!st.seg.contains(next)) return st.copy(seg = st.seg :+ next, cur = next)
+      }
+    }
+    val np = graft(st.path.take(st.posKey.toInt), st.seg)
+    val changed = st.changed || !java.util.Arrays.equals(np, st.path)
+    scanRepair(st.copy(path = np, changed = changed), st.posKey.toInt, deltas, round, wave, params)
+  }
+
+  /** Run `st`'s segments to the end of its scan against `adj`. */
+  def finishRepair(
+      adj: Adjacency,
+      st: RepSt,
+      deltas: scala.collection.Map[Long, DeltaRow],
+      round: Long,
+      wave: Int,
+      params: CrawlParams
+  ): RepSt = {
+    var s = st
+    while (s.segActive) s = stepRepair(s, adj(s.cur), deltas, round, wave, params)
+    s
+  }
+
+  /** Repair one walk against a wave of deltas (node → delta): the
+    * sequential driver of the repair state machine ([[startRepair]],
+    * [[stepRepair]]). After a graft the scan continues on the NEW path, so
+    * delta nodes in a grafted tail are also repaired — the deterministic
     * batch analog of the reference processing events one at a time (each
     * later event sees already-repaired walks). Returns Some(newPath) iff
     * the path changed.
@@ -224,32 +304,8 @@ object WalkAlgebra extends Serializable {
       wave: Int,
       params: CrawlParams
   ): Option[Array[Long]] = {
-    var path = path0
-    var changed = false
-    var pos = 0
-    while (pos < path.length && pos < 1023) {
-      deltas.get(path(pos)) match {
-        case Some(d) =>
-          val posL = pos.toLong
-          val resample = repResamples(params, walkId, round, wave, posL, d)
-          val invalid = pos + 1 < path.length && d.remove.contains(path(pos + 1))
-          if (resample) {
-            var np = path.take(pos + 1)
-            if (repAlphaPasses(params, walkId, round, wave, posL)) {
-              val seg = generateSegment(adj, d.add, walkId, round, wave, posL + 1, params)
-              np = graft(np, seg)
-            }
-            if (!java.util.Arrays.equals(np, path)) { path = np; changed = true }
-          } else if (invalid) {
-            val seg = generateSegment(adj, d.keep, walkId, round, wave, posL + 1, params)
-            val np = graft(path.take(pos + 1), seg)
-            if (!java.util.Arrays.equals(np, path)) { path = np; changed = true }
-          }
-        case None => ()
-      }
-      pos += 1
-    }
-    if (changed) Some(path) else None
+    val st = finishRepair(adj, startRepair(walkId, path0, deltas, round, wave, params), deltas, round, wave, params)
+    if (st.changed) Some(st.path) else None
   }
 
   /** 3-way set partition old vs new → (remove, keep, add), each sorted

@@ -54,7 +54,6 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
       compactOnExit: Boolean = true,
       robots: Seq[(String, String)] = Nil,
       runParams: graft.core.CrawlParams = params,
-      iterativeRepairMinEntries: Long = 20000L,
       maxDriverBloomUrls: Long = 50000000L,
       bucketedIO: Boolean = false
   ): CrawlEngine.Result = {
@@ -78,7 +77,6 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
         broadcastMaxEdges,
         compactOnExit = compactOnExit,
         robots = robotsDF,
-        iterativeRepairMinEntries = iterativeRepairMinEntries,
         maxDriverBloomUrls = maxDriverBloomUrls
       )
     if (io.lastCompleteRound() < 0) driver.init(seeds)
@@ -231,27 +229,9 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     val _ = specNodes
   }
 
-  test("forced-iterative walk REPAIR yields the identical crawl") {
-    // iterativeRepairMinEntries=0 forces the fully distributed join-per-hop
-    // repair (the mass-refresh scale path) for EVERY wave — final state
-    // must be byte-identical to the spec
-    val dir = Files.createTempDirectory("crawl-iter-repair").toString
-    runEngine(4, dir, iterativeRepairMinEntries = 0L)
-    val (nodes, adjacency, walks, seen) = engineState(dir)
-    val pv = pageRows.map(p => SequentialSpec.PageV(p.url, p.warc_ts.getTime / 1000, p.html, p.text))
-    val spec4 = SequentialSpec.run(pv, seeds, params, 4)
-    assert(seen === spec4.seen)
-    assert(nodes === spec4.nodes.map { case (id, st) =>
-      id -> ((st.url, st.status, st.addedRound, st.promotedRound, st.demotedRound))
-    })
-    assert(adjacency === spec4.adjacency.collect { case (k, v) if v.nonEmpty => k -> v.toSeq })
-    assert(walks === spec4.walks.map { case (k, v) => k -> v.toSeq })
-  }
-
   test("ALL scale paths at once yield the identical crawl (the 10^10 deployment configuration)") {
     // Every scale path forced SIMULTANEOUSLY: join-per-hop walk generation
-    // (broadcastMaxEdges=0), fully distributed join-per-hop repair
-    // (iterativeRepairMinEntries=0), sharded distributed seen-bloom
+    // (broadcastMaxEdges=0), sharded distributed seen-bloom
     // (maxDriverBloomUrls=0), and bucketed state + extracted fetch store
     // (BucketedTableIO, which also exercises the InSet fetch pruning) —
     // final state must still be byte-identical to the sequential spec.
@@ -260,7 +240,6 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
       4,
       dir,
       broadcastMaxEdges = 0L,
-      iterativeRepairMinEntries = 0L,
       maxDriverBloomUrls = 0L,
       bucketedIO = true
     )

@@ -60,13 +60,15 @@ class WalkerCacheSpec extends AnyFunSuite {
   }
 
   // the default configuration runs the resolver paths (miss-retry drain);
-  // forced-iterative runs the iterative walker AND iterative repair on
-  // every round — the drains whose per-hop checkpoints used to leak;
-  // forced-sharded keeps the seen set as the checkpointed shard table
+  // forced-iterative runs the iterative walker on every promotion — the
+  // drain whose per-hop checkpoints used to leak (a Tiny crawl's repair
+  // waves stay under IterativeRepair.TailThreshold, so its hop loop is
+  // pinned by IterativeRepairSpec instead); forced-sharded keeps the seen
+  // set as the checkpointed shard table
   Seq(
     "default" -> ((s: SparkSession, io: TableIO, p: CrawlParams) => new RoundDriver(s, io, p)),
     "forced-iterative" -> ((s: SparkSession, io: TableIO, p: CrawlParams) =>
-      new RoundDriver(s, io, p, broadcastMaxEdges = 0L, iterativeRepairMinEntries = 0L)),
+      new RoundDriver(s, io, p, broadcastMaxEdges = 0L)),
     "forced-sharded" -> ((s: SparkSession, io: TableIO, p: CrawlParams) => new RoundDriver(s, io, p, maxDriverBloomUrls = 0L))
   ).foreach { case (name, newDriver) =>
     test(s"a $name crawl run leaves no cache behind") {
