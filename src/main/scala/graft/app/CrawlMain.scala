@@ -160,14 +160,11 @@ object CrawlMain {
         }
         io.read(0L, "extracted")
       } else CrawlEngine.extractPages(spark, pages.toDF).persist()
-    // GRAFT_BROADCAST_MAX_EDGES=0 forces the join-based iterative walker
-    // (the 10^10-frontier generation path) instead of broadcast adjacency.
-    val broadcastMax = sys.env.getOrElse("GRAFT_BROADCAST_MAX_EDGES", "10000000").toLong
     // GRAFT_MAX_DRIVER_BLOOM_URLS=0 forces the distributed sharded
     // seen-bloom (the 10^10-url path) from round 1.
     val maxDriverBloom =
       sys.env.get("GRAFT_MAX_DRIVER_BLOOM_URLS").map(_.toLong).getOrElse(graft.frontier.SeenSet.DefaultMaxDriverUrls)
-    val driver = new RoundDriver(spark, io, params, broadcastMax, maxDriverBloomUrls = maxDriverBloom)
+    val driver = new RoundDriver(spark, io, params, maxDriverBloomUrls = maxDriverBloom)
     val resumedFrom = io.lastCompleteRound()
     if (resumedFrom < 0) {
       driver.init(PagesGen.seedUrls(cfg, 3))

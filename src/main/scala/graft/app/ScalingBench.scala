@@ -3,13 +3,12 @@ package graft.app
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{CrawlParams, NodeStatus, Sessions, WalkRow}
+import graft.core.{CrawlParams, NodeStatus, Sessions}
 import graft.fixtures.PagesGen
 import graft.round.{CrawlEngine, ParquetTableIO, RoundDriver}
-import graft.walks.WalkAlgebra
+import graft.walks.{IterativeWalker, SubgraphWalks}
 
 /** Two-parallelism scaling evidence for the north rule (BASELINE.md §3):
   * the same crawl job on the same input at local[N] and local[4N]; reports
@@ -101,22 +100,11 @@ object ScalingBench {
       .distinct()
       .persist()
 
-    // walks for active nodes over the pre-built graph (broadcast adjacency)
-    val adjMap = edges
-      .as[(Long, Long)]
-      .collect()
-      .groupBy(_._1)
-      .map { case (k, v) => k -> v.map(_._2).sorted }
-    val bAdj = spark.sparkContext.broadcast(adjMap)
-    val p = params
-    val activeIds = nodes.filter($"status" === NodeStatus.Active).select($"id").as[Long]
-    val walks = activeIds.flatMap { id =>
-      val adjF: WalkAlgebra.Adjacency = n => bAdj.value.getOrElse(n, Array.empty)
-      (0 until p.walksPerNode).map { i =>
-        val wid = id * p.walksPerNode + i
-        WalkRow(wid, id, WalkAlgebra.generateWalk(adjF, id, wid, 0L, 15, p))
-      }
-    }
+    // walks for active nodes over the pre-built graph, by the engine's
+    // generation entry
+    val activeIds = nodes.filter($"status" === NodeStatus.Active).select($"id").as[Long].collect().sorted.toSeq
+    val resolver = new SubgraphWalks.Resolver(spark, () => edges.toDF)
+    val (walks, walksRelease) = IterativeWalker.generateAll(spark, activeIds, resolver, 0L, 15, params)
 
     io.write(0L, "nodes", nodes)
     io.write(0L, "edges", edges.toDF)
@@ -125,7 +113,7 @@ object ScalingBench {
     io.write(0L, "enqueued", idMap.select($"url"))
     io.write(0L, "visits", io.read(0L, "walks").select(explode($"path").as("node")).groupBy("node").count())
     io.commitRound(0L)
-    fetchedUrls.unpersist(); linkPairs.unpersist(); idMap.unpersist(); edges.unpersist()
+    walksRelease(); fetchedUrls.unpersist(); linkPairs.unpersist(); idMap.unpersist(); edges.unpersist()
   }
 
   def runOnce(

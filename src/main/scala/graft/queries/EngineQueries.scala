@@ -19,13 +19,13 @@ object EngineQueries {
 
   /** q29 — seeded Monte-Carlo walk rank (U1/U5/A2-A4) over the same derived
     * graph as q17: distributed walk generation, visit-count rank estimator.
-    * Size-aware like RoundDriver.broadcastMaxEdges: below the threshold the
-    * adjacency (aggregated distributed, then collected compact) is
-    * broadcast and visits are PARTIAL-AGGREGATED inside each partition (a
-    * per-partition hashmap instead of one shuffle row per visit); above it,
-    * the join-per-hop IterativeWalker runs with no driver-held graph at
-    * all. Both paths make identical counter-based draws
-    * (IterativeWalkerSpec proves path equality).
+    * Size-aware: up to `broadcastMaxEdges` edges the adjacency
+    * (aggregated distributed, then collected compact) is broadcast and
+    * visits are PARTIAL-AGGREGATED inside each partition (a per-partition
+    * hashmap instead of one shuffle row per visit); above it, the
+    * join-per-hop IterativeWalker runs with no driver-held graph at all.
+    * Both paths make identical counter-based draws (IterativeWalkerSpec
+    * proves path equality).
     */
   def q29WalkRank(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import graft.core._
 import graft.extract.Extract
 import graft.frontier.SeenSet
-import graft.walks.{IterativeRepair, SubgraphWalks, WalkAlgebra}
+import graft.walks.{IterativeRepair, IterativeWalker, SubgraphWalks, WalkAlgebra}
 
 /** The distributed crawl-and-rank engine: a deterministic round loop over
   * columnar state tables, mirroring graft.spec.SequentialSpec 1:1 (that
@@ -44,11 +44,13 @@ import graft.walks.{IterativeRepair, SubgraphWalks, WalkAlgebra}
   *    resolves its links in one collect.
   *  - NO driver-held graph. The edges table is the only adjacency truth;
   *    per-wave deltas are computed with distributed joins. Walk repair
-  *    (graft.walks.IterativeRepair) scans every walk visiting a delta node,
-  *    advances a big wave's graft segments by hop joins against the edges
-  *    table, and finishes the rest, like walk generation, on the (tiny)
-  *    sub-adjacency they actually visit, resolved on demand from the edges
-  *    table (graft.walks.SubgraphWalks).
+  *    (graft.walks.IterativeRepair) scans every walk visiting a delta node;
+  *    its graft segments and a promotion's new walks then follow one wave
+  *    rule (graft.walks.IterativeWalker.hopThenDrain): a wave with more
+  *    than TailThreshold live walks advances them by hop joins against the
+  *    edges table, and the rest finish on the (tiny) sub-adjacency they
+  *    actually visit, resolved on demand from the edges table
+  *    (graft.walks.SubgraphWalks).
   *    Per-round driver-side data is O(batch + changes) — the fetch batch
   *    (like the reference's, /root/reference/pkg/pipe/fetcher/fetcher.go:
   *    74-107), the per-wave delta map, and the visited sub-adjacency —
@@ -222,12 +224,6 @@ class RoundDriver(
     spark: SparkSession,
     io: TableIO,
     params: CrawlParams,
-    /** Above this many total edges the promoted-node walk generation
-      * switches from the resolver-broadcast path to the join-based
-      * IterativeWalker (the 10^10-frontier path); results are identical
-      * either way.
-      */
-    broadcastMaxEdges: Long = 10000000L,
     /** Write a full snapshot when run() exits (downstream readers expect
       * full tables at the last round; disable to exercise the crash-resume
       * replay path).
@@ -284,7 +280,6 @@ class RoundDriver(
       var leaks: DataFrame, // (id, url, detectedRound, status, proofs)
       var nextId: Long,
       var totalWalks: Long,
-      var totalEdges: Long,
       var fetchedCount: Long,
       var enqueuedCount: Long,
       var totalVisits: Long, // Σ visits.count at the last checkpoint
@@ -359,14 +354,8 @@ class RoundDriver(
     val nodes = seeds.zipWithIndex.map { case (u, i) =>
       NodeRow(i.toLong, u, Extract.hostOf(u), NodeStatus.Active, 0L, 0L, -1L)
     }
-    val emptyAdj: WalkAlgebra.Adjacency = _ => Array.empty
-    val p = params
-    val walks = nodes.flatMap { n =>
-      (0 until p.walksPerNode).map { i =>
-        val wid = n.id * p.walksPerNode + i
-        WalkRow(wid, n.id, WalkAlgebra.generateWalk(emptyAdj, n.id, wid, 0L, GenWave, p))
-      }
-    }
+    // a seed has no follow list yet: each walk is its start alone
+    val walks = nodes.flatMap(n => (0 until params.walksPerNode).map(i => WalkRow(n.id * params.walksPerNode + i, n.id, Array(n.id))))
     val walksDF = spark.createDataset(walks).toDF
     io.write(0L, "walk_params", paramsDF)
     io.write(0L, "nodes", spark.createDataset(nodes).toDF)
@@ -451,9 +440,9 @@ class RoundDriver(
     val Seq((nodesC, nodesR), (edgesC, edgesR), (walksDF, walksR), (fetchedC, fetchedR), (enqueuedC, enqueuedR), (leaksC, leaksR), (visitsC, visitsR)) =
       checkpointAll(Seq(nodes, edges, walks, fetched, enqueued, leaks, visits).map(_.coalesce(stateParts)))
     val walksC = walksDF.as[WalkRow]
-    // nextId, the four counts and Σ visits in ONE job
+    // nextId, the three counts and Σ visits in ONE job
     val perPartition = partitionScalars(
-      Seq(nodesC.select($"id"), walksDF.select(lit(0L)), edgesC.select(lit(0L)), fetchedC.select(lit(0L)), enqueuedC.select(lit(0L)), visitsC.select($"count"))
+      Seq(nodesC.select($"id"), walksDF.select(lit(0L)), fetchedC.select(lit(0L)), enqueuedC.select(lit(0L)), visitsC.select($"count"))
     )
     def total(t: Int): Long = perPartition.map(_._1(t)).sum
     val nextId = perPartition.map(_._2.head).foldLeft(-1L)(math.max) + 1
@@ -467,11 +456,10 @@ class RoundDriver(
       leaksC,
       nextId,
       totalWalks = total(1),
-      totalEdges = total(2),
-      fetchedCount = total(3),
-      enqueuedCount = total(4),
-      totalVisits = perPartition.map(_._3(5)).sum,
-      seen = SeenSet.build(spark, fetchedC, total(3), maxDriverBloomUrls)
+      fetchedCount = total(2),
+      enqueuedCount = total(3),
+      totalVisits = perPartition.map(_._3(4)).sum,
+      seen = SeenSet.build(spark, fetchedC, total(2), maxDriverBloomUrls)
     )
     st.cpRelease ++= Seq(
       "nodes" -> nodesR,
@@ -803,7 +791,6 @@ class RoundDriver(
             removedEdgesCount += d.remove.length
             newEdgesCount += d.add.length
             deltaEntries += d.remove.length + d.keep.length + d.add.length
-            st.totalEdges += d.add.length - d.remove.length
           }
           val touchedDF = broadcast(spark.createDataset(deltas.keySet.toSeq).toDF("aid"))
           val newEdgeRows = deltas.valuesIterator.flatMap(d => d.newList.map(dst => EdgeRow(d.node, dst))).toSeq
@@ -816,7 +803,7 @@ class RoundDriver(
           // updated edges table (the reference updates the graph before
           // repairing, engine.go:346-369)
           val (changed, nChanged, releaseChanged) = phase(round, s"repair-w$wave") {
-            IterativeRepair.repairAll(spark, st.walks, st.edges, resolver, deltas, round, wave, params)
+            IterativeRepair.repairAll(spark, st.walks, resolver, deltas, round, wave, params)
           }
           tmpReleases += releaseChanged
           walksChanged += nChanged
@@ -977,26 +964,8 @@ class RoundDriver(
             .withColumn("demotedRound", lit(round)) -> Some(demotedCount)
         }
         if (promotedCount > 0) phase(round, "promote") {
-          val p = params
-          val r = round
-          val gw = GenWave
           val promotedIds = promotedDF.select($"id").as[Long].collect().sorted.toSeq
-          val (newWalks, newWalksRelease) =
-            if (st.totalEdges > broadcastMaxEdges) {
-              // scale path: one shuffle join per hop, no driver sub-adjacency.
-              // The walker returns its output already materialized in one
-              // cache with a release handle — re-persisting it here would
-              // just double the copy
-              val adjDS = graft.walks.IterativeWalker.adjacencyTable(
-                spark,
-                st.edges.as[EdgeRow].map(e => (e.src, e.dst))
-              )
-              graft.walks.IterativeWalker
-                .generateReleasable(spark, promotedDF.select($"id").as[Long], adjDS, r, gw, p)
-            } else {
-              // bounded path: resolve only the neighborhood the walks visit
-              SubgraphWalks.generateAll(spark, promotedIds, resolver, r, gw, p)
-            }
+          val (newWalks, newWalksRelease) = IterativeWalker.generateAll(spark, promotedIds, resolver, round, GenWave, params)
           tmpReleases += newWalksRelease
           st.walks = st.walks.union(newWalks)
           st.totalWalks += params.walksPerNode.toLong * promotedCount

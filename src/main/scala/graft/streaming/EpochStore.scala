@@ -9,10 +9,11 @@ import graft.core.BucketedParquet
 /** An append-per-epoch table on disk — the streaming runners' stores
   * (StreamIngest's extracted table; StreamDedup's docs, postings and
   * pairs). Per-epoch increments land in `batch=<id>` dirs (overwrite =
-  * idempotent retry) and are compacted every `compactEvery` epochs into one
-  * `compact_upto=<id>` dir, so neither the file count nor the driver's
-  * cached footprint grows with the stream (VERDICT r2 "what's wrong #4" —
-  * nothing O(corpus) is ever cached; readers scan the compacted parquet).
+  * idempotent retry) and are compacted every [[EpochStore.CompactEvery]]
+  * epochs into one `compact_upto=<id>` dir, so neither the file count nor
+  * the driver's cached footprint grows with the stream (VERDICT r2 "what's
+  * wrong #4" — nothing O(corpus) is ever cached; readers scan the
+  * compacted parquet).
   *
   * Crash-safety: a compaction is visible only once its `_compact_<id>`
   * marker exists (readers use the max marker); batch dirs it covers are
@@ -27,7 +28,7 @@ import graft.core.BucketedParquet
   * (StreamDedup's band-bucket probe) then prunes the compacted bulk to the
   * file buckets holding its keys instead of scanning it, and a fresh JVM
   * re-registers it with the bucket count it was written with. The
-  * uncompacted tail stays O(compactEvery × batch) plain-parquet dirs.
+  * uncompacted tail stays O(CompactEvery × batch) plain-parquet dirs.
   */
 final class EpochStore(spark: SparkSession, root: String, bucketCol: Option[String] = None, buckets: Int = 32) {
   private val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -126,4 +127,13 @@ final class EpochStore(spark: SparkSession, root: String, bucketCol: Option[Stri
       BucketedParquet.delete(spark, compactDir(prev), "graft_epoch")
     }
   }
+}
+
+object EpochStore {
+
+  /** Per-epoch increments a stream accumulates before its stores compact
+    * them (bounds the small-file count; compaction covers only epochs
+    * before the current one, keeping retry idempotency).
+    */
+  val CompactEvery = 8
 }

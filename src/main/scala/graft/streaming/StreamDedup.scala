@@ -51,7 +51,7 @@ import graft.queries.TextQueries
   * is also the dedup cost knob). With a large batch the join shuffles, and
   * compacting the postings as a BucketedParquet table bucketed by `b` (the
   * TrigramIndex layout) spares the store side its shuffle; the per-epoch
-  * uncompacted tail stays O(compactEvery × batch) either way. Probing
+  * uncompacted tail stays O(EpochStore.CompactEvery × batch) either way. Probing
   * cheaper than a store scan needs a point-lookup index (a key-value
   * store), which is outside a pure-Spark pipeline. Doc texts are fetched for verification
   * by an O(candidates) id join against the docs store (at production scale
@@ -200,8 +200,7 @@ object StreamDedup {
       stream: DataFrame,
       stateRoot: String,
       checkpointDir: String,
-      probeCap: Int = TextQueries.LshMaxBucket,
-      compactEvery: Int = 8
+      probeCap: Int = TextQueries.LshMaxBucket
   ): StreamingQuery = {
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
@@ -222,9 +221,9 @@ object StreamDedup {
         pairsStore.writeIncrement(batchId, pairs)
         postingsStore.writeIncrement(batchId, newPostings)
         release()
-        docsStore.maybeCompact(batchId - 1, compactEvery)
-        postingsStore.maybeCompact(batchId - 1, compactEvery)
-        pairsStore.maybeCompact(batchId - 1, compactEvery)
+        docsStore.maybeCompact(batchId - 1, EpochStore.CompactEvery)
+        postingsStore.maybeCompact(batchId - 1, EpochStore.CompactEvery)
+        pairsStore.maybeCompact(batchId - 1, EpochStore.CompactEvery)
         ()
       }
       .start()

@@ -128,13 +128,7 @@ object StreamIngest {
       seeds: Seq[String],
       params: CrawlParams,
       roundsPerBatch: Int,
-      checkpointDir: String,
-      broadcastMaxEdges: Long = 10000000L,
-      /** compact the extracted store once this many per-epoch increments
-        * accumulate (bounds small-file count; compaction covers only
-        * epochs before the current one, keeping retry idempotency).
-        */
-      compactEvery: Int = 8
+      checkpointDir: String
   ): StreamingQuery = {
     val store = new EpochStore(spark, extractedDir(accumDir))
     stream.writeStream
@@ -143,7 +137,7 @@ object StreamIngest {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.write.mode("overwrite").parquet(s"$accumDir/batch=$batchId") // idempotent per epoch
         val io = new ParquetTableIO(spark, stateDir)
-        val driver = new RoundDriver(spark, io, params, broadcastMaxEdges)
+        val driver = new RoundDriver(spark, io, params)
         if (io.lastCompleteRound() < 0) driver.init(seeds)
         val newPages = spark.read.schema(pageSchema).parquet(s"$accumDir/batch=$batchId")
         // a retried epoch must not count its own partial output
@@ -155,7 +149,7 @@ object StreamIngest {
         val extracted = store.readAll().get.drop("batch")
         val target = io.lastCompleteRound() + roundsPerBatch
         driver.run(extracted, target.toInt)
-        store.maybeCompact(batchId - 1, compactEvery)
+        store.maybeCompact(batchId - 1, EpochStore.CompactEvery)
         ()
       }
       .start()

@@ -1,25 +1,35 @@
 package graft.walks
 
 import scala.collection.mutable
+import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{CacheOps, CrawlParams, WalkRow}
 
-/** Join-based distributed walk generation — the scale path beyond broadcast
-  * adjacency (SURVEY.md §7.4 item 3).
+/** Join-based distributed walk generation and the one wave rule of the
+  * engine's walk generation and repair (SURVEY.md §7.4 item 3).
   *
-  * The broadcast generator collects the crawled-subgraph adjacency to every
-  * executor — fine while the fetched graph fits in memory, impossible at
-  * 10^10-frontier scale. This walker instead keeps adjacency as a
-  * distributed table and advances ALL in-flight walks one hop per
-  * iteration with a single equi-join (walk.cur == adj.src), shuffling only
-  * live walks. Expected iterations ≈ geometric tail of α (≈ 7 live hops on
-  * average, tail drains by ~α^k); lineage is cut with localCheckpoint every
-  * few steps. The array walker and the exploded-edge walker differ only in
-  * state row, hop join and hop table; both run the one hop loop,
-  * [[drainHops]].
+  * The resolver drain (SubgraphWalks.Resolver.drain) collects the follow
+  * lists a wave visits to the driver — fine while a wave's neighborhood
+  * fits in memory, impossible for a mass wave at 10^10-frontier scale. The
+  * hop loop, [[drainHops]], instead keeps adjacency as a distributed table
+  * and advances ALL in-flight walks one hop per iteration with a single
+  * equi-join (walk.cur == adj.src), shuffling only live walks (the
+  * bulk-synchronous hop pattern of Distributed Edge Partitioning for
+  * Trillion-edge Graphs, VLDB'19). Expected iterations ≈ geometric tail of
+  * α (≈ 7 live hops on average, tail drains by ~α^k); lineage is cut with
+  * localCheckpoint every few steps. The array walker, the exploded-edge
+  * walker and the repair segments differ only in state row, hop join and
+  * hop table; all run the one hop loop.
+  *
+  * A wave of the crawl — promotion-wave generation ([[generateAll]]) or
+  * repair (IterativeRepair.repairAll) — follows one rule,
+  * [[hopThenDrain]]: while more than [[TailThreshold]] walks are live, hop
+  * by joins; the resolver drain finishes the rest. The query operators
+  * that walk a whole graph ([[generateReleasable]],
+  * [[generateExplodedReleasable]]) hop to the end.
   *
   * Because every draw is counter-based (WalkAlgebra.genContinues /
   * genNextIndex keyed by walkId/round/wave/step) and the array walker's hop
@@ -44,14 +54,53 @@ object IterativeWalker {
   /** Hops between two live-count probes (see [[drainHops]]). */
   private val LiveCheckEvery = 4
 
-  /** What the shared hop drain reads of a walker's state row. */
-  sealed trait Hop {
-    def walkId: Long
-    def start: Long
-    def path: Array[Long]
-    def alive: Boolean
-  }
+  /** Live walks above which a wave of generation or repair advances them
+    * by hop joins before the resolver drain finishes the rest. Measured
+    * on a 4-core host at `local[4]` (4 GB driver heap), on random
+    * degree-10 graphs; each cell is wall ms.
+    *
+    * Repair: one wave in which every walk grafts at one hub
+    * (IterativeRepairSpec's shape); repairAll plus the collect of the
+    * changed ids, the drain alone against hop joins down to a quarter of
+    * the live count followed by the drain:
+    *
+    * {{{
+    * live   200k edges: drain / hops   2M edges: drain / hops
+    * 1k     8,301 (cold) / 12,269      8,645-13,602 / 17,083-19,274
+    * 2k     2,597 / 12,441             -
+    * 8k     2,132 / 8,011              16,469-17,509 / 16,471-16,937
+    * 32k    1,814 / 6,706              10,500-12,536 / 25,155-26,665
+    * }}}
+    *
+    * Generation: one promotion wave of 10 walks per start node on the
+    * 200k-edge graph; generateAll plus a count of the walks, 2 reps: the
+    * drain alone, hop joins down to 32k followed by the drain, and hop
+    * joins to the end. Below 32k the middle run never hops, so it is one
+    * more drain run, counted in the drain's range:
+    *
+    * {{{
+    * live   drain         hops to 32k + drain   hops to the end
+    * 8k     2,362-2,875   -                     170,926-185,348
+    * 32k    2,567-3,142   -                     198,127-198,435
+    * 128k   1,906-2,232   24,882-25,337         236,717-240,035
+    * }}}
+    *
+    * The drain won or tied at every count measured, for both kinds of
+    * wave. Its cost is set by the neighborhood it resolves (nearly the
+    * whole graph here), while a hop costs one round of Spark jobs. So
+    * generation's crossover lies above 128k live walks on this graph, and
+    * the one threshold stays at the largest count where both kinds were
+    * measured. Above it, the hop loop also keeps a mass wave's
+    * neighborhoods off the driver: BASELINE.md records a 25k-author wave
+    * at 1M pages repaired in 14.6 s that way, against 30 s by the drain
+    * alone.
+    */
+  private[graft] val TailThreshold = 32000L
 
+  /** A generation walk in flight: `path` ends at `cur`, and `alive` says
+    * whether it takes its step `step` (so a walk that reached
+    * maxWalkSteps is not alive).
+    */
   case class St(
       walkId: Long,
       start: Long,
@@ -59,7 +108,7 @@ object IterativeWalker {
       cur: Long,
       step: Long,
       alive: Boolean
-  ) extends Hop
+  )
 
   /** Adjacency table from an edges Dataset: (src, follows sorted asc) —
     * sorted order is part of the walk spec.
@@ -69,16 +118,23 @@ object IterativeWalker {
     edges.groupByKey(_._1).mapGroups((src, it) => (src, it.map(_._2).toArray.sorted))
   }
 
-  /** Initial in-flight segments: `walksPerNode` per start node, walkIds
-    * nodeId*walksPerNode+i as everywhere else. The flatMap multiplies each
-    * input row by walksPerNode IN PLACE — a single-source call (the
-    * distributed personalized rank's shape) would otherwise emit ALL
-    * numWalks segments from one input row into ONE partition and push the
-    * whole hop-1 map through one task, so the fan-out is immediately
-    * repartitioned by walkId (tiny length-1 rows; one cheap exchange).
-    * Residual hop-1 JOIN-key skew (every segment carries cur = source) is
-    * AQE's skew-split domain; the partition spread here is pinned by
-    * PersonalizedSpec's task-level assertion.
+  /** The `walksPerNode` walks of start node `node` before their first
+    * step; walkIds are nodeId*walksPerNode+i as everywhere else.
+    */
+  private def startWalks(p: CrawlParams)(node: Long): Iterator[St] =
+    (0 until p.walksPerNode).iterator.map { i =>
+      St(node * p.walksPerNode + i, node, Array(node), node, 0L, alive = p.maxWalkSteps > 0)
+    }
+
+  /** Initial in-flight segments: `walksPerNode` per start node. The
+    * flatMap multiplies each input row by walksPerNode IN PLACE — a
+    * single-source call (the distributed personalized rank's shape) would
+    * otherwise emit ALL numWalks segments from one input row into ONE
+    * partition and push the whole hop-1 map through one task, so the
+    * fan-out is immediately repartitioned by walkId (tiny length-1 rows;
+    * one cheap exchange). Residual hop-1 JOIN-key skew (every segment
+    * carries cur = source) is AQE's skew-split domain; the partition spread
+    * here is pinned by PersonalizedSpec's task-level assertion.
     */
   private[graft] def initialSegments(
       spark: SparkSession,
@@ -86,56 +142,61 @@ object IterativeWalker {
       params: CrawlParams
   ): Dataset[St] = {
     import spark.implicits._
-    val p = params
     starts
-      .flatMap { node =>
-        (0 until p.walksPerNode).iterator.map { i =>
-          St(node * p.walksPerNode + i, node, Array(node), node, 0L, alive = true)
-        }
-      }
+      .flatMap(startWalks(params))
       .repartition(spark.sparkContext.defaultParallelism, col("walkId"))
   }
+
+  /** One generation step of `s`, `follows` being its node's follow list. */
+  private def genHop(p: CrawlParams, round: Long, wave: Int)(s: St, follows: Array[Long]): St =
+    WalkAlgebra.genStep(p, s.walkId, round, wave, s.step, s.path, follows) match {
+      case Some(path) => St(s.walkId, s.start, path, path.last, s.step + 1, alive = s.step + 1 < p.maxWalkSteps)
+      case None       => s.copy(step = s.step + 1, alive = false)
+    }
 
   /** One hop's state, kept: a local checkpoint every [[CheckpointEvery]]
     * hops, a plain persist otherwise. Returns the kept state and its
     * release handle.
     */
-  private[walks] def keepHop[S](stepped: Dataset[S], iter: Int): (Dataset[S], () => Unit) =
+  private def keepHop[S](stepped: Dataset[S], iter: Int): (Dataset[S], () => Unit) =
     if (iter % CheckpointEvery == CheckpointEvery - 1) CacheOps.checkpointReleasable(stepped)
     else { val n = stepped.persist(); (n, () => { n.unpersist(); () }) }
 
-  /** The hop drain both walkers share: `hop` advances the live rows one
-    * hop against the hop side (`hopTable`, broadcast when it carries at
-    * most [[BroadcastMaxEdges]] edges) until no walk is alive or
-    * `maxSteps` hops ran. `edges` is evaluated once, after the initial
-    * state is materialized. Returns the finished walks, materialized in ONE
+  /** The hop loop every walker shares: `hop` advances the rows for which
+    * `alive` holds one hop against the hop side (`hopTable`, broadcast when
+    * it carries at most [[BroadcastMaxEdges]] edges) while more than
+    * `stopAt` of them are live; `live` is the live count of `init`. The
+    * live count is probed every [[LiveCheckEvery]] hops, so the loop may
+    * overshoot `stopAt`; counter-based draws make that harmless. `edges`
+    * is evaluated once, before the first hop. `init` stays the caller's to
+    * release; it is read twice by the first hop, so it should be cached or
+    * cheap. Returns `out` of every row, settled or not, materialized in ONE
     * checkpoint, plus its release handle; every intermediate cache and
     * `hopTable` are released inside.
     */
-  private def drainHops[S <: Hop](
+  private def drainHops[S, O](
       spark: SparkSession,
       init: Dataset[S],
+      live: Long,
+      stopAt: Long,
       hopTable: DataFrame,
-      edges: => Long,
-      maxSteps: Int
-  )(hop: (Dataset[S], DataFrame) => Dataset[S]): (Dataset[WalkRow], () => Unit) = {
-    import spark.implicits._
-    var state = init.persist()
-    var stateRelease: () => Unit = { val s = state; () => { s.unpersist(); () } }
-    var live = state.filter(_.alive).count()
+      edges: => Long
+  )(alive: S => Boolean, hop: (Dataset[S], DataFrame) => Dataset[S], out: Dataset[S] => Dataset[O]): (Dataset[O], () => Unit) = {
     // size-aware join strategy (guide §3.1: broadcast the side that fits):
     // a broadcast graph side lets the walk side flow with NO exchange, and
     // the broadcast build is shared across the hops of one probe action
     // (exchange reuse). Walks are identical either way (join strategy, not
     // join semantics)
     val hopSide = if (edges <= BroadcastMaxEdges) broadcast(hopTable) else hopTable
+    var state = init
+    var n = live
     val doneParts = mutable.ArrayBuffer.empty[Dataset[S]]
     // release handles for every cache the drain takes — all deferred to the
     // final union (Dataset.unpersist cannot release local checkpoints,
     // CacheOps scaladoc), then released deterministically before returning
     val releases = mutable.ArrayBuffer.empty[() => Unit]
     var iter = 0
-    while (live > 0 && iter < maxSteps) {
+    while (n > stopAt) {
       // settled walks accumulate as LAZY filters over each hop's persisted
       // state — zero extra jobs per hop (the r5 shape eagerly checkpointed
       // each slice: one full job dispatch per hop just to copy settled rows
@@ -143,47 +204,145 @@ object IterativeWalker {
       // that superseded state caches stay alive until the final union
       // materializes — bounded by Σ|state_k| ≈ total visits, the same order
       // as the drain's output, and MEMORY_AND_DISK spills past that.
-      doneParts += state.filter(!_.alive)
-      releases += stateRelease
-      val (next, nextRelease) = keepHop(hop(state.filter(_.alive), hopSide), iter)
+      doneParts += state.filter((s: S) => !alive(s))
+      val (next, nextRelease) = keepHop(hop(state.filter(alive), hopSide), iter)
+      releases += nextRelease
       state = next
-      stateRelease = nextRelease
       iter += 1
-      // the live count is only the early-exit probe — every probe is a full
+      // the live count is only the exit probe — every probe is a full
       // job dispatch, so probing every hop made the drain's cost the JOB
       // COUNT at fixture scale (r6 profiling: 73 sub-0.25 s jobs on the
       // 12-hop single-source rank). Probe every LiveCheckEvery hops instead:
       // un-probed hops chain lazily and the next probe materializes them in
       // one submission. Walks are identical either way (counter-based draws;
       // extra hops past global death are empty-join no-ops).
-      if (iter % LiveCheckEvery == 0 || iter >= maxSteps)
-        live = next.filter(_.alive).count()
+      if (iter % LiveCheckEvery == 0) n = next.filter(alive).count()
     }
     // every surviving slice is checkpointed or cache-materialized by the
     // last probe, so the hop table can be released here
     hopTable.unpersist()
     doneParts += state
-    val (out, outRelease) = CacheOps.checkpointReleasable(
-      doneParts
-        .reduce(_ union _)
-        // the union carries one slice per drain iteration (tens of slices ×
-        // shuffle partitions each) — coalesce so every downstream job over
-        // the generated walks schedules O(cores) tasks, not O(hops × cores)
-        .coalesce(spark.sparkContext.defaultParallelism)
-        .map(s => WalkRow(s.walkId, s.start, s.path))
+    val (o, oRelease) = CacheOps.checkpointReleasable(
+      out(
+        doneParts
+          .reduce(_ union _)
+          // the union carries one slice per hop (tens of slices × shuffle
+          // partitions each) — coalesce so every downstream job over the
+          // rows schedules O(cores) tasks, not O(hops × cores)
+          .coalesce(spark.sparkContext.defaultParallelism)
+      )
     )
     // every per-hop slice and superseded state cache is released NOW, not
     // at JVM GC's leisure
     releases.foreach(_())
-    stateRelease()
-    (out, outRelease)
+    (o, oRelease)
   }
 
-  /** Generate `walksPerNode` walks per start node. `starts` carries
-    * (nodeId); walkIds are nodeId*walksPerNode+i as everywhere else.
-    * Returns the walks materialized in ONE cache plus its release handle —
-    * every intermediate drain cache was already released inside.
-    * Long-lived callers (the round loop) release the output
+  /** [[drainHops]] over `adjacency`'s (src, follows) rows: each hop joins
+    * the live rows' `cur` column with the hop table and applies `step` to
+    * a row and its node's follow list (empty at a node without a row).
+    */
+  private def arrayDrainHops[S <: Product: TypeTag, O](
+      spark: SparkSession,
+      init: Dataset[S],
+      live: Long,
+      stopAt: Long,
+      adjacency: Dataset[(Long, Array[Long])]
+  )(alive: S => Boolean, step: (S, Array[Long]) => S, out: Dataset[S] => Dataset[O]): (Dataset[O], () => Unit) = {
+    import spark.implicits._
+    // the adjacency aggregation (edges → groupByKey → sort) is hop-invariant:
+    // materialize it ONCE for the whole drain instead of re-running the
+    // full-graph shuffle on every hop. The explicit repartition by the join
+    // key makes the CACHED partitioning hash(src), which every per-hop
+    // equi-join reuses — without it each hop re-exchanges the full
+    // adjacency (cached rows, but a full shuffle per hop: the dominant
+    // per-hop cost at 10^10 edges)
+    val adjDF = adjacency.toDF("src", "follows").repartition(col("src")).persist()
+    // the gate's edge count materializes the cache in the same single job
+    // a row count would
+    drainHops(spark, init, live, stopAt, adjDF, adjDF.agg(coalesce(sum(size(col("follows"))), lit(0L))).as[Long].collect().head)(
+      alive,
+      (liveDS, adjSide) =>
+        liveDS
+          .joinWith(adjSide, liveDS("cur") === adjSide("src"), "left_outer")
+          .map { case (s, adjRow) =>
+            step(s, if (adjRow == null) Array.emptyLongArray else adjRow.getAs[scala.collection.Seq[Long]]("follows").toArray)
+          },
+      out
+    )
+  }
+
+  /** The wave rule of the crawl's walk generation and repair: while more
+    * than [[TailThreshold]] of the state rows `rows` are live (`live` of
+    * them, known to the caller), they hop by joins against the resolver's
+    * edges table, each hop applying `step` to a live row (`alive`) and the
+    * follow list of its `cur` node; then the resolver is seeded with the
+    * live rows' nodes — or, for a wave that never hopped, by `seed` — and
+    * `Resolver.drain` runs `finish` on every row. Returns the drain's
+    * outputs, their count and their release; `rows` stays the caller's to
+    * release once the drain has returned.
+    */
+  private[walks] def hopThenDrain[S <: Product: TypeTag, O: TypeTag](
+      spark: SparkSession,
+      resolver: SubgraphWalks.Resolver,
+      rows: Dataset[S],
+      live: Long,
+      alive: S => Boolean,
+      step: (S, Array[Long]) => S,
+      seed: => Unit
+  )(finish: (WalkAlgebra.Adjacency, S) => Seq[O]): (Dataset[O], Long, () => Unit) = {
+    import spark.implicits._
+    val (toDrain, release) =
+      if (live <= TailThreshold) { seed; (rows, () => ()) }
+      else {
+        // the hop rows land in one checkpoint: the drain then plans a flat
+        // input of O(cores) partitions, not the hops' lineage over
+        // O(hops × cores) partitions (a lazy union of the hop plans made
+        // the drain re-plan that lineage every attempt)
+        val adjacency = adjacencyTable(spark, resolver.edges().select("src", "dst").as[(Long, Long)])
+        val (tail, tailRelease) = arrayDrainHops(spark, rows, live, TailThreshold, adjacency)(alive, step, identity)
+        resolver.resolve(tail.filter(alive).select("cur").distinct().as[Long].collect().toIndexedSeq)
+        (tail, tailRelease)
+      }
+    val drained = resolver.drain(toDrain)(finish)
+    // the drain materialized its attempt caches: nothing reads its input
+    // any more
+    release()
+    drained
+  }
+
+  /** The crawl's promotion-wave generation: `walksPerNode` walks per start
+    * node against the resolver's edges table, by [[hopThenDrain]] — the
+    * walk count is known on the driver, so picking the branch costs no
+    * job. A wave that never hops seeds the resolver with the start nodes
+    * (+ one speculative hop). Returns the walks, lazy over the drain's
+    * attempt caches, and the release of those caches.
+    */
+  def generateAll(
+      spark: SparkSession,
+      startIds: Seq[Long],
+      resolver: SubgraphWalks.Resolver,
+      round: Long,
+      wave: Int,
+      params: CrawlParams
+  ): (Dataset[WalkRow], () => Unit) = {
+    import spark.implicits._
+    val rows = spark.createDataset(startIds).flatMap(startWalks(params))
+    val live = startIds.size.toLong * params.walksPerNode
+    val (walks, _, release) =
+      hopThenDrain(spark, resolver, rows, live, (_: St).alive, genHop(params, round, wave), resolver.resolve(startIds)) {
+        (adj, s: St) =>
+          val path = if (s.alive) WalkAlgebra.finishWalk(adj, s.path, s.walkId, s.step, round, wave, params) else s.path
+          Seq(WalkRow(s.walkId, s.start, path))
+      }
+    (walks, release)
+  }
+
+  /** Generate `walksPerNode` walks per start node, hopping every walk to
+    * its end. `starts` carries (nodeId); walkIds are nodeId*walksPerNode+i
+    * as everywhere else. Returns the walks materialized in ONE cache plus
+    * its release handle — every intermediate drain cache was already
+    * released inside. Long-lived callers release the output
     * deterministically once it is folded into their own state.
     */
   def generateReleasable(
@@ -195,29 +354,14 @@ object IterativeWalker {
       params: CrawlParams
   ): (Dataset[WalkRow], () => Unit) = {
     import spark.implicits._
-    val p = params
-    // the adjacency aggregation (edges → groupByKey → sort) is hop-invariant:
-    // materialize it ONCE for the whole drain instead of re-running the
-    // full-graph shuffle on every hop (IterativeRepair does the same). The
-    // explicit repartition by the join key makes the CACHED partitioning
-    // hash(src), which every per-hop equi-join reuses — without it each hop
-    // re-exchanges the full adjacency (cached rows, but a full shuffle per
-    // hop: the dominant per-hop cost at 10^10 edges)
-    val adjDF = adjacency.toDF("src", "follows").repartition(col("src")).persist()
-    // the gate's edge count materializes the cache in the same single job
-    // a row count would
-    val edges = adjDF.agg(coalesce(sum(size(col("follows"))), lit(0L))).as[Long]
-    drainHops(spark, initialSegments(spark, starts, p), adjDF, edges.collect().head, params.maxWalkSteps) { (liveDS, adjSide) =>
-      liveDS
-        .joinWith(adjSide, liveDS("cur") === adjSide("src"), "left_outer")
-        .map { case (s, adjRow) =>
-          def follows = if (adjRow == null) Array.emptyLongArray else adjRow.getAs[scala.collection.Seq[Long]]("follows").toArray
-          WalkAlgebra.genStep(p, s.walkId, round, wave, s.step, s.path, follows) match {
-            case Some(path) => St(s.walkId, s.start, path, path.last, s.step + 1, alive = true)
-            case None       => s.copy(step = s.step + 1, alive = false)
-          }
-        }
-    }
+    val init = initialSegments(spark, starts, params).persist()
+    val walks = arrayDrainHops(spark, init, init.filter(_.alive).count(), 0L, adjacency)(
+      _.alive,
+      genHop(params, round, wave),
+      _.map(s => WalkRow(s.walkId, s.start, s.path))
+    )
+    init.unpersist()
+    walks
   }
 
   /** Exploded-edge walk state: carries the CURRENT node's out-degree (so a
@@ -233,7 +377,7 @@ object IterativeWalker {
       step: Long,
       alive: Boolean,
       nextIdx: Int
-  ) extends Hop
+  )
 
   /** Mega-hub-safe walk generation over EXPLODED edges — byte-identical
     * output to [[generateReleasable]] (IterativeWalkerSpec asserts it),
@@ -306,25 +450,23 @@ object IterativeWalker {
     val init = startDegs
       .flatMap { case (node, deg) =>
         (0 until p.walksPerNode).iterator.map { i =>
-          StE(node * p.walksPerNode + i, node, Array(node), node, deg, 0L, alive = true, nextIdx = -1)
+          StE(node * p.walksPerNode + i, node, Array(node), node, deg, 0L, alive = p.maxWalkSteps > 0, nextIdx = -1)
         }
       }
       // same single-source fan-out spread as initialSegments
       .repartition(spark.sparkContext.defaultParallelism, col("walkId"))
-    // the initial live count has materialized adjDF: materialize edgesIdx
-    // from that cache before dropping it; the exploded table is one row
-    // per edge, so its row count is the gate's edge count
+      .persist()
+    // the initial live count materializes adjDF: materialize edgesIdx from
+    // that cache before dropping it; the exploded table is one row per
+    // edge, so its row count is the gate's edge count
+    val live = init.filter(_.alive).count()
     def edges: Long = { val n = edgesIdx.count(); adjDF.unpersist(); n }
-    drainHops(spark, init, edgesIdx, edges, params.maxWalkSteps) { (liveDS, edgeSide) =>
+    val hop = (liveDS: Dataset[StE], edgeSide: DataFrame) => {
       // decide locally: stop draw and next-edge index need only curDeg
       val decided = liveDS.map { s =>
-        if (!WalkAlgebra.genContinues(p, s.walkId, round, wave, s.step)) {
+        if (!WalkAlgebra.genContinues(p, s.walkId, round, wave, s.step) || s.curDeg == 0)
           s.copy(step = s.step + 1, alive = false, nextIdx = -1)
-        } else if (s.curDeg == 0) {
-          s.copy(step = s.step + 1, alive = false, nextIdx = -1)
-        } else {
-          s.copy(nextIdx = WalkAlgebra.genNextIndex(p, s.walkId, round, wave, s.step, s.curDeg))
-        }
+        else s.copy(nextIdx = WalkAlgebra.genNextIndex(p, s.walkId, round, wave, s.step, s.curDeg))
       }
       // rows settled by the decide map carry nextIdx = -1 and match nothing
       // (idx >= 0), passing through the left join untouched; every live row
@@ -340,9 +482,12 @@ object IterativeWalker {
           else {
             val dst = e.getAs[Long]("dst")
             if (s.path.contains(dst)) s.copy(step = s.step + 1, alive = false, nextIdx = -1)
-            else StE(s.walkId, s.start, s.path :+ dst, dst, e.getAs[Int]("dstDeg"), s.step + 1, alive = true, nextIdx = -1)
+            else StE(s.walkId, s.start, s.path :+ dst, dst, e.getAs[Int]("dstDeg"), s.step + 1, alive = s.step + 1 < p.maxWalkSteps, nextIdx = -1)
           }
         }
     }
+    val walks = drainHops(spark, init, live, 0L, edgesIdx, edges)(_.alive, hop, _.map(s => WalkRow(s.walkId, s.start, s.path)))
+    init.unpersist()
+    walks
   }
 }

@@ -20,6 +20,11 @@ import graft.core.{CrawlParams, Rng, WalkRow}
   */
 object Personalized {
 
+  /** Source out-degree from which [[personalizedDistributed]] runs the
+    * exploded-edge walker instead of the array walker.
+    */
+  private val ExplodedMinDegree = 8192
+
   /** Deterministic analog of WalksVisitingAny
     * (/root/reference/pkg/regraph/walks.go:155-208): up to `limit` walks
     * visiting any of `nodes`, split evenly (limit/len(nodes) per node,
@@ -179,8 +184,7 @@ object Personalized {
       edges: org.apache.spark.sql.DataFrame,
       source: Long,
       numWalks: Int,
-      params: CrawlParams,
-      explodedMinDegree: Int = 8192
+      params: CrawlParams
   ): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     val adjDS = IterativeWalker.adjacencyTable(
@@ -204,7 +208,7 @@ object Personalized {
     val srcDeg = edges.filter(col("src") === source).count()
     val wave = graft.spec.SequentialSpec.GenWave
     val (segs, relSegs) =
-      if (srcDeg >= explodedMinDegree)
+      if (srcDeg >= ExplodedMinDegree)
         IterativeWalker.generateExplodedReleasable(spark, Seq(source).toDS(), adjDS, 0L, wave, p)
       else IterativeWalker.generateReleasable(spark, Seq(source).toDS(), adjDS, 0L, wave, p)
     val counts = segs

@@ -7,17 +7,14 @@ import org.apache.spark.sql.{functions, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 
-import graft.core.{CrawlParams, WalkRow}
-
 /** Walk repair / generation against a DISTRIBUTED adjacency (the edges
   * table), with on-demand sub-adjacency resolution.
   *
   * The round loop must never hold the crawled graph on the driver (at a
   * 10^10-URL frontier the crawled subgraph is billions of edges). But walk
   * repair (WalkAlgebra's repair state machine) and generation need random
-  * access to the follow lists of whichever nodes a segment happens to
-  * visit — an
-  * unpredictable, *tiny* subset: O(changed walks × segment length) per wave,
+  * access to the follow lists of whichever nodes a walk happens to visit —
+  * an unpredictable, *tiny* subset: O(walks × segment length) per wave,
   * independent of graph size.
   *
   * So adjacency is resolved lazily: attempts run with a bounded broadcast
@@ -30,15 +27,12 @@ import graft.core.{CrawlParams, WalkRow}
   * full-adjacency run, which CrawlEquivalenceSpec asserts against the
   * sequential spec.
   *
-  * That miss-retry loop exists once, as [[Resolver.drain]]: generateAll
-  * and the walk repair (IterativeRepair.repairAll, which drains a small
-  * wave's segments directly and a big wave's after its hop joins) each
-  * supply only their per-item body and their own seeding `resolve` call.
-  *
-  * Driver memory is O(nodes actually visited this wave); per-attempt the
-  * map is broadcast once. Beyond `RoundDriver.broadcastMaxEdges` the
-  * promotion path switches to IterativeWalker (join-per-hop, no driver
-  * map at all); repair pools stay bounded by the per-wave delta set.
+  * That miss-retry loop exists once, as [[Resolver.drain]]. Every wave of
+  * walk generation or repair ends in it (IterativeWalker.hopThenDrain: a
+  * wave with more than IterativeWalker.TailThreshold live walks first hops
+  * by joins, with no driver map at all). Driver memory is O(nodes visited
+  * this wave), bounded by the resolver's expansion caps; per attempt the
+  * map is broadcast once.
   *
   * Reference semantics: the Go engine repairs walks one event at a time
   * against its in-memory graph (/root/reference/pkg/pipe/engine/engine.go:
@@ -68,7 +62,7 @@ object SubgraphWalks {
     * array means "known dangling". Scope a Resolver to ONE round: its
     * memory is O(nodes touched that round), never O(crawled graph).
     */
-  final class Resolver(spark: SparkSession, edges: () => DataFrame) {
+  final class Resolver(spark: SparkSession, val edges: () => DataFrame) {
     private val known = mutable.Map.empty[Long, Array[Long]]
 
     def snapshot: Map[Long, Array[Long]] = known.toMap
@@ -158,8 +152,8 @@ object SubgraphWalks {
       * count, and the release of those caches: call it once every consumer
       * of the outputs has materialized. Those caches are materialized when
       * drain returns, so the caches `items` was read from may be released
-      * then. Items: start nodes (generateAll) or scanned repair states
-      * whose segments are finished here (IterativeRepair.repairAll).
+      * then. Items: the state rows of a wave, whose walks are finished
+      * here (IterativeWalker.hopThenDrain).
       */
     def drain[I: TypeTag, O: TypeTag](items: Dataset[I])(body: (WalkAlgebra.Adjacency, I) => Seq[O]): (Dataset[O], Long, () => Unit) = {
       import spark.implicits._
@@ -194,32 +188,5 @@ object SubgraphWalks {
       }
       (parts.reduce(_ union _), produced, () => caches.foreach(_.unpersist()))
     }
-  }
-
-  /** Generate walksPerNode walks per start node against distributed
-    * adjacency (same miss-retry drain; walkIds = node*walksPerNode+i as
-    * everywhere else). For promotion batches small enough that the touched
-    * neighborhood fits a broadcast; IterativeWalker is the unbounded path.
-    * Returns the walks, lazy over the drain's attempt caches, and the
-    * release of those caches.
-    */
-  def generateAll(
-      spark: SparkSession,
-      startIds: Seq[Long],
-      resolver: Resolver,
-      round: Long,
-      wave: Int,
-      params: CrawlParams
-  ): (Dataset[WalkRow], () => Unit) = {
-    import spark.implicits._
-    resolver.resolve(startIds)
-    val (p, r, wv) = (params, round, wave)
-    val (walks, _, release) = resolver.drain(spark.createDataset(startIds)) { (adj, node: Long) =>
-      (0 until p.walksPerNode).map { i =>
-        val wid = node * p.walksPerNode + i
-        WalkRow(wid, node, WalkAlgebra.generateWalk(adj, node, wid, r, wv, p))
-      }
-    }
-    (walks, release)
   }
 }

@@ -118,9 +118,22 @@ object WalkAlgebra extends Serializable {
       round: Long,
       wave: Int,
       params: CrawlParams
+  ): Array[Long] = finishWalk(adj, Array(start), walkId, 0L, round, wave, params)
+
+  /** Run walk `walkId`, standing at the last node of `path` before its
+    * step `step0`, to its end against `adj`.
+    */
+  def finishWalk(
+      adj: Adjacency,
+      path0: Array[Long],
+      walkId: Long,
+      step0: Long,
+      round: Long,
+      wave: Int,
+      params: CrawlParams
   ): Array[Long] = {
-    var path = Array(start)
-    var step = 0L
+    var path = path0
+    var step = step0
     var walking = true
     while (walking && step < params.maxWalkSteps) {
       genStep(params, walkId, round, wave, step, path, adj(path.last)) match {

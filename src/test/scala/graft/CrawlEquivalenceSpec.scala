@@ -9,6 +9,7 @@ import graft.core.{CrawlParams, Page}
 import graft.fixtures.PagesGen
 import graft.round.{CrawlEngine, ParquetTableIO, RoundDriver}
 import graft.spec.SequentialSpec
+import graft.walks.IterativeWalker
 
 /** THE north-rule equivalence gate (SURVEY.md §7.4 item 1): the distributed
   * Spark engine must reproduce the sequential executable spec BYTE-FOR-BYTE
@@ -50,7 +51,6 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
   def runEngine(
       maxRounds: Int,
       dir: String,
-      broadcastMaxEdges: Long = 10000000L,
       compactOnExit: Boolean = true,
       robots: Seq[(String, String)] = Nil,
       runParams: graft.core.CrawlParams = params,
@@ -74,7 +74,6 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
         spark,
         io,
         runParams,
-        broadcastMaxEdges,
         compactOnExit = compactOnExit,
         robots = robotsDF,
         maxDriverBloomUrls = maxDriverBloomUrls
@@ -209,43 +208,23 @@ class CrawlEquivalenceSpec extends AnyFunSuite {
     assert(err.getMessage.contains("walk_params mismatch"))
   }
 
-  test("forced-iterative walk generation yields the identical crawl") {
-    // broadcastMaxEdges=0 forces the join-based scale path for every
-    // promotion — final state must be byte-identical to the spec
-    val dir = Files.createTempDirectory("crawl-iter").toString
-    runEngine(4, dir, broadcastMaxEdges = 0L)
-    val (nodes, _, walks, seen) = engineState(dir)
-    val specNodes = specResult.nodes.map { case (id, st) =>
-      id -> ((st.url, st.status, st.addedRound, st.promotedRound, st.demotedRound))
-    }
-    // spec ran `rounds` rounds; rebuild a 4-round spec run for comparison
-    val pv = pageRows.map(p => SequentialSpec.PageV(p.url, p.warc_ts.getTime / 1000, p.html, p.text))
-    val spec4 = SequentialSpec.run(pv, seeds, params, 4)
-    assert(seen === spec4.seen)
-    assert(nodes === spec4.nodes.map { case (id, st) =>
-      id -> ((st.url, st.status, st.addedRound, st.promotedRound, st.demotedRound))
-    })
-    assert(walks === spec4.walks.map { case (k, v) => k -> v.toSeq })
-    val _ = specNodes
-  }
-
   test("ALL scale paths at once yield the identical crawl (the 10^10 deployment configuration)") {
     // Every scale path forced SIMULTANEOUSLY: join-per-hop walk generation
-    // (broadcastMaxEdges=0), sharded distributed seen-bloom
+    // (enough walks per node that a promotion wave holds more than
+    // TailThreshold walks), sharded distributed seen-bloom
     // (maxDriverBloomUrls=0), and bucketed state + extracted fetch store
     // (BucketedTableIO, which also exercises the InSet fetch pruning) —
     // final state must still be byte-identical to the sequential spec.
     val dir = Files.createTempDirectory("crawl-allpaths").toString
-    runEngine(
-      4,
-      dir,
-      broadcastMaxEdges = 0L,
-      maxDriverBloomUrls = 0L,
-      bucketedIO = true
+    val hopParams = params.copy(walksPerNode = 1200)
+    val engine = runEngine(4, dir, runParams = hopParams, maxDriverBloomUrls = 0L, bucketedIO = true)
+    assert(
+      engine.traces.exists(_.promoted * hopParams.walksPerNode > IterativeWalker.TailThreshold),
+      s"no promotion wave crossed TailThreshold: ${engine.traces.map(_.promoted)}"
     )
     val (nodes, adjacency, walks, seen) = engineState(dir)
     val pv = pageRows.map(p => SequentialSpec.PageV(p.url, p.warc_ts.getTime / 1000, p.html, p.text))
-    val spec4 = SequentialSpec.run(pv, seeds, params, 4)
+    val spec4 = SequentialSpec.run(pv, seeds, hopParams, 4)
     assert(seen === spec4.seen)
     assert(nodes === spec4.nodes.map { case (id, st) =>
       id -> ((st.url, st.status, st.addedRound, st.promotedRound, st.demotedRound))

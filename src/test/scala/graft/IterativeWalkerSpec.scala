@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
 
 import graft.core.{CrawlParams, Rng}
-import graft.walks.{IterativeWalker, WalkAlgebra}
+import graft.walks.{IterativeWalker, SubgraphWalks, WalkAlgebra}
 
 /** The join-based scale-path walker must produce EXACTLY the same walks as
   * the broadcast/pure generator — same counter-based draws, different
@@ -120,5 +120,51 @@ class IterativeWalkerSpec extends AnyFunSuite {
       spark.listenerManager.unregister(listener)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
     }
+  }
+
+  test("a generation wave above the tail threshold hops by joins, then drains, walk by walk as generateWalk") {
+    import spark.implicits._
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    // 40 starts × 1,000 walks = 40,000 live walks on a random graph of
+    // 2,000 nodes with out-degree 0..9
+    val p = CrawlParams(alpha = 0.85, walksPerNode = 1000)
+    val n = 2000L
+    val edges = (0L until n).flatMap { src =>
+      (0 until Rng.uniformIndex(11L, src, 0, 0, 10)).map(j => (src, Math.floorMod(Rng.hash(11L, src, 1, j), n)))
+    }.distinct.filter(e => e._1 != e._2)
+    val starts = (0L until n by 50).toSeq
+    assert(starts.size.toLong * p.walksPerNode > IterativeWalker.TailThreshold)
+    val adjMap = edges.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toArray.sorted }
+    val adjF: WalkAlgebra.Adjacency = v => adjMap.getOrElse(v, Array.empty)
+    val expected = starts.flatMap { node =>
+      (0 until p.walksPerNode).map { i =>
+        val wid = node * p.walksPerNode + i
+        wid -> WalkAlgebra.generateWalk(adjF, node, wid, 3L, 15, p).toSeq
+      }
+    }.toMap
+
+    // a hop is the one left outer join of a wave: the resolver's fetches
+    // are inner joins
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val edgesDF = spark.createDataset(edges).toDF("src", "dst")
+      val resolver = new SubgraphWalks.Resolver(spark, () => edgesDF)
+      val (walks, release) = IterativeWalker.generateAll(spark, starts, resolver, 3L, 15, p)
+      val got = walks.collect().map(w => w.walkId -> w.path.toSeq).toMap
+      release()
+      assert(got === expected)
+      spark.range(1).toDF("generation_wave_marker").collect()
+      eventually(timeout(Span(30, Seconds))) {
+        assert(plans.stream().anyMatch(_.contains("generation_wave_marker")))
+      }
+      assert(plans.stream().anyMatch(_.contains("LeftOuter")), "no hop join ran")
+      val left = spark.sparkContext.getPersistentRDDs
+      assert(left.isEmpty, s"the wave left ${left.size} caches: ${left.values.mkString("; ")}")
+    } finally spark.listenerManager.unregister(listener)
   }
 }

@@ -120,14 +120,26 @@ class PersonalizedSpec extends AnyFunSuite {
         .toSeq
     val r1 = visits()
     assert(r1 === visits(), "distributed personalized rank must be deterministic in (seed, source, numWalks)")
-    // forcing the mega-hub (exploded-edge) walker through the degree gate
-    // must change the PLAN only — identical visit counts
-    val rExploded = Personalized
-      .personalizedDistributed(spark, edges2, 0L, 30000, p, explodedMinDegree = 0)
+    // a star source of degree 8,192 takes the mega-hub (exploded-edge)
+    // walker through the degree gate: the PLAN changes, not the answer —
+    // the visit counts equal the array walker's on the same graph
+    val star = (1L to 8192L).map(d => (0L, d)) ++ (1L until 8192L).map(d => (d, d + 1))
+    val rStar = Personalized
+      .personalizedDistributed(spark, star.toDF("src", "dst"), 0L, 20000, p)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)))
       .toSeq
-    assert(rExploded === r1, "exploded-walker path must be byte-identical through the gate")
+    val (arrayWalks, arrayRelease) = graft.walks.IterativeWalker.generateReleasable(
+      spark,
+      Seq(0L).toDS(),
+      graft.walks.IterativeWalker.adjacencyTable(spark, star.toDS()),
+      0L,
+      graft.spec.SequentialSpec.GenWave,
+      p.copy(walksPerNode = 20000)
+    )
+    val rArray = arrayWalks.collect().toSeq.flatMap(_.path).groupBy(identity).map { case (n, vs) => (n, vs.size.toLong) }
+    arrayRelease()
+    assert(rStar.toMap === rArray, "exploded-walker path must be byte-identical through the gate")
     val tot = r1.map(_._2).sum.toDouble
     val gotA = Array.tabulate(6)(i => r1.toMap.getOrElse(i.toLong, 0L) / tot)
     assert(l1(gotA, Array(0.54054, 0.22973, 0.22973, 0, 0, 0)) <= 0.02, s"acyclic2 got=${gotA.mkString(",")}")

@@ -59,18 +59,16 @@ class WalkerCacheSpec extends AnyFunSuite {
     assert(cachedCount == 0)
   }
 
-  // the default configuration runs the resolver paths (miss-retry drain);
-  // forced-iterative runs the iterative walker on every promotion — the
-  // drain whose per-hop checkpoints used to leak (a Tiny crawl's repair
-  // waves stay under IterativeRepair.TailThreshold, so its hop loop is
-  // pinned by IterativeRepairSpec instead); forced-sharded keeps the seen
-  // set as the checkpointed shard table
+  // the default configuration runs the resolver drain on every wave;
+  // hop-wave gives each node enough walks that a promotion wave holds more
+  // than IterativeWalker.TailThreshold walks and hops by joins first — the
+  // drain whose per-hop checkpoints used to leak; forced-sharded keeps the
+  // seen set as the checkpointed shard table
   Seq(
-    "default" -> ((s: SparkSession, io: TableIO, p: CrawlParams) => new RoundDriver(s, io, p)),
-    "forced-iterative" -> ((s: SparkSession, io: TableIO, p: CrawlParams) =>
-      new RoundDriver(s, io, p, broadcastMaxEdges = 0L)),
-    "forced-sharded" -> ((s: SparkSession, io: TableIO, p: CrawlParams) => new RoundDriver(s, io, p, maxDriverBloomUrls = 0L))
-  ).foreach { case (name, newDriver) =>
+    ("default", 10, (s: SparkSession, io: TableIO, p: CrawlParams) => new RoundDriver(s, io, p)),
+    ("hop-wave", 1200, (s: SparkSession, io: TableIO, p: CrawlParams) => new RoundDriver(s, io, p)),
+    ("forced-sharded", 10, (s: SparkSession, io: TableIO, p: CrawlParams) => new RoundDriver(s, io, p, maxDriverBloomUrls = 0L))
+  ).foreach { case (name, walksPerNode, newDriver) =>
     test(s"a $name crawl run leaves no cache behind") {
       import spark.implicits._
       clearAll()
@@ -78,7 +76,7 @@ class WalkerCacheSpec extends AnyFunSuite {
       val params = CrawlParams(
         seed = 42L,
         alpha = 0.85,
-        walksPerNode = 10,
+        walksPerNode = walksPerNode,
         batch = 20,
         hostBudget = 5,
         promotion = 0.1,
@@ -119,8 +117,13 @@ class WalkerCacheSpec extends AnyFunSuite {
       }
       val driver = newDriver(spark, io, params)
       driver.init(PagesGen.seedUrls(cfg, 3))
-      driver.run(extracted, 4)
+      val res = driver.run(extracted, 4)
       extracted.unpersist()
+      if (name == "hop-wave")
+        assert(
+          res.traces.exists(_.promoted * walksPerNode > IterativeWalker.TailThreshold),
+          s"no promotion wave crossed TailThreshold: ${res.traces.map(_.promoted)}"
+        )
       assert(shuffled.isEmpty, s"delta writes with a shuffle: ${shuffled.mkString("\n")}")
       // the last round's lineage rows count its walks, partition by partition
       val lineage = io.read(4L, "lineage").select("count").as[Long].collect()

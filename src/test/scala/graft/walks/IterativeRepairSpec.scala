@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{CrawlParams, Rng, WalkRow}
 
 /** The engine's walk repair on a wave big enough for its hop loop: more
-  * than [[IterativeRepair.TailThreshold]] walks graft a segment at one hub,
+  * than [[IterativeWalker.TailThreshold]] walks graft a segment at one hub,
   * so the segments advance by hop joins (past the first checkpointed hop)
   * before the resolver drain finishes the tail. The result must equal
   * WalkAlgebra.repairWalk against the full adjacency, walk by walk, and
@@ -23,7 +23,7 @@ class IterativeRepairSpec extends AnyFunSuite {
     // each pointing at three random targets or back at the hub
     val hub = 0L
     val targets = 10L until 2010L
-    val spokes = 10000L until (10000L + IterativeRepair.TailThreshold / 2)
+    val spokes = 10000L until (10000L + IterativeWalker.TailThreshold / 2)
     val targetEdges = targets.flatMap { t =>
       (0 until 3).map(j => (t, if (Rng.uniformIndex(5L, t, 0, j, 50) == 0) hub else targets(Rng.uniformIndex(5L, t, 1, j, targets.size))))
     }.distinct.filter(e => e._1 != e._2)
@@ -41,9 +41,9 @@ class IterativeRepairSpec extends AnyFunSuite {
     // the fixture keeps more than TailThreshold segments live past the
     // eighth hop, so the hop loop runs a checkpointed hop
     var states = walks.map(w => WalkAlgebra.startRepair(w.walkId, w.path, deltas, round, wave, p))
-    assert(states.count(_.segActive) > IterativeRepair.TailThreshold)
+    assert(states.count(_.segActive) > IterativeWalker.TailThreshold)
     var hops = 0
-    while (states.count(_.segActive) > IterativeRepair.TailThreshold) {
+    while (states.count(_.segActive) > IterativeWalker.TailThreshold) {
       states = states.map(s => if (s.segActive) WalkAlgebra.stepRepair(s, fullAdj(s.cur), deltas, round, wave, p) else s)
       hops += 1
     }
@@ -52,7 +52,7 @@ class IterativeRepairSpec extends AnyFunSuite {
     val edgesDF = spark.createDataset(edges).toDF("src", "dst")
     val resolver = new SubgraphWalks.Resolver(spark, () => edgesDF)
     val (changed, n, release) =
-      IterativeRepair.repairAll(spark, spark.createDataset(walks), edgesDF, resolver, deltas, round, wave, p)
+      IterativeRepair.repairAll(spark, spark.createDataset(walks), resolver, deltas, round, wave, p)
     val got = changed.collect().map { case (w, old) => w.walkId -> ((w.start, w.path.toSeq, old.toSeq)) }.toMap
     release()
 
